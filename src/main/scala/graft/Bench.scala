@@ -129,9 +129,15 @@ object Bench {
     // cross-round comparison.
     val loadedHostAtStart = loadStart > 1.0
     val loadedHost = loadAfterWait > 1.0
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a rep that throws is reported on stderr and never timed
+    def runOnce(name: String,
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop persisted blocks between queries/reps: keeps numbers
       // independent and the run free of accumulated cache pressure
@@ -139,21 +145,31 @@ object Bench {
       // Dataset refs don't accumulate across 117 queries × reps)
       graft.ops.SideCache.releaseAll()
       spark.catalog.clearCache()
-      dt
+      if (ok) Some(dt) else None
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // n reps, stopping at the first failure (None: the query failed)
+    def timedReps(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                  n: Int): Option[Seq[Double]] = {
+      val ts = Iterator.fill(n)(runOnce(name, fn)).takeWhile(_.isDefined).flatten.toSeq
+      if (ts.length == n) Some(ts) else None
+    }
+    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val base = (1 to reps).map(_ => runOnce(fn))
-      val times =
+      val times = timedReps(name, fn, reps).flatMap { base =>
         if ((loadedHost || base.max / base.min > spreadLimit) && maxReps > reps)
-          base ++ ((reps + 1) to maxReps).map(_ => runOnce(fn))
-        else base
-      val dt = times.min
-      val esc = if (times.length > base.length) "  [escalated]" else ""
-      System.err.println(f"[bench] $name%-22s $dt%8.2f s  (reps: ${times.map(t => f"$t%.2f").mkString(", ")})$esc")
-      (name, dt, times)
+          timedReps(name, fn, maxReps - reps).map(base ++ _)
+        else Some(base)
+      }
+      times.foreach { ts =>
+        val esc = if (ts.length > reps) "  [escalated]" else ""
+        System.err.println(f"[bench] $name%-22s ${ts.min}%8.2f s  (reps: ${ts.map(t => f"$t%.2f").mkString(", ")})$esc")
+      }
+      name -> times
     }
+    // failed queries are named, and left out of every timing field
+    val results = outcomes.collect { case (name, Some(ts)) => (name, ts.min, ts) }
+    val failedNames = outcomes.collect { case (name, None) => name }
     val loadEnd = osBean.getSystemLoadAverage
     // contention verdict: queries whose spread stays past the limit
     // even after escalation were likely disturbed in EVERY window, or
@@ -192,6 +208,7 @@ object Bench {
       s""","cores":$cpus,"reps":$reps,"escalated_queries":$escalated""" +
       s""","escalated_names":${nameList(escalatedNames)}""" +
       s""","noisy_names":${nameList(noisy.map(_._1))}""" +
+      s""","failed_names":${nameList(failedNames)}""" +
       s""","loaded_host_at_start":$loadedHostAtStart,"loaded_host_after_wait":$loadedHost""" +
       s""","noisy_after_escalation":${noisy.length},"contention_suspected":$contention}""")
     // The driver captures only the TAIL of stdout, so the long audit

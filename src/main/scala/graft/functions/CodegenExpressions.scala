@@ -47,7 +47,9 @@ object Poly {
   * `h = fold(0, (acc, b) => (acc*base + b) mod (2^31-1))`.
   * ASCII-safe twin of DuckDB's
   * `list_reduce(... ascii(c) ..., (a,b) -> (a*base+b) % 2147483647)`. */
-case class PolyHash(child: Expression, base: Long) extends UnaryExpression {
+case class PolyHash(child: Expression, base: Long) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "poly_hash"
 
@@ -128,7 +130,8 @@ case class MortonInterleave(left: Expression, right: Expression, bits: Int)
   * (the per-shingle base hash is computed once, not per permutation
   * via separate column trees). */
 case class MinHashSig(child: Expression, permA: Seq[Long], permB: Seq[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   require(permA.length == permB.length)
   private lazy val aArr = permA.toArray
   private lazy val bArr = permB.toArray
@@ -198,7 +201,9 @@ case class MinHashSig(child: Expression, permA: Seq[Long], permB: Seq[Long])
   *
   * Replaces the explode + 64 conditional-sum aggregate formulation
   * (the round-1 bench's slowest query at 35 s → sub-second). */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
@@ -270,7 +275,10 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   * `list_reduce(list_prepend(0.0, list_transform(...)), +)`).
   * No boxing: reads primitive floats straight out of ArrayData
   * (a `Seq[Float]` UDF converts + boxes every element per call). */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
+case class VecDot(left: Expression, right: Expression) extends BinaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
@@ -310,7 +318,10 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   * column (the k-means centroid side is double-precision: quantized
   * integer thousandths divided by 1000.0), sequential left-to-right
   * doubles like [[VecDot]]. */
-case class VecDotD(left: Expression, right: Expression) extends BinaryExpression {
+case class VecDotD(left: Expression, right: Expression) extends BinaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot_d"
 
@@ -348,7 +359,9 @@ case class VecDotD(left: Expression, right: Expression) extends BinaryExpression
 
 /** L2 norm of an `array<float>` column: sqrt of the sequential
   * sum of squares in doubles. */
-case class VecNorm(child: Expression) extends UnaryExpression {
+case class VecNorm(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_norm"
 
@@ -727,15 +740,6 @@ case class VecPqAdc(left: Expression, right: Expression, kk: Int)
   * the original byte range (0x20 never occurs inside a multi-byte
   * UTF-8 sequence, so byte-level splitting is safe). */
 object ShingleKernel {
-  def distinctHashes(text: UTF8String, n: Int, base: Long): Array[Long] =
-    hashes(text, n, base, distinct = true)
-
-  /** Non-distinct variant: one hash per shingle occurrence, document
-    * order — multiplicities preserved (n-gram language-model counts
-    * need them; the distinct form is for set overlap). */
-  def allHashes(text: UTF8String, n: Int, base: Long): Array[Long] =
-    hashes(text, n, base, distinct = false)
-
   def hashes(text: UTF8String, n: Int, base: Long, distinct: Boolean): Array[Long] = {
     val bytes = text.getBytes
     // token boundaries
@@ -799,7 +803,8 @@ object ShingleKernel {
   * allocation). Output `array<long>`, sorted ascending. */
 case class ShingleHashes(child: Expression, n: Int, base: Long,
     distinct: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
 

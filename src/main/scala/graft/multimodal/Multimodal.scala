@@ -295,19 +295,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Assemble per-frame PNG byte arrays into the `vpng` container
-    * (the [[encodeVideo]] layout) — the re-encode path a video twin
-    * takes after a per-frame edit. */
-  def assembleVpng(frames: Seq[Array[Byte]]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    frames.foreach { png =>
-      bos.write(png.length >>> 24); bos.write((png.length >>> 16) & 0xFF)
-      bos.write((png.length >>> 8) & 0xFF); bos.write(png.length & 0xFF)
-      bos.write(png)
-    }
-    bos.toByteArray
-  }
-
   /** Split a `vpng` payload into its per-frame PNG byte arrays. Fails
     * LOUDLY on truncation or a corrupt length prefix — the
     * [[decodePng]] contract for video containers (each frame's PNG is

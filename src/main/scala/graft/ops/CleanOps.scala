@@ -13,15 +13,6 @@ import org.apache.spark.sql.types._
   */
 object CleanOps {
 
-  /** Drop columns, ignoring missing ones (il_analysis_git.py:52 with
-    * `errors='ignore'`; Spark's `drop` already ignores missing). */
-  def dropIgnoreMissing(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.drop(cols: _*)
-
-  /** Positional rename contract (il_analysis_git.py:54, :172). */
-  def renameAll(df: DataFrame, names: Seq[String]): DataFrame =
-    df.toDF(names: _*)
-
   /** Privacy-censor decode (il_analysis_git.py:60-65): the MOH dump
     * writes counts below 15 as the literal token `'<15'`; decode to 0
     * (later re-imputed by rebase_15) and cast. */

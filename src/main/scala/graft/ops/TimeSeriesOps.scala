@@ -97,12 +97,6 @@ object TimeSeriesOps {
   def dailyDelta(df: DataFrame, id: String, date: String, c: String, out: String): DataFrame =
     df.withColumn(out, coalesce(col(c) - lag(col(c), 1).over(ascW(id, date)), col(c)))
 
-  /** Rolling n-row sum ending at the current row. */
-  def rollingSum(df: DataFrame, id: String, date: String, c: String,
-                 n: Int, out: String): DataFrame =
-    df.withColumn(out, sum(col(c)).over(
-      Window.partitionBy(id).orderBy(date).rowsBetween(-(n - 1), 0)))
-
   /** Country-wide per-day totals + day-over-day diff
     * (il_analysis_git.py:169). The final single-partition lag window is
     * over the already-aggregated per-day frame (tiny by construction).

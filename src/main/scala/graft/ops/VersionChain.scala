@@ -32,15 +32,13 @@ import org.apache.spark.sql.functions._
   *             recorded value" commit). CDF delta: `update_pre` +
   *             `update_post` row pairs.
   *
-  * CONTENT-KEYED COMMIT: the root is keyed by dataset dir, and a
-  * `_CHAIN_OK` marker — written only AFTER the whole chain + manifest
-  * commit — records (layout version, dir, v0 row count). `ensure`
-  * re-validates the marker against the stored chain (every
-  * generation's `_SUCCESS`, footer-counted v0 rows) and skips the
-  * rewrite when present-and-checksummed; any mismatch or a crash
-  * mid-commit (no marker) triggers a full idempotent re-commit.
+  * CONTENT-KEYED COMMIT: the chain is a [[FixtureStore]] root, keyed
+  * by dataset dir and engine code. `ensure` re-validates the stored
+  * chain (every generation's `_SUCCESS`, the commit log, footer-counted
+  * v0 rows) and skips the rewrite when it holds; any mismatch or a
+  * crash mid-commit triggers a full re-commit into a cleared root.
   * Per-query independence is preserved: every consumer calls
-  * `ensure` and trusts nothing beyond the validated marker.
+  * `ensure` and trusts nothing beyond the validated store.
   *
   * Scale shape: the chain writes are the same one-exchange rewrites
   * `q_maintenance_pipeline` prices, paid ONCE; the manifest is
@@ -53,10 +51,6 @@ import org.apache.spark.sql.functions._
   * queries resolve is untouchable by construction. */
 object VersionChain {
 
-  /** Bumped whenever the chain definition changes — a marker from an
-    * older layout fails validation and the chain recommits. */
-  val ChainVersion = 4 // v4: every commit routed through CommitLog
-
   /** One manifest row: a commit of the versioned table. */
   final case class Commit(version: Long, op: String, path: String,
                           n_rows: Long, cdf_mode: String, cdf_path: String)
@@ -67,46 +61,19 @@ object VersionChain {
     graft.functions.F.polyHash(concat_ws("|",
       col("event_id"), col("event_type"), col("vc")))
 
-  def rootFor(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_verchain_$key"
-  }
-
-  private def markerFile(root: String) = new java.io.File(root, "_CHAIN_OK")
-
   private val gens = Seq("gen0", "gen1", "gen2", "gen3")
 
-  /** Commit the chain for `dir` unless a validated one is already
-    * stored; returns the chain root. Thread-safe within the JVM (test
-    * suites run concurrently); cross-process runs are sequential by
-    * the driver contract. */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val root = rootFor(dir)
-    val m = markerFile(root)
-    if (m.exists()) {
-      // a torn/corrupt marker (crash mid-writeString) must read as
-      // INVALID and recommit, never throw — Try absorbs parse/read
-      // failures into the same recommit path as a clean mismatch
-      val storedOk = scala.util.Try {
-        val txt = java.nio.file.Files.readString(m.toPath)
-        val lines = txt.split("\n", -1)
-        lines.length >= 3 &&
-          lines(0) == ChainVersion.toString && lines(1) == dir &&
-          (gens :+ "manifest").forall(g =>
-            new java.io.File(s"$root/$g/_SUCCESS").exists()) &&
-          // every generation must be COMMIT-resolved in the log — a
-          // chain whose log is torn or missing recommits wholesale
-          CommitLog.committedVersions(root) == Seq(1L, 2L, 3L, 4L) &&
-          // checksum: the stored v0 must still hold the committed row
-          // count (parquet footer count — metadata-only, no data read)
-          spark.read.parquet(s"$root/gen0").count() == lines(2).toLong
-      }.getOrElse(false)
-      if (storedOk) return root
-      m.delete()
+  /** Commit the chain for `dir` unless a validated one is stored;
+    * returns the chain root. Beyond the store's key, a hit needs every
+    * generation COMMIT-resolved in the log (a chain whose log is torn
+    * or missing recommits wholesale) and the stored v0 still holding
+    * the committed row count (a footer count — no data read). */
+  def ensure(spark: SparkSession, dir: String): String =
+    FixtureStore.ensure("verchain", dir, parts = gens :+ "manifest",
+      valid = root => CommitLog.committedVersions(root) == Seq(1L, 2L, 3L, 4L),
+      rows = root => spark.read.parquet(s"$root/gen0").count()) {
+      root => commit(spark, dir, root)
     }
-    commit(spark, dir, root)
-    root
-  }
 
   /** The root holding the chain's optimistic commit log: the chain's
     * own if present (owner, file copy, or shallow clone — clones get
@@ -171,7 +138,8 @@ object VersionChain {
     * the owning manifest nor any live registered clone references it
     * ([[retireUnreferenced]]) — which is exactly why a destructive
     * consumer on a clone can never damage the shared data. */
-  def shallowClone(root: String, dest: String): Unit = synchronized {
+  def shallowClone(root: String, dest: String): Unit =
+    FixtureStore.locked(dataRoot(root)) {
     val destF = new java.io.File(dest)
     rmTree(destF); destF.mkdirs()
     copyTo(s"$root/manifest", s"$dest/manifest") // |versions| rows
@@ -184,9 +152,8 @@ object VersionChain {
     java.nio.file.Files.writeString(baseFile(dest).toPath, base)
     val reg = new java.io.File(s"$base/clones")
     reg.mkdirs()
-    val key = dest.replaceAll("[^A-Za-z0-9.]+", "_")
     java.nio.file.Files.writeString(
-      new java.io.File(reg, s"$key.ref").toPath, dest)
+      new java.io.File(reg, s"${FixtureStore.dirKey(dest)}.ref").toPath, dest)
   }
 
   /** Generation paths a chain (owner or clone) still references: its
@@ -218,7 +185,8 @@ object VersionChain {
     * retired generation names. File-listing + delete only; at 100 TB
     * this never reads data. */
   def retireUnreferenced(spark: SparkSession,
-                         anyRoot: String): Seq[String] = synchronized {
+                         anyRoot: String): Seq[String] =
+    FixtureStore.locked(dataRoot(anyRoot)) {
     val base = dataRoot(anyRoot)
     val reg = new java.io.File(s"$base/clones")
     val cloneRoots: Seq[String] =
@@ -251,7 +219,7 @@ object VersionChain {
     ()
   }
 
-  def copyTo(root: String, dest: String): Unit = synchronized {
+  def copyTo(root: String, dest: String): Unit = FixtureStore.locked(root) {
     val destF = new java.io.File(dest)
     rmTree(destF)
     cpTree(new java.io.File(root), destF)
@@ -287,9 +255,6 @@ object VersionChain {
   private def commit(spark: SparkSession, dir: String,
                      root: String): Unit = {
     import spark.implicits._
-    // a recommit rewrites the world: the prior (torn or stale) log
-    // goes with it — slot history restarts with the data it describes
-    rmTree(new java.io.File(root, "commitlog"))
     // every chain commit goes through the OPTIMISTIC log: partitions
     // = the generation directory the commit writes, so a concurrent
     // maintenance writer targeting the same generation (re-compaction
@@ -357,10 +322,5 @@ object VersionChain {
       Commit(2L, "retain", "gen2", n2, "delta", "cdf/v2"),
       Commit(3L, "update", "gen3", n3, "delta", "cdf/v3"))
       .toDF().coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
-    // ---- marker LAST: the content-keyed commit point (a crash
-    // anywhere above leaves no marker → next ensure() recommits)
-    java.nio.file.Files.writeString(markerFile(root).toPath,
-      s"$ChainVersion\n$dir\n$n0\n")
-    ()
   }
 }

@@ -207,48 +207,28 @@ object CoreQueries {
     * is ONE scan with footer-level per-file upcasts — no rewrite, no
     * union-of-casts double plan; the accounting is a map-side
     * aggregate to 2 rows. */
-  /** Content-keyed root of the two-generation widening fixture
-    * (dataset-keyed + marker-last commit — the round-13 version wrote
-    * a fixed path per run; interleaved multi-dataset runs in one JVM
-    * could read the other dataset's half-written fixture). */
-  def schemaWidenRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_schema_widen_$key"
-  }
-
+  /** The two-generation widening fixture, dataset-keyed (the round-13
+    * version wrote a fixed path per run; interleaved multi-dataset runs
+    * in one JVM could read the other dataset's half-written fixture). */
   private def ensureSchemaWiden(spark: SparkSession, dir: String): String =
-    CoreQueries.synchronized {
-    val root = schemaWidenRoot(dir)
-    val marker = new java.io.File(root, "_SW_OK")
-    val head = s"1\n$dir\n"
-    if (marker.exists()) {
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) &&
-          Seq("batch=narrow", "batch=wide").forall(p =>
-            new java.io.File(s"$root/$p/_SUCCESS").exists())
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+    graft.ops.FixtureStore.ensure("schema_widen", dir,
+        parts = Seq("batch=narrow", "batch=wide")) { root =>
+      val e = Tables.events(spark, dir)
+        .select(col("event_id"), col("event_type"),
+          coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
+          (pmod(col("event_id"), lit(16L)).cast(DoubleType) / 16.0d)
+            .as("score"),
+          dayofmonth(to_date(col("ts"))).as("dom"))
+      // generation 1: the NARROW writer (int vc, float score)
+      e.filter(col("dom") <= 15)
+        .select(col("event_id"), col("vc").cast(IntegerType).as("vc"),
+          col("score").cast(FloatType).as("score"))
+        .write.mode("overwrite").parquet(s"$root/batch=narrow")
+      // generation 2: the WIDE writer (bigint vc, double score)
+      e.filter(col("dom") > 15)
+        .select(col("event_id"), col("vc"), col("score"))
+        .write.mode("overwrite").parquet(s"$root/batch=wide")
     }
-    val e = Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
-        (pmod(col("event_id"), lit(16L)).cast(DoubleType) / 16.0d)
-          .as("score"),
-        dayofmonth(to_date(col("ts"))).as("dom"))
-    // generation 1: the NARROW writer (int vc, float score)
-    e.filter(col("dom") <= 15)
-      .select(col("event_id"), col("vc").cast(IntegerType).as("vc"),
-        col("score").cast(FloatType).as("score"))
-      .write.mode("overwrite").parquet(s"$root/batch=narrow")
-    // generation 2: the WIDE writer (bigint vc, double score)
-    e.filter(col("dom") > 15)
-      .select(col("event_id"), col("vc"), col("score"))
-      .write.mode("overwrite").parquet(s"$root/batch=wide")
-    java.nio.file.Files.writeString(marker.toPath, head)
-    root
-  }
 
   private def schemaWidening(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureSchemaWiden(spark, dir)
@@ -307,11 +287,6 @@ object CoreQueries {
     * read is ONE scan whose projection resolves through a bounded
     * |cols| mapping collect; the schema log is |versions|·|cols|
     * rows of metadata. */
-  def columnMappingRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_colmap_$key"
-  }
-
   /** (version, op, logical, physical, dtype) — the FULL active
     * mapping per version (Delta stores actions; storing the resolved
     * mapping keeps replay out of the read path). */
@@ -332,28 +307,17 @@ object CoreQueries {
     (4, "add", "view_count", "c3", "bigint"),
     (4, "add", "day", "c4", "date"))
 
+  /** Schema changes COMMIT THROUGH THE LOG (round 18, closes r17
+    * verdict #2 — the schema log was its own TSV artifact, so a data
+    * writer racing a rename/drop went undetected; now each version's
+    * mapping is a staged artifact flipped live by a `schema:` entry,
+    * and the metadata-clash rule makes any concurrent writer
+    * conflict, both directions). */
   private def ensureColMap(spark: SparkSession, dir: String): String =
-    CoreQueries.synchronized {
+    graft.ops.FixtureStore.ensure("colmap", dir, parts = Seq("data"),
+        valid = r => graft.ops.CommitLog.committedVersions(r) ==
+          Seq(1L, 2L, 3L, 4L)) { root =>
       import spark.implicits._
-      val root = columnMappingRoot(dir)
-      val marker = new java.io.File(root, "_CM_OK")
-      // v2: schema changes COMMIT THROUGH THE LOG (round 18, closes
-      // r17 verdict #2 — the schema log was its own TSV artifact, so
-      // a data writer racing a rename/drop went undetected; now each
-      // version's mapping is a staged artifact flipped live by a
-      // `schema:` entry, and the metadata-clash rule makes any
-      // concurrent writer conflict, both directions)
-      val head = s"2\n$dir\n"
-      if (marker.exists()) {
-        val ok = scala.util.Try {
-          java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-            new java.io.File(s"$root/data/_SUCCESS").exists() &&
-            graft.ops.CommitLog.committedVersions(root) ==
-              Seq(1L, 2L, 3L, 4L)
-        }.getOrElse(false)
-        if (ok) return root
-        graft.ops.VersionChain.rmTree(new java.io.File(root))
-      }
       // the ONE physical write: columns live under physical ids only
       Tables.events(spark, dir).select(
         col("event_id").as("c1"), col("event_type").as("c2"),
@@ -374,8 +338,6 @@ object CoreQueries {
           require(cv == v.toLong,
             s"schema commit landed at v$cv, expected v$v")
         }
-      java.nio.file.Files.writeString(marker.toPath, head)
-      root
     }
 
   /** Versioned read THROUGH the mapping: logical names resolve to
@@ -509,10 +471,7 @@ object CoreQueries {
     * every sibling fixture (graft_wap_$key, graft_colmap_$key…), so
     * concurrent runs against different datasets never clobber each
     * other's report/admitted tables. */
-  def expectRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_expect_$key"
-  }
+  def expectRoot(dir: String): String = graft.ops.FixtureStore.root("expect", dir)
 
   private def constraints(spark: SparkSession, dir: String): DataFrame =
     synchronized {
@@ -619,9 +578,7 @@ object CoreQueries {
     // FileIndex before any listing (ZorderLakeSpec pins it), and a
     // concurrent key-domain MERGE commutes with the reorganization
     // (the ops/Reorganize discipline; optimize never loses data races).
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root =
-      s"${System.getProperty("java.io.tmpdir")}/graft_zorder_lake_$key"
+    val root = graft.ops.FixtureStore.root("zorder_lake", dir)
     graft.ops.VersionChain.rmTree(new java.io.File(root))
     val src = Tables.lineitem(spark, dir).select(
       col("l_partkey").cast(LongType).as("x"),

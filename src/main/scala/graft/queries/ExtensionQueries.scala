@@ -325,35 +325,22 @@ object ExtensionQueries {
     * session-conf toggle would not survive the lazy plan — strategy
     * resolves at action time; and at real scale neither side
     * broadcasts anyway). The bucketed tables are a CONTENT-KEYED
-    * fixture (round 14): written once per dataset behind a marker;
+    * fixture (round 14): written once per dataset ([[graft.ops.FixtureStore]]);
     * later runs — including fresh sessions — re-attach by DDL ONLY
     * (`CREATE TABLE … CLUSTERED BY … LOCATION`, schema taken verbatim
     * from the stored footer so the bucket hash type can never drift),
     * which restores the shuffle-free SMJ without moving a byte.
     * Output: the per-nation order rollup through the bucketed join,
     * oracled by a plain SQL join. */
-  def bucketedRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$key"
-  }
-
   /** Ensure the two bucketed tables exist on disk AND in this
     * session's catalog; returns their (dataset-keyed) table names. */
   def ensureBucketed(spark: SparkSession,
-                     dir: String): (String, String) = synchronized {
-    val root = bucketedRoot(dir)
+                     dir: String): (String, String) = {
     val k = dir.replaceAll("[^A-Za-z0-9]+", "_") // SQL identifier: no dots
     val custT = s"graft_bkt_cust_$k"
     val ordT = s"graft_bkt_ord_$k"
-    val marker = new java.io.File(root, "_BKT_OK")
-    val head = s"1\n$dir\n"
-    val stored = marker.exists() && scala.util.Try {
-      java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-        Seq("cust", "ord").forall(t =>
-          new java.io.File(s"$root/$t/_SUCCESS").exists())
-    }.getOrElse(false)
-    if (!stored) {
-      if (marker.exists()) marker.delete()
+    val root = graft.ops.FixtureStore.ensure("bucketed", dir,
+        parts = Seq("cust", "ord")) { root =>
       spark.sql(s"DROP TABLE IF EXISTS $custT")
       spark.sql(s"DROP TABLE IF EXISTS $ordT")
       Tables.customer(spark, dir)
@@ -368,23 +355,21 @@ object ExtensionQueries {
         .write.mode("overwrite").option("path", s"$root/ord")
         .bucketBy(8, "custkey").sortBy("custkey")
         .saveAsTable(ordT)
-      java.nio.file.Files.writeString(marker.toPath, head)
-    } else {
-      // stored fixture + (possibly) fresh session: re-attach by DDL.
-      // The schema comes from the stored footer VERBATIM — a declared
-      // type differing from the written one would silently change the
-      // bucket hash (murmur3 of int ≠ of long) and mis-join buckets.
-      def attach(tbl: String, sub: String): Unit =
-        if (!spark.catalog.tableExists(tbl)) {
-          val ddl = spark.read.parquet(s"$root/$sub").schema.toDDL
-          spark.sql(
-            s"""CREATE TABLE $tbl ($ddl) USING parquet
-               |CLUSTERED BY (custkey) SORTED BY (custkey) INTO 8 BUCKETS
-               |LOCATION '$root/$sub'""".stripMargin)
-        }
-      attach(custT, "cust")
-      attach(ordT, "ord")
     }
+    // stored fixture + (possibly) fresh session: re-attach by DDL.
+    // The schema comes from the stored footer VERBATIM — a declared
+    // type differing from the written one would silently change the
+    // bucket hash (murmur3 of int ≠ of long) and mis-join buckets.
+    def attach(tbl: String, sub: String): Unit =
+      if (!spark.catalog.tableExists(tbl)) {
+        val ddl = spark.read.parquet(s"$root/$sub").schema.toDDL
+        spark.sql(
+          s"""CREATE TABLE IF NOT EXISTS $tbl ($ddl) USING parquet
+             |CLUSTERED BY (custkey) SORTED BY (custkey) INTO 8 BUCKETS
+             |LOCATION '$root/$sub'""".stripMargin)
+      }
+    attach(custT, "cust")
+    attach(ordT, "ord")
     (custT, ordT)
   }
 

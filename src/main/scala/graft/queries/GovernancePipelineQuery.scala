@@ -50,17 +50,12 @@ import org.apache.spark.sql.functions._
   * like the other flagships — several real writes in one query. */
 object GovernancePipelineQuery {
 
-  private def root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_forget"
-
   /** The erasure run's commit log — per dataset, REBUILT each run
     * (the VersionChain recommit discipline): v1 commits the
     * pre-erasure tier manifest, v2 the post-erasure one, so the
     * spanning version in the certification row is deterministic. */
-  def forgetLogRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"$root/forgetlog_$key"
-  }
+  def forgetLogRoot(dir: String): String =
+    s"${graft.ops.FixtureStore.root("forget", dir)}/forgetlog"
 
   /** ONE ATOMIC CROSS-TABLE COMMIT: every erasure tier flips in a
     * single spanning entry. Round 16 built this bespoke here; it is
@@ -103,20 +98,16 @@ object GovernancePipelineQuery {
         col("n_total").as("n_before"), col("n_deleted").as("n_erased"),
         col("n_remaining").as("n_after"), col("del_key_xor").as("key_xor"))
     // ---- the events BASE generation is fixture (deterministic from
-    // the dataset) — content-keyed commit, skipped when already
-    // stored; the erasure REWRITE below is the operation being priced
-    val evMarker = new java.io.File(s"$root/_EVENTS_OK")
-    val evOk = evMarker.exists() &&
-      java.nio.file.Files.readString(evMarker.toPath).startsWith(s"1\n$dir\n") &&
-      new java.io.File(s"$root/events/_SUCCESS").exists()
-    if (!evOk) {
+    // the dataset) — built once per dataset; the erasure REWRITE
+    // below (into the same root) is the operation being priced
+    val root = graft.ops.FixtureStore.ensure("forget", dir,
+        parts = Seq("events")) { root =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
           to_date(col("ts")).as("day"))
         .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(s"$root/events")
-      java.nio.file.Files.writeString(evMarker.toPath, s"1\n$dir\n")
     }
     // ---- the SHARED content-keyed full-corpus index (built once per
     // dataset); the compaction below is additive — fresh live
@@ -139,34 +130,29 @@ object GovernancePipelineQuery {
     // touch disjoint tables and both simply have to land before the
     // atomic m1 commit below — submitting them from two driver
     // threads lets each write's task tail back-fill the other's
-    // cores. Failures propagate via get() before anything commits.
+    // cores. A failure surfaces only after both writes have stopped,
+    // and before anything commits.
     // Stage 4 keeps its r19 shape: no pre-write exchange — the stored
     // generation is already hive-partitioned by day, so partitionBy
     // regroups nothing.
     val delV = emb.filter(col("vec_id") % 13 === 0).select("vec_id")
     val stored = spark.read.parquet(s"$root/events")
-    val wPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val liveSeg = try {
-      val f3 = wPool.submit(new java.util.concurrent.Callable[String] {
-        def call(): String = Similarity.ivfPqCompactDelete(
-          spark, annPath, delV, Seq("codes")).head
-      })
-      val f4 = wPool.submit(new Runnable {
-        def run(): Unit =
-          stored.filter(pmod(col("user_id"), lit(13L)) =!= 0)
-            .write.mode("overwrite").partitionBy("day")
-            .parquet(s"$root/events_live")
-      })
-      f4.get()
-      f3.get()
-    } finally wPool.shutdown()
+    val Seq(liveSeg, eventsLive) = graft.ops.DriverPar.all(Seq(
+      () => Similarity.ivfPqCompactDelete(
+        spark, annPath, delV, Seq("codes")).head,
+      () => {
+        val out = s"$root/events_live"
+        stored.filter(pmod(col("user_id"), lit(13L)) =!= 0)
+          .write.mode("overwrite").partitionBy("day").parquet(out)
+        out
+      }))
     // ---- the ATOMIC CROSS-TABLE COMMIT: all tiers flip at ONE slot —
     // a crash anywhere above leaves readers on the v1 manifest
     // everywhere (ForgetAtomicSpec kills a pipeline mid-stage and
     // proves it); every read below gates on the resolved slot
     val commitV = commitTiers(logRoot, "m1", "erasure", Map(
       "cascade" -> "derived",
-      "events" -> s"$root/events_live",
+      "events" -> eventsLive,
       "index" -> s"$annPath/$liveSeg"), 1L)
     val (resV, liveTiers) = resolveTiers(logRoot)
     require(resV == commitV,

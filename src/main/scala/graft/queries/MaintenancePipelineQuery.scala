@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Num, NumSql, VersionChain}
+import graft.ops.{FixtureStore, Num, NumSql, VersionChain}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * over ONE shared immutable generation chain ([[VersionChain]]:
   * v0 ingest → v1 compact → v2 retain → v3 update, plus per-commit
   * CDF deltas and the version manifest). The chain is committed once
-  * per dataset (content-keyed `_CHAIN_OK` marker) and every query
+  * per dataset (a [[FixtureStore]] root) and every query
   * here resolves it rather than re-writing a private copy per run —
   * the round-12 bench spent ~12 s re-writing four identical chains.
   *
@@ -271,10 +271,7 @@ object MaintenancePipelineQuery {
     * Scale shape: the clone is \|versions\| manifest rows; the audit
     * is one scan per generation; expiry is a manifest rewrite;
     * retirement is file-listing + delete — data is never copied. */
-  def vacuumRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_vacuum_$key"
-  }
+  def vacuumRoot(dir: String): String = FixtureStore.root("vacuum", dir)
 
   /** Audit + expire + refcounted retire over any chain root (owner or
     * shallow clone); returns the post-vacuum manifest read. */
@@ -401,43 +398,20 @@ object MaintenancePipelineQuery {
     * reads + one recursive delete per orphan — never a data scan);
     * staging the conflicted delta is one pruned exchange per run,
     * the accounting one scan per staged path. */
-  val OrphanFixtureVersion = 1
-
-  def orphanRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_orphans_$key"
-  }
-
   private def ensureOrphanBase(spark: SparkSession, dir: String): String =
-    synchronized {
-    val root = orphanRoot(dir)
-    val marker = new java.io.File(root, "_ORPH_OK")
-    val head = s"$OrphanFixtureVersion\n$dir\n"
-    if (marker.exists()) {
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          new java.io.File(s"$root/data/live/_SUCCESS").exists() &&
-          graft.ops.CommitLog.committedVersions(root) == Seq(1L) &&
-          spark.read.parquet(s"$root/data/live").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      VersionChain.rmTree(new java.io.File(root))
+    FixtureStore.ensure("orphans", dir, parts = Seq("data/live"),
+      valid = root => graft.ops.CommitLog.committedVersions(root) == Seq(1L),
+      rows = root => spark.read.parquet(s"$root/data/live").count()) { root =>
+      val e = clogEvents(spark, dir)
+      e.filter(col("dom").between(16, 20))
+        .select(col("event_id"), col("vc"), col("day"))
+        .withColumn("pday", col("day"))
+        .repartition(col("pday"))
+        .write.mode("overwrite").partitionBy("pday").parquet(s"$root/data/live")
+      graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
+        "keeper", "ingest", "data/live",
+        daysIn(e, col("dom").between(16, 20)), 0L))
     }
-    val e = clogEvents(spark, dir)
-    e.filter(col("dom").between(16, 20))
-      .select(col("event_id"), col("vc"), col("day"))
-      .withColumn("pday", col("day"))
-      .repartition(col("pday"))
-      .write.mode("overwrite").partitionBy("pday").parquet(s"$root/data/live")
-    graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
-      "keeper", "ingest", "data/live",
-      daysIn(e, col("dom").between(16, 20)), 0L))
-    val n = spark.read.parquet(s"$root/data/live").count()
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
-    root
-  }
 
   def vacuumOrphans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -572,14 +546,6 @@ object MaintenancePipelineQuery {
     * staging is one pruned exchange per branch (content-keyed, paid
     * once); the audit is one map-side aggregate over the staged
     * delta; publish is one metadata commit. */
-  val WapFixtureVersion = 2 // v2: corruption sentinel −2, distinct
-                            // from clogEvents' −1 NULL-value sentinel
-
-  def wapRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_wap_$key"
-  }
-
   /** vc += 50 where event_id ≡ 0 mod 4 — the good branch's update. */
   private def wapUpdate(e: DataFrame): DataFrame =
     e.filter(col("dom").between(6, 7))
@@ -617,19 +583,11 @@ object MaintenancePipelineQuery {
       if (n == expectedRows) 0L else math.abs(n - expectedRows)))
   }
 
-  def ensureWap(spark: SparkSession, dir: String): String = synchronized {
+  def ensureWap(spark: SparkSession, dir: String): String = {
     import graft.ops.CommitLog
-    val root = wapRoot(dir)
-    val marker = new java.io.File(root, "_WAP_OK")
-    val head = s"$WapFixtureVersion\n$dir\n"
-    val ok = marker.exists() && scala.util.Try {
-      java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-        CommitLog.committedVersions(s"$root/main") == Seq(1L, 2L) &&
-        Seq("base", "branch_good", "branch_bad").forall(p =>
-          new java.io.File(s"$root/data/$p/_SUCCESS").exists())
-    }.getOrElse(false)
-    if (!ok) {
-      VersionChain.rmTree(new java.io.File(root))
+    FixtureStore.ensure("wap", dir,
+      parts = Seq("base", "branch_good", "branch_bad").map(p => s"data/$p"),
+      valid = r => CommitLog.committedVersions(s"$r/main") == Seq(1L, 2L)) { root =>
       val e = clogEvents(spark, dir).filter(col("dom") <= 10)
       val days = daysIn(e, lit(true))
       val upDays = daysIn(e, col("dom").between(6, 7))
@@ -655,9 +613,7 @@ object MaintenancePipelineQuery {
       graft.ops.Expectations.enforceFail(audit)
       CommitLog.tryCommit(s"$root/main", CommitLog.Entry("publisher",
         "publish", s"$root/data/branch_good", upDays, 1L))
-      java.nio.file.Files.writeString(marker.toPath, head)
     }
-    root
   }
 
   def wap(spark: SparkSession, dir: String): DataFrame = {
@@ -1039,8 +995,7 @@ object MaintenancePipelineQuery {
     val gen3 = gen2.filter(col("event_id") % 13 =!= 0)
     // stage 5: compaction rewrite — the stored roundtrip must carry
     // every surviving (id, key, value) bit-for-bit
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_rowtrack_$key"
+    val root = FixtureStore.root("rowtrack", dir)
     gen3.repartition(4).write.mode("overwrite").parquet(s"$root/compacted")
     val compacted = spark.read.parquet(s"$root/compacted")
     val h = graft.functions.F.polyHash(concat_ws("|",
@@ -1292,24 +1247,26 @@ object MaintenancePipelineQuery {
     * (v1 base, v2 merge [0,q1], v3 merge [q3+1,max]) — shared by
     * `q_lake_read`'s layered leg and `q_cdc_read`'s layer-derived
     * change legs. Content-keyed: rebuilt only when absent. */
-  private def ensureLakeLayerLog(spark: SparkSession,
-                                 dir: String): String = synchronized {
+  private def ensureLakeLayerLog(spark: SparkSession, dir: String): String = {
     import graft.ops.CommitLog
     import graft.ops.CommitLog.Entry
     val mcRoot = ensureMergeConc(spark, dir)
     val e = clogEvents(spark, dir).select("event_id", "event_type", "vc")
     val (q1, q3, mx) = mergeConcSplit(e)
     val lakeLog = s"$mcRoot/log_lake"
-    if (CommitLog.committedVersions(lakeLog) != Seq(1L, 2L, 3L)) {
-      VersionChain.rmTree(new java.io.File(lakeLog))
-      CommitLog.tryCommit(lakeLog, Entry("ingest", "ingest",
-        s"$mcRoot/data/base", Seq("events"), 0L))
-      CommitLog.tryCommit(lakeLog, Entry("m_low", "merge",
-        s"$mcRoot/data/low", Seq("events"), 1L,
-        keyDomains = Map("events" -> Seq((0L, q1)))))
-      CommitLog.tryCommit(lakeLog, Entry("m_high", "merge",
-        s"$mcRoot/data/high", Seq("events"), 1L,
-        keyDomains = Map("events" -> Seq((q3 + 1, mx)))))
+    // a log nested in the mergeconc root: written under that root's lock
+    FixtureStore.locked(mcRoot) {
+      if (CommitLog.committedVersions(lakeLog) != Seq(1L, 2L, 3L)) {
+        VersionChain.rmTree(new java.io.File(lakeLog))
+        CommitLog.tryCommit(lakeLog, Entry("ingest", "ingest",
+          s"$mcRoot/data/base", Seq("events"), 0L))
+        CommitLog.tryCommit(lakeLog, Entry("m_low", "merge",
+          s"$mcRoot/data/low", Seq("events"), 1L,
+          keyDomains = Map("events" -> Seq((0L, q1)))))
+        CommitLog.tryCommit(lakeLog, Entry("m_high", "merge",
+          s"$mcRoot/data/high", Seq("events"), 1L,
+          keyDomains = Map("events" -> Seq((q3 + 1, mx)))))
+      }
     }
     lakeLog
   }
@@ -1421,30 +1378,22 @@ object MaintenancePipelineQuery {
     *     write that dropped a carried partition, double-applied an
     *     append, or broke time travel hash-fails.
     *
-    * Content-keyed: the log builds once per dataset (marker =
-    * committedVersions == 1,2,3); every run re-reads through the
+    * Content-keyed: the log builds once per dataset (a FixtureStore
+    * root valid while committedVersions == 1,2,3); every run re-reads through the
     * connector. Scale shape: overwrite stages only the partitions it
     * carries; append re-reads only the touched partitions. */
-  /** The name (and tmpdir location) of the connector-write fixture —
-    * shared by `q_lake_write` and `q_lake_sql` (the SQL twin reads the
-    * same committed table through the catalog). */
-  def lakeWriteTableName(dir: String): String =
-    s"graft_lakewrite_${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
-
   /** Build (once, content-keyed) the 3-version connector-write table:
     * v1 full overwrite, v2 dynamic-partition sweep of days 1–10, v3
     * append into days 21–30 — plus the `_lake_table.tsv` sidecar that
-    * makes it loadable through [[graft.io.GraftLakeCatalog]]. */
+    * makes it loadable through [[graft.io.GraftLakeCatalog]]. Shared by
+    * `q_lake_write` and `q_lake_sql` (the SQL twin reads the same
+    * committed table through the catalog, named by the root's dir). */
   def ensureLakeWrite(spark: SparkSession, dir: String): String =
-    synchronized {
-    import graft.ops.CommitLog
-    val root =
-      s"${System.getProperty("java.io.tmpdir")}/${lakeWriteTableName(dir)}"
-    val e = clogEvents(spark, dir)
-      .select(col("event_id"), col("vc"), col("dom"),
-        col("day").cast("string").as("pday"))
-    if (CommitLog.committedVersions(root) != Seq(1L, 2L, 3L)) {
-      VersionChain.rmTree(new java.io.File(root))
+    FixtureStore.ensure("lakewrite", dir, valid = root =>
+      graft.ops.CommitLog.committedVersions(root) == Seq(1L, 2L, 3L)) { root =>
+      val e = clogEvents(spark, dir)
+        .select(col("event_id"), col("vc"), col("dom"),
+          col("day").cast("string").as("pday"))
       def put(df: DataFrame, mode: String, writer: String): Unit =
         df.select("event_id", "vc", "pday")
           .write.format("graftlake").option("partitionColumn", "pday")
@@ -1456,15 +1405,12 @@ object MaintenancePipelineQuery {
         .select((col("event_id") + 1000000000L).as("event_id"),
           (col("vc") + 7L).as("vc"), col("pday")),
         "append", "appender")
-      require(CommitLog.committedVersions(root) == Seq(1L, 2L, 3L),
+      require(graft.ops.CommitLog.committedVersions(root) == Seq(1L, 2L, 3L),
         "lake-write scenario landed at unexpected versions")
-    }
-    val props = new java.io.File(root, "_lake_table.tsv")
-    if (!props.exists())
-      java.nio.file.Files.writeString(props.toPath,
+      java.nio.file.Files.writeString(
+        new java.io.File(root, "_lake_table.tsv").toPath,
         "partitionColumn\tpday\n")
-    root
-  }
+    }
 
   private def lakeWrite(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureLakeWrite(spark, dir)
@@ -1553,7 +1499,7 @@ object MaintenancePipelineQuery {
     val catRoot = new java.io.File(root).getParent
     spark.conf.set("spark.sql.catalog.lake", "graft.io.GraftLakeCatalog")
     spark.conf.set("spark.sql.catalog.lake.root", catRoot)
-    val t = s"lake.`${lakeWriteTableName(dir)}`"
+    val t = s"lake.`${new java.io.File(root).getName}`"
     def stats(df: DataFrame, step: String): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
         coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
@@ -1566,8 +1512,8 @@ object MaintenancePipelineQuery {
       .replace("T", " ").replace("Z", "")
     // the INSERT leg: a per-run table (deterministic versions under
     // the hash), grown through SQL
-    val insName = s"graft_lakesql_ins_${dir.replaceAll("[^A-Za-z0-9.]+", "_")}"
-    val insRoot = s"$catRoot/$insName"
+    val insRoot = FixtureStore.root("lakesql_ins", dir)
+    val insName = new java.io.File(insRoot).getName
     VersionChain.rmTree(new java.io.File(insRoot))
     val e = clogEvents(spark, dir)
       .select(col("event_id"), col("vc"), col("dom"),
@@ -1681,11 +1627,9 @@ object MaintenancePipelineQuery {
     import graft.ops.CommitLog
     import graft.ops.CommitLog.Entry
     val mcRoot = ensureMergeDv(spark, dir)
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_dvlake_$key"
-    if (CommitLog.committedVersions(root) != Seq(1L, 2L) ||
-        !new java.io.File(s"$root/data/dv1/keys/_SUCCESS").exists()) {
-      VersionChain.rmTree(new java.io.File(root))
+    val root = FixtureStore.ensure("dvlake", dir,
+        parts = Seq("data/dv1/keys"),
+        valid = r => CommitLog.committedVersions(r) == Seq(1L, 2L)) { root =>
       spark.read.parquet(s"$mcRoot/gen0")
         .select("custkey", "nation", "bal")
         .write.mode("overwrite").parquet(s"$root/data/base")
@@ -1775,19 +1719,16 @@ object MaintenancePipelineQuery {
     * proportional); the groupBy collapses map-side. */
   private def cdcRead2(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.CommitLog
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val rootA =
-      s"${System.getProperty("java.io.tmpdir")}/graft_cdclake_$key"
-    val e = clogEvents(spark, dir)
-      .select(col("event_id"), col("vc"), col("dom"),
-        col("day").cast("string").as("pday"))
-    val haveCdc = CommitLog.committedVersions(rootA) == Seq(1L, 2L, 3L) && {
-      val log = CommitLog.readLog(rootA).toMap
-      Seq(2L, 3L).forall(v => log.get(v).exists(en => new java.io.File(
-        s"$rootA/${en.dataPath}/_cdc/_SUCCESS").exists()))
-    }
-    if (!haveCdc) {
-      VersionChain.rmTree(new java.io.File(rootA))
+    def haveCdc(root: String): Boolean =
+      CommitLog.committedVersions(root) == Seq(1L, 2L, 3L) && {
+        val log = CommitLog.readLog(root).toMap
+        Seq(2L, 3L).forall(v => log.get(v).exists(en => new java.io.File(
+          s"$root/${en.dataPath}/_cdc/_SUCCESS").exists()))
+      }
+    val rootA = FixtureStore.ensure("cdclake", dir, valid = haveCdc) { rootA =>
+      val e = clogEvents(spark, dir)
+        .select(col("event_id"), col("vc"), col("dom"),
+          col("day").cast("string").as("pday"))
       def put(df: DataFrame, mode: String, writer: String): Unit =
         df.select("event_id", "vc", "pday")
           .write.format("graftlake").option("partitionColumn", "pday")
@@ -1907,13 +1848,6 @@ object MaintenancePipelineQuery {
     * scans; compaction is one partition rewrite, paid when layers
     * accumulate — exactly the DV tier's economics
     * (`q_merge_dv`). */
-  val MergeConcFixtureVersion = 1
-
-  def mergeConcRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_mergeconc_$key"
-  }
-
   /** (q1, q3, max): the quartile key split both engines derive with
     * integer arithmetic. */
   private def mergeConcSplit(e: DataFrame): (Long, Long, Long) = {
@@ -1934,18 +1868,9 @@ object MaintenancePipelineQuery {
         when(col("event_id") % 5 === 0, lit(-50L)).otherwise(lit(0L)))
       .select("event_id", "event_type", "vc")
 
-  private def ensureMergeConc(spark: SparkSession,
-                              dir: String): String = synchronized {
-    val root = mergeConcRoot(dir)
-    val marker = new java.io.File(root, "_MC_OK")
-    val head = s"$MergeConcFixtureVersion\n$dir\n"
-    val ok = marker.exists() && scala.util.Try {
-      java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-        Seq("base", "low", "high").forall(p =>
-          new java.io.File(s"$root/data/$p/_SUCCESS").exists())
-    }.getOrElse(false)
-    if (!ok) {
-      VersionChain.rmTree(new java.io.File(root))
+  private def ensureMergeConc(spark: SparkSession, dir: String): String =
+    FixtureStore.ensure("mergeconc", dir,
+        parts = Seq("base", "low", "high").map(p => s"data/$p")) { root =>
       val e = clogEvents(spark, dir)
         .select("event_id", "event_type", "vc")
       val (q1, q3, mx) = mergeConcSplit(e)
@@ -1954,10 +1879,7 @@ object MaintenancePipelineQuery {
         .parquet(s"$root/data/low")
       mergeConcHigh(e, q3, mx).write.mode("overwrite")
         .parquet(s"$root/data/high")
-      java.nio.file.Files.writeString(marker.toPath, head)
     }
-    root
-  }
 
   private def mergeConcurrent(spark: SparkSession,
                               dir: String): DataFrame = {
@@ -2099,38 +2021,19 @@ object MaintenancePipelineQuery {
     * content-keyed) + one metadata-only commit; the skip path never
     * touches data — a re-delivered 100 TB batch costs |slots| small
     * file reads, not a write. */
-  val StreamCommitFixtureVersion = 1
-
-  def streamCommitRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_strcommit_$key"
-  }
-
   private def streamBatchCond(bid: Long): Column = bid match {
     case 0L => col("dom") <= 10
     case 1L => col("dom").between(11, 20)
     case _  => col("dom") >= 21
   }
 
-  private def ensureStreamCommitData(spark: SparkSession,
-                                     dir: String): String = synchronized {
-    val root = streamCommitRoot(dir)
-    val marker = new java.io.File(root, "_SC_OK")
-    val head = s"$StreamCommitFixtureVersion\n$dir\n"
-    val ok = marker.exists() && scala.util.Try {
-      java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-        (0 to 2).forall(b =>
-          new java.io.File(s"$root/data/b$b/_SUCCESS").exists())
-    }.getOrElse(false)
-    if (!ok) {
-      VersionChain.rmTree(new java.io.File(root))
+  private def ensureStreamCommitData(spark: SparkSession, dir: String): String =
+    FixtureStore.ensure("strcommit", dir,
+        parts = (0 to 2).map(b => s"data/b$b")) { root =>
       val e = clogEvents(spark, dir)
       (0L to 2L).foreach(b => e.filter(streamBatchCond(b))
         .write.mode("overwrite").parquet(s"$root/data/b$b"))
-      java.nio.file.Files.writeString(marker.toPath, head)
     }
-    root
-  }
 
   private def streamCommit(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.StreamCommit
@@ -2240,57 +2143,41 @@ object MaintenancePipelineQuery {
     * Scale shape: validation stays metadata-only — the read set is
     * |partitions read| strings in the entry, never data; the fixture
     * is three small one-exchange writes paid once. */
-  val IsolationFixtureVersion = 1
-
-  def isolationRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_isolation_$key"
-  }
-
-  def ensureIsolation(spark: SparkSession, dir: String): String =
-    synchronized {
-      import graft.ops.CommitLog
-      val root = isolationRoot(dir)
-      val marker = new java.io.File(root, "_ISO_OK")
-      val head = s"$IsolationFixtureVersion\n$dir\n"
-      val ok = marker.exists() && scala.util.Try {
-        java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-          CommitLog.committedVersions(root).take(4) == Seq(1L, 2L, 3L, 4L) &&
-          Seq("base", "mut", "report_stale", "report_fresh").forall(p =>
-            new java.io.File(s"$root/data/$p/_SUCCESS").exists())
-      }.getOrElse(false)
-      if (!ok) {
-        VersionChain.rmTree(new java.io.File(root))
-        val e = clogEvents(spark, dir).filter(col("dom") <= 10)
-        val days = daysIn(e, lit(true))
-        val day5 = daysIn(e, col("dom") === 5)
-        e.write.mode("overwrite").parquet(s"$root/data/base")
-        CommitLog.tryCommit(root, CommitLog.Entry("ingest", "ingest",
-          s"$root/data/base", days, 0L))
-        // the rival: a point mutation of day 5 (vc += 100 on ⅓ of keys)
-        val mut = e.filter(col("dom") === 5)
-          .withColumn("vc", col("vc") +
-            when(col("event_id") % 3 === 0, lit(100L)).otherwise(lit(0L)))
-        mut.write.mode("overwrite").parquet(s"$root/data/mut")
-        CommitLog.tryCommit(root, CommitLog.Entry("mutator", "update",
-          s"$root/data/mut", day5, 1L))
-        // both report payloads, staged from the two snapshots
-        e.filter(col("dom") === 5)
-          .write.mode("overwrite").parquet(s"$root/data/report_stale")
-        spark.read.parquet(s"$root/data/mut")
-          .write.mode("overwrite").parquet(s"$root/data/report_fresh")
-        // write-serializable: the stale report COMMITS (the anomaly)
-        CommitLog.tryCommit(root, CommitLog.Entry("reporter_ws", "report",
-          s"$root/data/report_stale", Seq("r1"), 1L,
-          readSet = day5, isolation = CommitLog.WriteSerializable))
-        // serializable, fresh snapshot: commits the corrected report
-        CommitLog.tryCommit(root, CommitLog.Entry("reporter_sr", "report",
-          s"$root/data/report_fresh", Seq("r1"), 3L,
-          readSet = day5, isolation = CommitLog.Serializable))
-        java.nio.file.Files.writeString(marker.toPath, head)
-      }
-      root
+  def ensureIsolation(spark: SparkSession, dir: String): String = {
+    import graft.ops.CommitLog
+    FixtureStore.ensure("isolation", dir,
+        parts = Seq("base", "mut", "report_stale", "report_fresh")
+          .map(p => s"data/$p"),
+        valid = r => CommitLog.committedVersions(r).take(4) ==
+          Seq(1L, 2L, 3L, 4L)) { root =>
+      val e = clogEvents(spark, dir).filter(col("dom") <= 10)
+      val days = daysIn(e, lit(true))
+      val day5 = daysIn(e, col("dom") === 5)
+      e.write.mode("overwrite").parquet(s"$root/data/base")
+      CommitLog.tryCommit(root, CommitLog.Entry("ingest", "ingest",
+        s"$root/data/base", days, 0L))
+      // the rival: a point mutation of day 5 (vc += 100 on ⅓ of keys)
+      val mut = e.filter(col("dom") === 5)
+        .withColumn("vc", col("vc") +
+          when(col("event_id") % 3 === 0, lit(100L)).otherwise(lit(0L)))
+      mut.write.mode("overwrite").parquet(s"$root/data/mut")
+      CommitLog.tryCommit(root, CommitLog.Entry("mutator", "update",
+        s"$root/data/mut", day5, 1L))
+      // both report payloads, staged from the two snapshots
+      e.filter(col("dom") === 5)
+        .write.mode("overwrite").parquet(s"$root/data/report_stale")
+      spark.read.parquet(s"$root/data/mut")
+        .write.mode("overwrite").parquet(s"$root/data/report_fresh")
+      // write-serializable: the stale report COMMITS (the anomaly)
+      CommitLog.tryCommit(root, CommitLog.Entry("reporter_ws", "report",
+        s"$root/data/report_stale", Seq("r1"), 1L,
+        readSet = day5, isolation = CommitLog.WriteSerializable))
+      // serializable, fresh snapshot: commits the corrected report
+      CommitLog.tryCommit(root, CommitLog.Entry("reporter_sr", "report",
+        s"$root/data/report_fresh", Seq("r1"), 3L,
+        readSet = day5, isolation = CommitLog.Serializable))
     }
+  }
 
   def isolationLevels(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.CommitLog
@@ -2407,10 +2294,7 @@ object MaintenancePipelineQuery {
     * the clone, the shared root's manifest/log byte-identical across
     * a restore, the restored read's plan scanning the ORIGINAL gen1
     * path, and idempotent re-run. */
-  def restoreRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_restore_$key"
-  }
+  def restoreRoot(dir: String): String = FixtureStore.root("restore", dir)
 
   def restore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -2607,56 +2491,29 @@ object MaintenancePipelineQuery {
     * period — the cost a spec change trades away).
     *
     * Scale shape: one repartition exchange per re-spec commit, paid
-    * ONCE per dataset behind the content-keyed `_PE_OK` marker
-    * (committed with the [[VersionChain]] marker-last discipline;
-    * round 13's scaladoc promised this skip without implementing it —
-    * every run rewrote both generations); reads are generation scans
+    * ONCE per dataset as a [[FixtureStore]] root; reads are generation scans
     * with file-listing-level pruning under each generation's own
     * spec. */
-  val PartEvoFixtureVersion = 1
-
-  def partEvoRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_part_evo_$key"
-  }
-
   /** Commit the two-spec fixture for `dir` unless a validated one is
-    * stored (marker written LAST; torn markers recommit). */
+    * stored. */
   def ensurePartEvo(spark: SparkSession, dir: String): String =
-    synchronized {
-    import spark.implicits._
-    val root = partEvoRoot(dir)
-    val marker = new java.io.File(root, "_PE_OK")
-    val head = s"$PartEvoFixtureVersion\n$dir\n"
-    if (marker.exists()) {
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          Seq("gen0", "gen1", "manifest").forall(p =>
-            new java.io.File(s"$root/$p/_SUCCESS").exists()) &&
-          spark.read.parquet(s"$root/gen0").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+    FixtureStore.ensure("part_evo", dir, parts = Seq("gen0", "gen1", "manifest"),
+      rows = root => spark.read.parquet(s"$root/gen0").count()) { root =>
+      import spark.implicits._
+      val base = graft.tables.Tables.events(spark, dir)
+        .select(col("event_id"), col("event_type"),
+          coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
+          to_date(col("ts")).as("day"))
+        .withColumn("period",
+          concat(lit("p"), expr("(dayofmonth(day) - 1) div 10")))
+      base.repartition(col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(s"$root/gen0")
+      base.repartition(col("period"))
+        .write.mode("overwrite").partitionBy("period").parquet(s"$root/gen1")
+      Seq((0L, "day", "gen0"), (1L, "period", "gen1"))
+        .toDF("version", "spec", "path")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     }
-    val base = graft.tables.Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
-        to_date(col("ts")).as("day"))
-      .withColumn("period",
-        concat(lit("p"), expr("(dayofmonth(day) - 1) div 10")))
-    base.repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(s"$root/gen0")
-    base.repartition(col("period"))
-      .write.mode("overwrite").partitionBy("period").parquet(s"$root/gen1")
-    Seq((0L, "day", "gen0"), (1L, "period", "gen1"))
-      .toDF("version", "spec", "path")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
-    val n0 = spark.read.parquet(s"$root/gen0").count()
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n0\n")
-    root
-  }
 
   def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -2810,20 +2667,12 @@ object MaintenancePipelineQuery {
     *
     * The whole fixture (base + commit + manifests + feed) is
     * deterministic in the dataset, so it commits ONCE per dataset
-    * behind a content-keyed `_MERGE_OK` marker (the [[VersionChain]]
-    * discipline) and the query reads stored state.
+    * as a [[FixtureStore]] root and the query reads stored state.
     *
     * Scale shape: touched-file identification is a broadcast-delta
     * distinct over |buckets|; the rewrite scans ONLY the touched
     * bucket directories (partition-pruned read); the manifest is
     * |files| rows; CDF is change-proportional. */
-  val MergeFixtureVersion = 4 // v4: + per-file bloom sidecar (bloom/v1)
-
-  def mergeRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_merge_$key"
-  }
-
   /** One file-manifest row: a data file of the table at some version,
     * with its DATA-SKIPPING stats (min/max key + row count — the
     * Delta/Iceberg per-file column stats that let a point lookup
@@ -2838,29 +2687,18 @@ object MaintenancePipelineQuery {
     * `gen1/pbucket=b/` ONLY rewritten/new buckets, `filemanifest/v1`
     * (bucket, file, rewritten) listing every data file of v1 —
     * carried entries point into gen0 verbatim — and `cdf/v1`. */
-  def ensureMerge(spark: SparkSession, dir: String): String = synchronized {
-    import spark.implicits._
-    val root = mergeRoot(dir)
-    val marker = new java.io.File(root, "_MERGE_OK")
-    val head = s"$MergeFixtureVersion\n$dir\n"
-    if (marker.exists()) {
-      // torn/corrupt marker ⇒ invalid ⇒ recommit (never throw)
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          Seq("gen0", "gen1", "filemanifest/v1", "cdf/v1",
-              "bloom/v1").forall(p =>
-            new java.io.File(s"$root/$p/_SUCCESS").exists()) &&
-          // both commits must be resolved in the optimistic log
-          graft.ops.CommitLog.committedVersions(root) == Seq(1L, 2L) &&
-          spark.read.parquet(s"$root/gen0").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+  def ensureMerge(spark: SparkSession, dir: String): String =
+    FixtureStore.ensure("merge", dir,
+      parts = Seq("gen0", "gen1", "filemanifest/v1", "cdf/v1", "bloom/v1"),
+      // both commits must be resolved in the optimistic log
+      valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L),
+      rows = r => spark.read.parquet(s"$r/gen0").count()) {
+      root => buildMerge(spark, dir, root)
     }
-    // a rebuild rewrites the world: the stale log goes with it
-    VersionChain.rmTree(new java.io.File(root, "commitlog"))
+
+  private def buildMerge(spark: SparkSession, dir: String,
+                         root: String): Unit = {
+    import spark.implicits._
     val raw = graft.tables.Tables.customer(spark, dir)
       .select(col("c_custkey").as("custkey"),
         col("c_nationkey").cast("long").as("nation"),
@@ -2874,7 +2712,7 @@ object MaintenancePipelineQuery {
     base.repartition(col("pbucket"))
       .write.mode("overwrite").partitionBy("pbucket").parquet(s"$root/gen0")
     val g0 = graft.ops.SideCache.persist(spark.read.parquet(s"$root/gen0"))
-    val n0 = g0.count()
+    g0.count() // materialize once, before the jobs below that scan it twice
     // the MERGE delta, localized to the hot tail; delete wins on overlap
     val hot = col("bucket") >= 12
     val delKeys = g0.filter(col("custkey") % 13 === 0 && hot)
@@ -2983,9 +2821,9 @@ object MaintenancePipelineQuery {
     graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
       "merge", "merge_upsert", "filemanifest/v1",
       touched.toSeq.sorted.map(_.toString), 1L))
-    // marker LAST (crash anywhere above ⇒ no marker ⇒ recommit)
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n0\n")
-    root
+    // a left-over cached gen0 would stand in for later plain reads of
+    // the stored files (input_file_name reads "" under a cached scan)
+    graft.ops.SideCache.releaseAll()
   }
 
   /** The v1 file manifest, collected (|files| rows — bounded) —
@@ -3380,34 +3218,17 @@ object MaintenancePipelineQuery {
     * only); the masked read adds one broadcast anti-join to the scan
     * (tombstones small by law); compaction is `q_merge_upsert`'s
     * partition-pruned rewrite, paid only when DVs accumulate. */
-  val MergeDvFixtureVersion = 1
-
-  def mergeDvRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_mergedv_$key"
-  }
-
   def ensureMergeDv(spark: SparkSession, dir: String): String =
-    synchronized {
-    import spark.implicits._
-    val root = mergeDvRoot(dir)
-    val marker = new java.io.File(root, "_DV_OK")
-    val head = s"$MergeDvFixtureVersion\n$dir\n"
-    if (marker.exists()) {
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          Seq("gen0", "dv/v2", "append/v2", "cdf/v2", "gen1").forall(p =>
-            new java.io.File(s"$root/$p/_SUCCESS").exists()) &&
-          graft.ops.CommitLog.committedVersions(root) ==
-            Seq(1L, 2L, 3L) &&
-          spark.read.parquet(s"$root/gen0").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+    FixtureStore.ensure("mergedv", dir,
+      parts = Seq("gen0", "dv/v2", "append/v2", "cdf/v2", "gen1"),
+      valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
+      rows = r => spark.read.parquet(s"$r/gen0").count()) {
+      root => buildMergeDv(spark, dir, root)
     }
-    VersionChain.rmTree(new java.io.File(root, "commitlog"))
+
+  private def buildMergeDv(spark: SparkSession, dir: String,
+                           root: String): Unit = {
+    import spark.implicits._
     val raw = graft.tables.Tables.customer(spark, dir)
       .select(col("c_custkey").as("custkey"),
         col("c_nationkey").cast("long").as("nation"),
@@ -3419,7 +3240,7 @@ object MaintenancePipelineQuery {
       .repartition(col("pbucket"))
       .write.mode("overwrite").partitionBy("pbucket").parquet(s"$root/gen0")
     val g0 = graft.ops.SideCache.persist(spark.read.parquet(s"$root/gen0"))
-    val n0 = g0.count()
+    g0.count() // materialize once, before the jobs below that scan it twice
     val baseBuckets = g0.select(col("pbucket").cast("long"))
       .distinct().as[Long].collect().toSet
     graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
@@ -3479,8 +3300,6 @@ object MaintenancePipelineQuery {
       "compact", "compact_dv", "gen1",
       touched.toSeq.sorted.map(_.toString), 2L))
     graft.ops.SideCache.releaseAll()
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n0\n")
-    root
   }
 
   /** Recursive parquet file listing (bounded: |files| per fixture). */
@@ -3618,13 +3437,6 @@ object MaintenancePipelineQuery {
     * job holds the commit critical section); accounting is one scan
     * per commit's private data; the resolution map is \|partitions\|
     * driver rows. */
-  val CommitLogFixtureVersion = 2 // v2: atomic _RESOLVED slot markers
-
-  def commitLogRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_commitlog_$key"
-  }
-
   private def clogEvents(spark: SparkSession, dir: String): DataFrame =
     graft.tables.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
@@ -3639,57 +3451,41 @@ object MaintenancePipelineQuery {
   }
 
   /** Stage the four writers' data + run the three-commit scenario
-    * once per dataset (marker-last; a partial commitlog from a crash
-    * would corrupt the protocol, so an invalid root is rebuilt from
-    * scratch). */
+    * once per dataset (a partial commitlog from a crash would corrupt
+    * the protocol; the store rebuilds an invalid root from scratch). */
   def ensureCommitLog(spark: SparkSession, dir: String): String =
-    synchronized {
-    val root = commitLogRoot(dir)
-    val marker = new java.io.File(root, "_CLOG_OK")
-    val head = s"$CommitLogFixtureVersion\n$dir\n"
-    if (marker.exists()) {
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          Seq("ingest", "sweeper", "updater", "conflicter").forall(w =>
-            new java.io.File(s"$root/data/$w/_SUCCESS").exists()) &&
-          graft.ops.CommitLog.committedVersions(root) == Seq(1L, 2L, 3L) &&
-          spark.read.parquet(s"$root/data/ingest").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      VersionChain.rmTree(new java.io.File(root))
+    FixtureStore.ensure("commitlog", dir,
+      parts = Seq("ingest", "sweeper", "updater", "conflicter")
+        .map(w => s"data/$w"),
+      valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
+      rows = r => spark.read.parquet(s"$r/data/ingest").count()) { root =>
+      val e = graft.ops.SideCache.persist(clogEvents(spark, dir))
+      def stage(name: String, df: DataFrame): Unit =
+        df.select(col("event_id"), col("vc"), col("day"))
+          .withColumn("pday", col("day"))
+          .repartition(col("pday"))
+          .write.mode("overwrite").partitionBy("pday")
+          .parquet(s"$root/data/$name")
+      stage("ingest", e)
+      stage("sweeper", e.filter(col("dom") <= 10 && col("event_id") % 5 =!= 0))
+      stage("updater", e.filter(col("dom") >= 21)
+        .withColumn("vc", when(col("event_id") % 3 === 0, col("vc") + 7L)
+          .otherwise(col("vc"))))
+      stage("conflicter",
+        e.filter(col("dom").between(5, 15) && col("event_id") % 7 =!= 0))
+      import graft.ops.CommitLog
+      val v1 = CommitLog.tryCommit(root, CommitLog.Entry(
+        "ingest", "ingest", "data/ingest", daysIn(e, lit(true)), 0L))
+      // TWO writers from the SAME snapshot — disjoint partitions, both
+      // land: the optimistic-concurrency contract
+      val v2 = CommitLog.tryCommit(root, CommitLog.Entry(
+        "sweeper", "purge5", "data/sweeper", daysIn(e, col("dom") <= 10), v1))
+      val v3 = CommitLog.tryCommit(root, CommitLog.Entry(
+        "updater", "bump3", "data/updater", daysIn(e, col("dom") >= 21), v1))
+      require(v1 == 1L && v2 == 2L && v3 == 3L,
+        s"commit scenario landed at unexpected versions ($v1,$v2,$v3)")
+      graft.ops.SideCache.releaseAll()
     }
-    val e = graft.ops.SideCache.persist(clogEvents(spark, dir))
-    def stage(name: String, df: DataFrame): Unit =
-      df.select(col("event_id"), col("vc"), col("day"))
-        .withColumn("pday", col("day"))
-        .repartition(col("pday"))
-        .write.mode("overwrite").partitionBy("pday")
-        .parquet(s"$root/data/$name")
-    stage("ingest", e)
-    stage("sweeper", e.filter(col("dom") <= 10 && col("event_id") % 5 =!= 0))
-    stage("updater", e.filter(col("dom") >= 21)
-      .withColumn("vc", when(col("event_id") % 3 === 0, col("vc") + 7L)
-        .otherwise(col("vc"))))
-    stage("conflicter",
-      e.filter(col("dom").between(5, 15) && col("event_id") % 7 =!= 0))
-    import graft.ops.CommitLog
-    val v1 = CommitLog.tryCommit(root, CommitLog.Entry(
-      "ingest", "ingest", "data/ingest", daysIn(e, lit(true)), 0L))
-    // TWO writers from the SAME snapshot — disjoint partitions, both
-    // land: the optimistic-concurrency contract
-    val v2 = CommitLog.tryCommit(root, CommitLog.Entry(
-      "sweeper", "purge5", "data/sweeper", daysIn(e, col("dom") <= 10), v1))
-    val v3 = CommitLog.tryCommit(root, CommitLog.Entry(
-      "updater", "bump3", "data/updater", daysIn(e, col("dom") >= 21), v1))
-    require(v1 == 1L && v2 == 2L && v3 == 3L,
-      s"commit scenario landed at unexpected versions ($v1,$v2,$v3)")
-    val n = spark.read.parquet(s"$root/data/ingest").count()
-    graft.ops.SideCache.releaseAll()
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
-    root
-  }
 
   def commitLog(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.CommitLog

@@ -1991,50 +1991,32 @@ object SimilarityQueries {
     * Scale shape: the pre-upsert graph + assignment tables are
     * content-keyed stored fixtures; per-run work is |late| +
     * |affected buckets| bounded joins; the corpus never shuffles. */
-  val HnswUpsertVersion = 2 // v2: sparse late batch so carried edges dominate
-
-  def hnswUpsertRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_hnswups_$key"
-  }
-
   private def hnswLate =
     org.apache.spark.sql.functions.col("vec_id") % 701 === 5
 
-  def ensureHnswUpsert(spark: SparkSession, dir: String): String =
-    SimilarityQueries.synchronized {
-      import graft.sim.Hnsw
-      import org.apache.spark.sql.functions.col
-      val root = hnswUpsertRoot(dir)
-      val marker = new java.io.File(root, "_HUPS_OK")
-      val head = s"$HnswUpsertVersion\n$dir\n"
-      val stored = (0 to Hnsw.MaxLevel).map(l => s"early_e$l") ++
-        (0 until Hnsw.MaxLevel).map(l => s"a$l")
-      val ok = marker.exists() && scala.util.Try {
-        java.nio.file.Files.readString(marker.toPath).startsWith(head) &&
-          stored.forall(p =>
-            new java.io.File(s"$root/$p/_SUCCESS").exists())
-      }.getOrElse(false)
-      if (!ok) {
-        val base = graft.ops.SideCache.persist(
-          Hnsw.withLevels(Tables.embeddings(spark, dir)))
-        val early = base.filter(!hnswLate)
-        (0 to Hnsw.MaxLevel).foreach { l =>
-          // pre-upsert graph: early nodes, FROZEN full-corpus quantizer
-          Hnsw.adjacencyFrom(early, base, l).coalesce(1)
-            .write.mode("overwrite").parquet(s"$root/early_e$l")
-        }
-        (0 until Hnsw.MaxLevel).foreach { l =>
-          // assignment table of ALL level-l nodes (index metadata)
-          Hnsw.assign(base.filter(col("lvl") >= l),
-              Hnsw.levelCents(base, l))
-            .select("vec_id", "cid").coalesce(1)
-            .write.mode("overwrite").parquet(s"$root/a$l")
-        }
-        java.nio.file.Files.writeString(marker.toPath, head)
+  def ensureHnswUpsert(spark: SparkSession, dir: String): String = {
+    import graft.sim.Hnsw
+    import org.apache.spark.sql.functions.col
+    graft.ops.FixtureStore.ensure("hnswups", dir,
+        parts = (0 to Hnsw.MaxLevel).map(l => s"early_e$l") ++
+          (0 until Hnsw.MaxLevel).map(l => s"a$l")) { root =>
+      val base = graft.ops.SideCache.persist(
+        Hnsw.withLevels(Tables.embeddings(spark, dir)))
+      val early = base.filter(!hnswLate)
+      (0 to Hnsw.MaxLevel).foreach { l =>
+        // pre-upsert graph: early nodes, FROZEN full-corpus quantizer
+        Hnsw.adjacencyFrom(early, base, l).coalesce(1)
+          .write.mode("overwrite").parquet(s"$root/early_e$l")
       }
-      root
+      (0 until Hnsw.MaxLevel).foreach { l =>
+        // assignment table of ALL level-l nodes (index metadata)
+        Hnsw.assign(base.filter(col("lvl") >= l),
+            Hnsw.levelCents(base, l))
+          .select("vec_id", "cid").coalesce(1)
+          .write.mode("overwrite").parquet(s"$root/a$l")
+      }
     }
+  }
 
   /** Disjoint-union edge accounting (r19, reshaped r20): (n, Σic, xor)
     * over carried ⊎ recomputed compose componentwise — counts and sums

@@ -153,18 +153,9 @@ object Hnsw {
   def adjacency(base: DataFrame, level: Int): DataFrame =
     adjacencyFrom(base, base, level)
 
-  /** Bumped when the stored-graph layout/derivation changes. */
-  val GraphFixtureVersion = 2 // v2: DiskANN layout (vector stored with
-                              // the edge) + stored canonical search t10
-
-  def graphRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_$key"
-  }
-
   /** CONTENT-KEYED stored graph ([[Similarity.ensureStoredIndex]]'s
     * discipline): the adjacency build is the INDEX-CONSTRUCTION cost —
-    * paid once per dataset behind a marker; every query run serves the
+    * paid once per dataset ([[graft.ops.FixtureStore]]); every query run serves the
     * stored per-layer edge segments. Edges are stored DENORMALIZED
     * with the destination vector and norm — DiskANN's on-disk layout
     * (the vector lives with the adjacency list), which makes each
@@ -174,19 +165,10 @@ object Hnsw {
     * .ensureBruteBaseline]]): `q_ann_recall`'s graph tier reads it
     * while `q_ann_hnsw` prices the live search. */
   def ensureGraph(spark: org.apache.spark.sql.SparkSession,
-                  emb: DataFrame, dir: String): String = synchronized {
-    val root = graphRoot(dir)
-    val marker = new java.io.File(root, "_HNSW_OK")
-    val head = s"$GraphFixtureVersion\n$dir\n"
-    val ok = marker.exists() && scala.util.Try {
-      val txt = java.nio.file.Files.readString(marker.toPath)
-      txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-        ((0 to MaxLevel).map(l => s"e$l") :+ "t10").forall(s =>
-          new java.io.File(s"$root/$s/_SUCCESS").exists()) &&
-        spark.read.parquet(s"$root/e0").count() ==
-          txt.split("\n", -1)(2).toLong
-    }.getOrElse(false)
-    if (!ok) {
+                  emb: DataFrame, dir: String): String =
+    graft.ops.FixtureStore.ensure("hnsw", dir,
+      parts = (0 to MaxLevel).map(l => s"e$l") :+ "t10",
+      rows = root => spark.read.parquet(s"$root/e0").count()) { root =>
       val base = graft.ops.SideCache.persist(withLevels(emb))
       val dstSide = base.select(col("vec_id").as("dst"),
         col("embedding").as("demb"), col("nrm").as("dnrm"))
@@ -198,11 +180,7 @@ object Hnsw {
         graft.ops.SideCache.persist(spark.read.parquet(s"$root/e$l")))
       val (_, _, top10) = search(base, adjs)
       top10.coalesce(1).write.mode("overwrite").parquet(s"$root/t10")
-      val n = spark.read.parquet(s"$root/e0").count()
-      java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
     }
-    root
-  }
 
   // ------------------------------------------------------ driver tier
   //

@@ -672,9 +672,9 @@ object Similarity {
   def ivfPqCompactDelete(spark: org.apache.spark.sql.SparkSession,
                          path: String, deleted: DataFrame,
                          segments: Seq[String]): Seq[String] =
-    Similarity.synchronized { // same lock as ensureStoredIndex: concurrent
-      // suites in one JVM share the content-keyed root; two compactions
-      // racing would compute the same gen and clobber each other's writes
+    graft.ops.FixtureStore.locked(path) { // the root's build lock:
+      // consumers share the stored root; two compactions racing would
+      // compute the same gen and clobber each other's writes
     import spark.implicits._
     // fresh generation number: one past the newest COMMITTED manifest
     // (a crashed attempt's orphan gets overwritten, never resurrected)
@@ -706,24 +706,17 @@ object Similarity {
     //    = split count, each split single-cid).
     //    Independent per-segment rewrites run CONCURRENTLY (guide
     //    §2.6, overlap independent jobs): each write targets its own
-    //    fresh generation directory, so a 2-3 thread pool lets the
+    //    fresh generation directory, so overlapping them lets the
     //    next segment's tasks back-fill the cores the previous
-    //    segment's write tail frees. Failures propagate via get().
-    val writePool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(livePaths.size, 3)))
-    try {
-      livePaths.map { case (seg, livePath) =>
-        writePool.submit(new Runnable {
-          def run(): Unit =
-            spark.read.parquet(s"$path/${prevLive.getOrElse(seg, seg)}")
-              .join(broadcast(deleted.select("vec_id")), Seq("vec_id"),
-                "left_anti")
-              .select(col("vec_id"), col("codes"), col("cid"))
-              .write.mode("overwrite").partitionBy("cid")
-              .parquet(s"$path/$livePath")
-        })
-      }.foreach(_.get())
-    } finally writePool.shutdown()
+    //    segment's write tail frees.
+    graft.ops.DriverPar.all(livePaths.map { case (seg, livePath) => () =>
+      spark.read.parquet(s"$path/${prevLive.getOrElse(seg, seg)}")
+        .join(broadcast(deleted.select("vec_id")), Seq("vec_id"),
+          "left_anti")
+        .select(col("vec_id"), col("codes"), col("cid"))
+        .write.mode("overwrite").partitionBy("cid")
+        .parquet(s"$path/$livePath")
+    })
     // 2. FLIP: commit the manifest pointer as its own immutable
     //    `livelog/v$gen` (the q_time_travel pattern — the _SUCCESS
     //    marker is the commit point, so the swap is all-or-nothing).
@@ -762,27 +755,13 @@ object Similarity {
     livePaths.map(_._2)
   }
 
-  /** Bumped when the stored-index FIXTURE layout/derivation changes —
-    * an older marker fails validation and the fixture recommits. */
-  val IndexFixtureVersion = 1
-
-  /** Root of the shared content-keyed stored-index fixture for a
-    * dataset: `full` = one base segment over the whole corpus;
-    * `split9` = base (vec_id % 9 ≠ 0) + frozen-quantizer delta
-    * (≡ 0 mod 9) — the `q_ann_upsert` layout. */
-  def indexRoot(dir: String, split9: Boolean): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val variant = if (split9) "split9" else "full"
-    s"${System.getProperty("java.io.tmpdir")}/graft_annix_${variant}_$key"
-  }
-
   /** CONTENT-KEYED stored-index commit (the `VersionChain.ensure`
     * precedent, blessed for the maintenance tier in round 13): the
     * serve/upsert/merge/delete queries all read the SAME immutable
-    * base(+delta) index per dataset, built once behind a marker
-    * written LAST (a crashed build recommits). Validation on reuse:
-    * fixture version + dataset + every segment's `_SUCCESS` + the
-    * meta table + a footer-only count of the codes rows. Consumers
+    * base(+delta) index per dataset, built once as a
+    * [[graft.ops.FixtureStore]] root. Validation on reuse: the store
+    * key + every segment's `_SUCCESS` + the meta table + a
+    * footer-only count of the codes rows. Consumers
     * that MUTATE state do so additively (compaction writes fresh
     * `_live_g<N>` generations + livelog; merge writes its own target
     * segment) — the base segments are never touched, which is what
@@ -792,40 +771,17 @@ object Similarity {
     * thing. */
   def ensureStoredIndex(spark: org.apache.spark.sql.SparkSession,
                         emb: DataFrame, dir: String,
-                        split9: Boolean): String = synchronized {
-    val root = indexRoot(dir, split9)
-    val marker = new java.io.File(root, "_INDEX_OK")
-    val head = s"$IndexFixtureVersion\n$dir\n$split9\n"
-    if (marker.exists()) {
-      val segs = Seq("codes", "cents", "seeds", "meta") ++
-        (if (split9) Seq("codes_delta") else Nil)
-      // torn/corrupt marker ⇒ invalid ⇒ recommit (never throw)
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 4 &&
-          segs.forall(s1 => new java.io.File(s"$root/$s1/_SUCCESS").exists()) &&
-          spark.read.parquet(s"$root/codes").count() ==
-            txt.split("\n", -1)(3).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+                        split9: Boolean): String =
+    graft.ops.FixtureStore.ensure(
+      if (split9) "annix_split9" else "annix_full", dir,
+      parts = Seq("codes", "cents", "seeds", "meta") ++
+        (if (split9) Seq("codes_delta") else Nil),
+      rows = root => spark.read.parquet(s"$root/codes").count()) { root =>
+      if (split9) {
+        ivfPqIndexWrite(emb.filter(col("vec_id") % 9 =!= 0), root)
+        ivfPqUpsertDelta(emb.filter(col("vec_id") % 9 === 0), root)
+      } else ivfPqIndexWrite(emb, root)
     }
-    if (split9) {
-      ivfPqIndexWrite(emb.filter(col("vec_id") % 9 =!= 0), root)
-      ivfPqUpsertDelta(emb.filter(col("vec_id") % 9 === 0), root)
-    } else ivfPqIndexWrite(emb, root)
-    val n = spark.read.parquet(s"$root/codes").count()
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
-    root
-  }
-
-  /** Bumped when the brute-baseline derivation changes. */
-  val BruteBaselineVersion = 1
-
-  def bruteBaselineRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_brute10_$key"
-  }
 
   /** CONTENT-KEYED stored brute-force cosine truth (round 16, r15
     * advice #7): four queries re-derived the identical full-corpus
@@ -841,23 +797,12 @@ object Similarity {
     * evaluation actually runs: ground truth is materialized once per
     * corpus snapshot and reused across every index configuration. */
   def ensureBruteBaseline(spark: org.apache.spark.sql.SparkSession,
-                          emb: DataFrame, dir: String): DataFrame =
-    synchronized {
-    val root = bruteBaselineRoot(dir)
-    val marker = new java.io.File(root, "_BRUTE_OK")
-    val head = s"$BruteBaselineVersion\n$dir\n"
-    val ok = marker.exists() && scala.util.Try {
-      val txt = java.nio.file.Files.readString(marker.toPath)
-      txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-        new java.io.File(s"$root/topk/_SUCCESS").exists() &&
-        spark.read.parquet(s"$root/topk").count() ==
-          txt.split("\n", -1)(2).toLong
-    }.getOrElse(false)
-    if (!ok) {
+                          emb: DataFrame, dir: String): DataFrame = {
+    val root = graft.ops.FixtureStore.ensure("brute10", dir,
+      parts = Seq("topk"),
+      rows = root => spark.read.parquet(s"$root/topk").count()) { root =>
       bruteTopK(emb, queryMod = 50L, k = 10)
         .coalesce(1).write.mode("overwrite").parquet(s"$root/topk")
-      val n = spark.read.parquet(s"$root/topk").count()
-      java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
     }
     spark.read.parquet(s"$root/topk")
   }
@@ -878,7 +823,7 @@ object Similarity {
   def ivfPqMergeSegments(spark: org.apache.spark.sql.SparkSession,
                          path: String, segments: Seq[String],
                          target: String): Unit =
-    Similarity.synchronized { // shared content-keyed root: a concurrent
+    graft.ops.FixtureStore.locked(path) { // shared stored root: a concurrent
       // merge overwriting the target mid-read would corrupt a serve
     val meta = readIndexMeta(spark, path)
     // ONE width-probe job for all source segments (was one head() per

@@ -486,51 +486,27 @@ object Dedup {
 
   /** Near-dup pairs by hamming distance ≤ `maxHamming` (< 16), using
     * the pigeonhole block join over four 16-bit blocks. */
-  /** Bumped when the stored pair-graph derivation changes. */
-  val PairGraphVersion = 1
-
-  def pairGraphRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_pairs_$key"
-  }
-
   /** CONTENT-KEYED stored near-dup pair graph + component labels (the
     * `VersionChain.ensure` precedent): the simhash hamming ≤ 3 pair
     * set and its wccStar component labels, committed once per dataset
-    * behind a marker written LAST. In production this artifact is a
+    * as a [[graft.ops.FixtureStore]] root. In production this artifact is a
     * byproduct of the dedup pipeline itself — consumers like the
     * split-leakage audit read the EXISTING graph rather than
     * recomputing LSH + O(log² n) WCC rounds per query. Validation on
-    * reuse: version + dataset + both tables' `_SUCCESS` + a
-    * footer-only pair count. */
+    * reuse: the store key + both tables' `_SUCCESS` + a footer-only
+    * pair count. */
   def ensurePairGraph(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): String = synchronized {
-    val root = pairGraphRoot(dir)
-    val marker = new java.io.File(root, "_PAIRS_OK")
-    val head = s"$PairGraphVersion\n$dir\n"
-    if (marker.exists()) {
-      // torn/corrupt marker ⇒ invalid ⇒ recommit (never throw)
-      val ok = scala.util.Try {
-        val txt = java.nio.file.Files.readString(marker.toPath)
-        txt.startsWith(head) && txt.split("\n", -1).length >= 3 &&
-          Seq("pairs", "labels").forall(t =>
-            new java.io.File(s"$root/$t/_SUCCESS").exists()) &&
-          spark.read.parquet(s"$root/pairs").count() ==
-            txt.split("\n", -1)(2).toLong
-      }.getOrElse(false)
-      if (ok) return root
-      marker.delete()
+                      dir: String): String =
+    graft.ops.FixtureStore.ensure("pairs", dir, parts = Seq("pairs", "labels"),
+      rows = root => spark.read.parquet(s"$root/pairs").count()) { root =>
+      val prs = graft.ops.SideCache.persist(
+        simhashPairs(graft.tables.Tables.documents(spark, dir),
+          maxHamming = 3).select("id_a", "id_b"))
+      prs.count() // materialize at full width: coalesce(1) below would not
+      prs.coalesce(1).write.mode("overwrite").parquet(s"$root/pairs")
+      wccStar(prs).coalesce(1).write.mode("overwrite")
+        .parquet(s"$root/labels")
     }
-    val prs = graft.ops.SideCache.persist(
-      simhashPairs(graft.tables.Tables.documents(spark, dir),
-        maxHamming = 3).select("id_a", "id_b"))
-    val n = prs.count()
-    prs.coalesce(1).write.mode("overwrite").parquet(s"$root/pairs")
-    wccStar(prs).coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/labels")
-    java.nio.file.Files.writeString(marker.toPath, s"$head$n\n")
-    root
-  }
 
   def simhashPairs(docs: DataFrame, id: String = "doc_id", text: String = "text",
                    maxHamming: Int = 3, maxBucket: Int = 1024): DataFrame = {

@@ -57,7 +57,7 @@ class ScaleTechniquesSpec extends SparkSpec {
     // drop the catalog entries (external tables — files stay) and
     // re-run; ensureBucketed must re-attach by DDL without rewriting
     SparkEntry.queries("q_join_bucketed")(spark, sf0001).count()
-    val root = graft.queries.ExtensionQueries.bucketedRoot(sf0001)
+    val root = graft.ops.FixtureStore.root("bucketed", sf0001)
     val before = new java.io.File(s"$root/cust").listFiles()
       .map(f => f.getName -> f.lastModified()).toMap
     val k = sf0001.replaceAll("[^A-Za-z0-9]+", "_")

@@ -67,6 +67,22 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(overflow.getMessage.contains("8192"))
   }
 
+  test("SQL-exposed kernels reject a wrong-typed argument at analysis") {
+    GraftFunctions.register(spark)
+    // analysis only: spark.sql analyzes eagerly and nothing executes,
+    // so a kernel that would misread its input cannot run here
+    for (call <- Seq(
+        "graft_poly_hash(array('a'))",
+        "graft_minhash_sig(array(1L, 2L))",
+        "graft_simhash64(array(1L, 2L))",
+        "graft_vec_dot(array(1L), array(CAST(1.0 AS FLOAT)))",
+        "graft_vec_dot_d(array(CAST(1.0 AS FLOAT)), array('a'))",
+        "graft_vec_norm(array('a'))",
+        "graft_shingle_hashes(array('a b'), 2)"))
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $call AS x"))
+  }
+
   test("extension class injects all builders without error") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext) // would throw on malformed injection

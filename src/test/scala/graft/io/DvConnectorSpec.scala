@@ -84,10 +84,8 @@ class DvConnectorSpec extends SparkSpec {
     // build (or reuse) the q_merge_dv fixture + the dvlake scenario at
     // sf0.001 by running the registered query once
     graft.SparkEntry.queries("q_lake_read_dv")(s, sf0001).collect()
-    val mcRoot = graft.queries.MaintenancePipelineQuery.mergeDvRoot(sf0001)
-    val key = sf0001.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dvRoot =
-      s"${System.getProperty("java.io.tmpdir")}/graft_dvlake_$key"
+    val mcRoot = graft.ops.FixtureStore.root("mergedv", sf0001)
+    val dvRoot = graft.ops.FixtureStore.root("dvlake", sf0001)
     val viaConnector = s.read.format("graftlake")
       .option("keyColumn", "custkey").load(dvRoot)
       .select("custkey", "nation", "bal")

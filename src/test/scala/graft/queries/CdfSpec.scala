@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class CdfSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val root = VersionChain.rootFor(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("verchain", sf0001)
   private lazy val feed = SparkEntry.queries("q_cdf_read")(spark, sf0001)
     .collect().toSeq
   private def byKey(v: Long, ct: String) =

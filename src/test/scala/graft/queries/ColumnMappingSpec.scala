@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * mapped physical column. */
 class ColumnMappingSpec extends SparkSpec {
 
-  private lazy val root = CoreQueries.columnMappingRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("colmap", sf0001)
 
   private lazy val rows = SparkEntry.queries("q_column_mapping")(
     spark, sf0001).collect().toSeq.sortBy(_.getInt(0))

@@ -10,15 +10,14 @@ import org.apache.spark.sql.functions._
 class GovernancePipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val root =
-    s"${System.getProperty("java.io.tmpdir")}/graft_forget"
+  private val root = graft.ops.FixtureStore.root("forget", sf0001)
 
   private lazy val rows = SparkEntry.queries("q_forget_pipeline")(spark, sf0001)
     .collect().toSeq
 
   test("live artifacts retain zero tombstoned keys; originals still do") {
     rows // force the run
-    val annRoot = graft.sim.Similarity.indexRoot(sf0001, split9 = false)
+    val annRoot = graft.ops.FixtureStore.root("annix_full", sf0001)
     val liveCodes = graft.sim.Similarity.liveSegments(
       spark, annRoot, Seq("codes")).head
     assert(liveCodes != "codes", "ann tier was never compacted")

@@ -203,7 +203,8 @@ class MaintenanceCommitSpec extends SparkSpec {
     assert(cloneLog.last._2.op === "expire" &&
       cloneLog.last._2.partitions === Seq("gen0", "gen1"))
     // the shared owner's log is untouched by the clone's commit
-    assert(CommitLog.committedVersions(VersionChain.rootFor(sf0001)) ===
+    assert(CommitLog.committedVersions(
+        graft.ops.FixtureStore.root("verchain", sf0001)) ===
       Seq(1L, 2L, 3L, 4L))
   }
 }

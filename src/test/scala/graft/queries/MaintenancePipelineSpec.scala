@@ -30,7 +30,7 @@ class MaintenancePipelineSpec extends SparkSpec {
     assert(ret._3 > 0 && del._3 > 0, "the sweep must genuinely split")
     // the rewrites are real: the chain's compacted and retained
     // generations on disk, one parquet file per bin directory
-    val root = graft.ops.VersionChain.rootFor(sf0001)
+    val root = graft.ops.FixtureStore.root("verchain", sf0001)
     for (sub <- Seq("gen1", "gen2")) {
       val dirs = new java.io.File(s"$root/$sub")
         .listFiles().filter(_.getName.startsWith("bin="))

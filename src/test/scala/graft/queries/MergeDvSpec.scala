@@ -16,7 +16,7 @@ class MergeDvSpec extends SparkSpec {
     .collect().map(r => r.getString(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
 
-  private lazy val root = MaintenancePipelineQuery.mergeDvRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("mergedv", sf0001)
 
   private def parquetFiles(p: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =

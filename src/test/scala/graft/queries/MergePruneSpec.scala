@@ -36,7 +36,7 @@ class MergePruneSpec extends SparkSpec {
   }
 
   test("the stored per-file stats equal the files they describe") {
-    val root = MaintenancePipelineQuery.mergeRoot(sf0001)
+    val root = graft.ops.FixtureStore.root("merge", sf0001)
     val man = MaintenancePipelineQuery.mergeManifest(spark, root)
     assert(man.forall(f => f.min_key <= f.max_key && f.n_rows > 0))
     // spot-check every file: footer-cheap per-file aggregates

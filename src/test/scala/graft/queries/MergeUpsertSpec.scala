@@ -16,7 +16,7 @@ class MergeUpsertSpec extends SparkSpec {
 
   private lazy val rows = SparkEntry.queries("q_merge_upsert")(spark, sf0001)
     .collect().toSeq
-  private lazy val root = MaintenancePipelineQuery.mergeRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("merge", sf0001)
   private lazy val man = {
     rows // force the commit
     MaintenancePipelineQuery.mergeManifest(spark, root)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PartitionEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val root = MaintenancePipelineQuery.partEvoRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("part_evo", sf0001)
 
   private lazy val rows =
     SparkEntry.queries("q_partition_evolution")(spark, sf0001)

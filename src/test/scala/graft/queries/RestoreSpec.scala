@@ -36,7 +36,7 @@ class RestoreSpec extends SparkSpec {
     assert(head.version == 4L && head.op == "restore" && head.path == "gen1")
     // path resolution lands on the SHARED root's gen1 (no local copy)
     val resolved = VersionChain.resolvePath(root, head.path)
-    assert(resolved.startsWith(VersionChain.rootFor(sf0001)),
+    assert(resolved.startsWith(graft.ops.FixtureStore.root("verchain", sf0001)),
       s"restored read resolves to $resolved, not the shared gen1")
     // and the restored content IS v1's content, bit for bit
     val (_, v4) = VersionChain.asOf(spark, root, log, 4L)
@@ -62,7 +62,7 @@ class RestoreSpec extends SparkSpec {
     val post = byVersion(71L)
     val pre = byVersion(72L)
     // re-inserts = v2's removes; update posts/pres = v3's pairs swapped
-    val sharedRoot = VersionChain.rootFor(sf0001)
+    val sharedRoot = graft.ops.FixtureStore.root("verchain", sf0001)
     val v2Removes = spark.read.parquet(s"$sharedRoot/cdf/v2").count()
     val v3Pairs = spark.read.parquet(s"$sharedRoot/cdf/v3")
     val nUpd = v3Pairs.filter("change_type = 'update_pre'").count()
@@ -75,7 +75,7 @@ class RestoreSpec extends SparkSpec {
 
   test("the shared root is untouched by a restore") {
     rows
-    val shared = VersionChain.rootFor(sf0001)
+    val shared = graft.ops.FixtureStore.root("verchain", sf0001)
     assert(!new java.io.File(s"$shared/cdf/v4").exists(),
       "restore wrote its CDF into the SHARED root")
     val sharedLog = VersionChain.manifest(spark, shared)

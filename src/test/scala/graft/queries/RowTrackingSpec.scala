@@ -42,9 +42,7 @@ class RowTrackingSpec extends SparkSpec {
     // re-run to ensure the artifact exists, then compare the stored
     // compacted table against a per-key recomputation of gen0 ids
     SparkEntry.queries("q_row_tracking")(s, sf0001).collect()
-    val key = sf0001.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root =
-      s"${System.getProperty("java.io.tmpdir")}/graft_rowtrack_$key"
+    val root = graft.ops.FixtureStore.root("rowtrack", sf0001)
     val compacted = s.read.parquet(s"$root/compacted")
       .select("row_id", "event_id").as[(Long, Long)].collect().toMap
     // survivors from the ORIGINAL population must carry their ingest

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 class SchemaWideningSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val root = CoreQueries.schemaWidenRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("schema_widen", sf0001)
 
   private lazy val rows =
     SparkEntry.queries("q_schema_widening")(spark, sf0001)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
-import graft.ops.VersionChain
+import graft.ops.{FixtureStore, VersionChain}
 
 /** q_time_travel: the versioned read must genuinely resolve THROUGH
   * the stored manifest to four immutable generations — all four
@@ -12,7 +12,7 @@ import graft.ops.VersionChain
   * stored CHANGE-DATA-FEED deltas, never from snapshot scans. */
 class TimeTravelSpec extends SparkSpec {
 
-  private lazy val root = VersionChain.rootFor(sf0001)
+  private lazy val root = FixtureStore.root("verchain", sf0001)
 
   private lazy val df = SparkEntry.queries("q_time_travel")(spark, sf0001)
   private lazy val rows = df.collect().toSeq.sortBy(_.getLong(0))
@@ -69,7 +69,7 @@ class TimeTravelSpec extends SparkSpec {
 
   test("the content-keyed commit is reused, and a broken marker recommits") {
     rows // force commits
-    val marker = new java.io.File(s"$root/_CHAIN_OK")
+    val marker = new java.io.File(root, FixtureStore.Marker)
     assert(marker.exists(), "chain committed without its marker")
     val mtime = marker.lastModified()
     // a second consumer run resolves the stored chain — no recommit
@@ -81,7 +81,7 @@ class TimeTravelSpec extends SparkSpec {
     val root2 = VersionChain.ensure(spark, sf0001)
     assert(root2 === root)
     val txt = java.nio.file.Files.readString(marker.toPath)
-    assert(txt.startsWith(s"${VersionChain.ChainVersion}\n"),
+    assert(txt.startsWith(s"${FixtureStore.codeFingerprint}\nverchain\n$sf0001\n"),
       "invalid marker was not replaced by a recommit")
   }
 

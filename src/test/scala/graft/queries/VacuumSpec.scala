@@ -38,7 +38,7 @@ class VacuumSpec extends SparkSpec {
       "clone holds parquet outside its manifest")
     // the SHARED chain is untouched: the owner still references every
     // generation, so refcounted retirement must not reclaim anything
-    val shared = VersionChain.rootFor(sf0001)
+    val shared = graft.ops.FixtureStore.root("verchain", sf0001)
     for (g <- Seq("gen0", "gen1", "gen2", "gen3"))
       assert(new java.io.File(s"$shared/$g/_SUCCESS").exists(),
         s"vacuum reclaimed a generation the owner references ($g)")
@@ -87,7 +87,7 @@ class VacuumSpec extends SparkSpec {
 
   test("zero-reference retirement actually deletes on an owned chain") {
     rows
-    val shared = VersionChain.rootFor(sf0001)
+    val shared = graft.ops.FixtureStore.root("verchain", sf0001)
     val owned =
       s"${System.getProperty("java.io.tmpdir")}/graft_vacuum_owned_test"
     VersionChain.copyTo(shared, owned) // an OWNED copy: its own data root

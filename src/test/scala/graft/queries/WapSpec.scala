@@ -9,7 +9,7 @@ import graft.ops.CommitLog
   * main, and the flow is idempotent. */
 class WapSpec extends SparkSpec {
 
-  private lazy val root = MaintenancePipelineQuery.wapRoot(sf0001)
+  private lazy val root = graft.ops.FixtureStore.root("wap", sf0001)
 
   private lazy val rows = SparkEntry.queries("q_wap")(spark, sf0001)
     .collect().toSeq.sortBy(_.getString(0))

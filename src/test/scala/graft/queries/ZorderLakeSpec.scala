@@ -13,10 +13,7 @@ import org.apache.spark.sql.functions._
   * reorganization commutes with a concurrent key-domain MERGE. */
 class ZorderLakeSpec extends SparkSpec {
 
-  private def root: String = {
-    val key = sf0001.replaceAll("[^A-Za-z0-9.]+", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_zorder_lake_$key"
-  }
+  private def root: String = graft.ops.FixtureStore.root("zorder_lake", sf0001)
 
   private def build(): Unit =
     graft.SparkEntry.queries("q_zorder_layout")(spark, sf0001).collect()

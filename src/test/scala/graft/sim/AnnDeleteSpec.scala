@@ -14,7 +14,7 @@ class AnnDeleteSpec extends SparkSpec {
 
   private lazy val rows = SparkEntry.queries("q_ann_delete")(spark, sf0001)
     .collect().toSeq
-  private lazy val root = Similarity.indexRoot(sf0001, split9 = true)
+  private lazy val root = graft.ops.FixtureStore.root("annix_split9", sf0001)
 
   test("a deleted vector is never served, on either tier") {
     val served = rows.filter(r => r.getString(0).startsWith("serve_"))
@@ -161,5 +161,23 @@ class AnnDeleteSpec extends SparkSpec {
     assert(Similarity.liveSegments(spark, root2, Seq("codes_delta")).head
       === deltaLiveBefore)
     graft.ops.VersionChain.rmTree(new java.io.File(root2))
+  }
+
+  test("a rebuilt stored index serves its own base, not the previous " +
+    "build's compacted generations") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val root = Similarity.ensureStoredIndex(spark, emb, sf0001, split9 = false)
+    Similarity.ivfPqCompactDelete(spark, root,
+      emb.filter(col("vec_id") % 11 === 0).select("vec_id"), Seq("codes"))
+    assert(Similarity.liveSegments(spark, root, Seq("codes")) !== Seq("codes"))
+    // tear the fixture marker: the next ensure must rebuild
+    val markers = new java.io.File(root).listFiles().toSeq
+      .filter(f => f.getName.startsWith("_") && f.getName.endsWith("_OK"))
+    assert(markers.nonEmpty, "the stored index has no fixture marker")
+    markers.foreach(m => java.nio.file.Files.writeString(m.toPath, "torn"))
+    assert(Similarity.ensureStoredIndex(spark, emb, sf0001, split9 = false)
+      === root)
+    assert(Similarity.liveSegments(spark, root, Seq("codes")) === Seq("codes"),
+      "readers still resolve a generation compacted from the previous build")
   }
 }

@@ -49,7 +49,7 @@ class AnnServeSpec extends SparkSpec {
     assert(plan.contains("codes_delta"))
     // segment isolation + completeness: base holds exactly the
     // existing vectors, delta exactly the delta, no overlap
-    val root = Similarity.indexRoot(sf0001, split9 = true)
+    val root = graft.ops.FixtureStore.root("annix_split9", sf0001)
     val base = spark.read.parquet(s"$root/codes").select("vec_id")
       .as[Long].collect().toSet
     val delta = spark.read.parquet(s"$root/codes_delta").select("vec_id")
@@ -130,7 +130,7 @@ class AnnServeSpec extends SparkSpec {
     val got = merged.collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(got.nonEmpty)
     // bit-equality with the two-segment serve over the same index
-    val root = Similarity.indexRoot(sf0001, split9 = true)
+    val root = graft.ops.FixtureStore.root("annix_split9", sf0001)
     val two = Similarity.ivfPqServeStored(
         Tables.embeddings(spark, sf0001), root, queryMod = 50L,
         kCand = 100, k = 10, segments = Seq("codes", "codes_delta"))
@@ -169,7 +169,7 @@ class AnnServeSpec extends SparkSpec {
   test("the stored codes table is bucket-partitioned (one dir per cid)") {
     SparkEntry.queries("q_ann_serve")(spark, sf0001).count()
     val codesDir = new java.io.File(
-      s"${Similarity.indexRoot(sf0001, split9 = false)}/codes")
+      s"${graft.ops.FixtureStore.root("annix_full", sf0001)}/codes")
     val buckets = codesDir.listFiles().filter(_.getName.startsWith("cid="))
     assert(buckets.length > 1,
       "codes table must be partitioned by IVF bucket id")

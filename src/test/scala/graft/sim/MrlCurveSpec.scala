@@ -26,7 +26,7 @@ class MrlCurveSpec extends SparkSpec {
     val n = Similarity.ensureBruteBaseline(spark, emb, sf0001).count()
     assert(rows.values.forall(_._1 == n))
     assert(new java.io.File(
-      s"${Similarity.bruteBaselineRoot(sf0001)}/_BRUTE_OK").exists())
+      s"${graft.ops.FixtureStore.root("brute10", sf0001)}/${graft.ops.FixtureStore.Marker}").exists())
   }
 
   test("a truncated point equals the live sliced recomputation") {

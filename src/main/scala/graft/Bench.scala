@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,17 +34,10 @@ object Bench {
         f"(cap ${capSec}s, load $loadStart%.2f -> ${osBean.getSystemLoadAverage}%.2f)")
     }
     val loadAfterWait = osBean.getSystemLoadAverage
-    // Bench environment contract: local[32] (all cores of the single
+    // Bench environment contract: local[cores] (all cores of the single
     // JVM), spark.sql.shuffle.partitions = cores — not 200, not 4.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.io.GraftLakeExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Runner.cores
+    val spark = Runner.session(cpus)
     // Warmup outside the timed region: (a) session bring-up (~6 s) and
     // one open of each base table (parquet footer reads, codec init);
     // (b) one run of every query SHAPE on the tiniest scale factor —
@@ -69,16 +61,7 @@ object Bench {
         else sfDir
       }
       if (warmDir != sfDir)
-        SparkEntry.queries
-          .filter { case (name, _) => only.forall(_.contains(name)) }
-          .foreach { case (name, fn) =>
-          try { fn(spark, warmDir).count() }
-          catch { case _: Throwable => () }
-          finally {
-            graft.ops.SideCache.releaseAll()
-            spark.catalog.clearCache()
-          }
-        }
+        Runner.eachQuery(spark, "bench warmup", only)((_, fn) => fn(spark, warmDir).count())
       // one untimed pass at the TARGET SF: the sf0.001 warmup compiles
       // each plan's codegen classes, but the C2 compile queue is still
       // draining when timing starts, so the alphabetically-first
@@ -86,16 +69,7 @@ object Bench {
       // isolation: q_agg_pricing 0.58 s steady vs 3.1 s as the first
       // timed query). One full-size pass drains the queue and touches
       // the target-SF code paths before anything is measured.
-      SparkEntry.queries
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .foreach { case (_, fn) =>
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => () }
-        finally {
-          graft.ops.SideCache.releaseAll()
-          spark.catalog.clearCache()
-        }
-      }
+      Runner.eachQuery(spark, "bench warmup", only)((_, fn) => fn(spark, sfDir).count())
     } catch { case _: Throwable => () }
     // min of N reps per query (default 3 — a quiet-host 2-rep min is
     // still noisy, round-9 verdict blemish #3): the bench host shows
@@ -129,36 +103,29 @@ object Bench {
     // cross-round comparison.
     val loadedHostAtStart = loadStart > 1.0
     val loadedHost = loadAfterWait > 1.0
-    // a rep that throws is reported on stderr and never timed
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $e")
-          false
+    // a rep that throws is reported on stderr and never timed; the
+    // release after every rep (untimed) keeps reps independent and the
+    // run free of accumulated cache pressure
+    def runOnce(name: String): Option[Double] = {
+      var dt = 0.0
+      val failed = Runner.eachQuery(spark, "bench", Some(Set(name))) { (_, fn) =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        dt = (System.nanoTime() - t0) / 1e9
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop persisted blocks between queries/reps: keeps numbers
-      // independent and the run free of accumulated cache pressure
-      // (releaseAll also empties the side-table registry so its
-      // Dataset refs don't accumulate across 117 queries × reps)
-      graft.ops.SideCache.releaseAll()
-      spark.catalog.clearCache()
-      if (ok) Some(dt) else None
+      if (failed.isEmpty) Some(dt) else None
     }
     // n reps, stopping at the first failure (None: the query failed)
-    def timedReps(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  n: Int): Option[Seq[Double]] = {
-      val ts = Iterator.fill(n)(runOnce(name, fn)).takeWhile(_.isDefined).flatten.toSeq
+    def timedReps(name: String, n: Int): Option[Seq[Double]] = {
+      val ts = Iterator.fill(n)(runOnce(name)).takeWhile(_.isDefined).flatten.toSeq
       if (ts.length == n) Some(ts) else None
     }
-    val outcomes = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val times = timedReps(name, fn, reps).flatMap { base =>
+    val outcomes = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map { name =>
+      val times = timedReps(name, reps).flatMap { base =>
         if ((loadedHost || base.max / base.min > spreadLimit) && maxReps > reps)
-          timedReps(name, fn, maxReps - reps).map(base ++ _)
+          timedReps(name, maxReps - reps).map(base ++ _)
         else Some(base)
       }
       times.foreach { ts =>

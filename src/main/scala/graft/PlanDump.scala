@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan dump: write `.explain("formatted")` for named queries to files.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <name> [<name> ...]
@@ -16,35 +14,17 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.io.GraftLakeExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (name <- names) {
-      try {
-        // lookup inside the try (ADVICE r19): one mistyped name prints
-        // FAILED and the dump continues with the remaining queries
-        val fn = SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown query: $name"))
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-          txt.getBytes("UTF-8"))
-        println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
-      } catch {
-        case e: Throwable =>
-          println(s"[plandump] FAILED $name: ${e.getMessage}")
-      } finally {
-        graft.ops.SideCache.releaseAll()
-        spark.catalog.clearCache()
-      }
+    names.filterNot(SparkEntry.queries.contains)
+      .foreach(name => System.err.println(s"[plandump] $name FAILED: unknown query"))
+    Runner.eachQuery(spark, "plandump", Some(names.toSet)) { (name, fn) =>
+      val txt = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
+        txt.getBytes("UTF-8"))
+      println(s"[plandump] wrote $outDir/${name}_$suffix.txt")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.io
 
-import graft.ops.{CommitLog, LakeRead, StreamCommit}
+import graft.ops.{CommitLog, LakeRead, StreamCommit, VersionChain}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -170,9 +170,9 @@ object GraftLakeSource {
         // the name is squatted by a torn dir, not a winner: clear it
         // and retry once (a rival doing the same is harmless — one
         // rename wins, the final check below guards the rest)
-        rmTreeLocal(cache)
-        if (!attempt.renameTo(cache)) rmTreeLocal(attempt)
-      } else rmTreeLocal(attempt)
+        VersionChain.rmTree(cache)
+        if (!attempt.renameTo(cache)) VersionChain.rmTree(attempt)
+      } else VersionChain.rmTree(attempt)
     }
     require(published,
       s"layered-cache publish failed: ${cache.getPath} has no _SUCCESS " +
@@ -221,7 +221,7 @@ object GraftLakeSource {
       .filter(d => d.isDirectory && !liveCaches(d.getName) &&
         d.lastModified() < cutoff)
       .foreach { d =>
-        rmTreeLocal(d); swept += s"_lake_cache/${d.getName}"
+        VersionChain.rmTree(d); swept += s"_lake_cache/${d.getName}"
       }
     // 3: unreferenced, old-enough staging under data/. The reference
     // set is the CONSERVATIVE one: committed, aborted, AND in-flight
@@ -251,21 +251,15 @@ object GraftLakeSource {
           unreferenced(s"data/$sn/${b.getName}")
       }
       .foreach { case (sn, b) =>
-        rmTreeLocal(b); swept += s"data/$sn/${b.getName}"
+        VersionChain.rmTree(b); swept += s"data/$sn/${b.getName}"
       }
     topDirs.filterNot(_.getName.startsWith("stream_"))
       .filter(d => d.lastModified() < cutoff &&
         unreferenced(s"data/${d.getName}"))
       .foreach { d =>
-        rmTreeLocal(d); swept += s"data/${d.getName}"
+        VersionChain.rmTree(d); swept += s"data/${d.getName}"
       }
     swept.toSeq.sorted
-  }
-
-  private def rmTreeLocal(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(rmTreeLocal))
-    f.delete(); ()
   }
 
   /** Parse an owner directory's manifest: partition → file statuses,
@@ -679,8 +673,7 @@ class GraftLakeDataSource extends RelationProvider
         // stage each attempt into a fresh dir (the loser's staging
         // stays invisible, reclaimable via sweepOrphanStaging; the
         // previous attempt is reclaimed eagerly)
-        lastAttempt.foreach(p => graft.ops.VersionChain
-          .rmTree(new java.io.File(s"$root/$p")))
+        lastAttempt.foreach(p => VersionChain.rmTree(new java.io.File(s"$root/$p")))
         val attempt = s"data/${writer}_$uuid8"
         lastAttempt = Some(attempt)
         val full = partCol match {
@@ -760,13 +753,13 @@ class GraftLakeDataSource extends RelationProvider
       // sweepOrphanStaging's territory) — reclaim it here or it leaks
       // invisibly forever
       if (lastAttempt.isDefined)
-        graft.ops.VersionChain.rmTree(new java.io.File(s"$root/$stage0"))
+        VersionChain.rmTree(new java.io.File(s"$root/$stage0"))
       throw t
     }
     // an append's winning entry references its attempt dir; the staged
     // input was private scratch — reclaim it eagerly
     if (lastAttempt.isDefined)
-      graft.ops.VersionChain.rmTree(new java.io.File(s"$root/$stage0"))
+      VersionChain.rmTree(new java.io.File(s"$root/$stage0"))
     createRelation(sqlContext, parameters)
   }
 
@@ -1045,7 +1038,7 @@ class GraftLakeSink(sqlContext: SQLContext, root: String,
     val batch = spark.createDataFrame(rowRdd, schema)
     def uuid8 = java.util.UUID.randomUUID().toString.take(8)
     def rm(p: String): Unit =
-      graft.ops.VersionChain.rmTree(new java.io.File(s"$root/$p"))
+      VersionChain.rmTree(new java.io.File(s"$root/$p"))
     // ONE SCAN of the micro-batch, total: the input is staged ONCE
     // (lazily, inside the first stageAt call — a detected re-delivery
     // must still never write a byte), and the touched-partition set,

@@ -502,8 +502,8 @@ object CommitLog {
   private def retireSlot(d: java.io.File): Unit = {
     val tomb = new java.io.File(d.getParentFile,
       s"_retired_${d.getName}_${java.util.UUID.randomUUID().toString.take(8)}")
-    if (d.renameTo(tomb)) rmTree(tomb)
-    else rmTree(d) // rename refused (alien FS) — fall back, best effort
+    if (d.renameTo(tomb)) VersionChain.rmTree(tomb)
+    else VersionChain.rmTree(d) // rename refused (alien FS) — fall back, best effort
   }
 
   private def entryFile(d: java.io.File) = new java.io.File(d, "entry.tsv")
@@ -879,11 +879,6 @@ object CommitLog {
     }.foreach { case (_, d) => retireSlot(d) }
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
-
   /** [[resolveAsOf]]'s fold with a per-partition LAYER FLAG: true when
     * the winning entry declares a key domain for that partition (it is
     * a layer, not a full owner). Checkpoint owners are always full
@@ -1099,7 +1094,7 @@ object CommitLog {
       .filterNot(p => live.exists(nests(p, _)))
     orphans.flatMap { p =>
       val f = new java.io.File(root, p)
-      if (f.exists()) { rmTree(f); Some(p) } else None
+      if (f.exists()) { VersionChain.rmTree(f); Some(p) } else None
     }.sorted
   }
 }

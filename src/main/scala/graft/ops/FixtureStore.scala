@@ -101,7 +101,9 @@ object FixtureStore {
       }.getOrElse(false)
       if (!hit) {
         VersionChain.rmTree(new File(root))
-        build(root)
+        // a side table left pinned over a stored path would serve later
+        // plain reads of it from the cache (input_file_name reads "")
+        SideCache.releasingNew(build(root))
         new File(root).mkdirs()
         val tmp = new File(root, s"$Marker.tmp").toPath
         Files.writeString(tmp, s"$key${rows(root)}\n")

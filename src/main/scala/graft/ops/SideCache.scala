@@ -41,6 +41,20 @@ object SideCache {
     while (d != null) { d.unpersist(blocking = false); d = live.poll() }
   }
 
+  /** Run `body`, then unpersist and deregister every side table it
+    * registered; tables registered before it stay. A side table that a
+    * concurrent caller registers meanwhile (a sibling [[DriverPar]]
+    * task) is released too — it only recomputes on next use. */
+  def releasingNew[T](body: => T): T = {
+    val before = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Dataset[_], java.lang.Boolean]())
+    live.forEach(d => before.add(d))
+    try body
+    finally live.forEach { d =>
+      if (!before.contains(d) && live.remove(d)) d.unpersist(blocking = false)
+    }
+  }
+
   /** Registered-but-unreleased side tables (diagnostic/test hook —
     * does not drain the registry). */
   def liveSnapshot: Seq[Dataset[_]] = {

@@ -230,8 +230,10 @@ object VersionChain {
     ()
   }
 
+  /** Recursive delete; a directory that vanishes or cannot be listed
+    * midway is skipped, never thrown on. */
   def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete(); ()
   }
 

@@ -2821,9 +2821,6 @@ object MaintenancePipelineQuery {
     graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
       "merge", "merge_upsert", "filemanifest/v1",
       touched.toSeq.sorted.map(_.toString), 1L))
-    // a left-over cached gen0 would stand in for later plain reads of
-    // the stored files (input_file_name reads "" under a cached scan)
-    graft.ops.SideCache.releaseAll()
   }
 
   /** The v1 file manifest, collected (|files| rows — bounded) —
@@ -3299,7 +3296,6 @@ object MaintenancePipelineQuery {
     graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
       "compact", "compact_dv", "gen1",
       touched.toSeq.sorted.map(_.toString), 2L))
-    graft.ops.SideCache.releaseAll()
   }
 
   /** Recursive parquet file listing (bounded: |files| per fixture). */
@@ -3484,7 +3480,6 @@ object MaintenancePipelineQuery {
         "updater", "bump3", "data/updater", daysIn(e, col("dom") >= 21), v1))
       require(v1 == 1L && v2 == 2L && v3 == 3L,
         s"commit scenario landed at unexpected versions ($v1,$v2,$v3)")
-      graft.ops.SideCache.releaseAll()
     }
 
   def commitLog(spark: SparkSession, dir: String): DataFrame = {

@@ -1862,7 +1862,7 @@ object SimilarityQueries {
       .select("ef", "qid", "dst")
     // GROUPED accounting — three |efs|-row aggregates instead of
     // 3×|efs| filtered 1-row jobs (the readout halved the query cost
-    // before this; measured by EfProbe)
+    // before this; measured in round 17)
     val nBrute = broadcast(brute.agg(count(lit(1)).as("n_brute")))
     val stats = vis.groupBy("ef").agg(count(lit(1)).as("n_visited"))
     val beams = fin.groupBy("ef")
@@ -2843,7 +2843,7 @@ object SimilarityQueries {
       // EAGER localCheckpoint per round: persist+count left the round
       // chain's cache unreused across rounds (each round re-executed
       // its whole predecessor lineage — measured ×2.5 growth per
-      // round, 20 s at sf0.1; MmrProbe). Checkpointing truncates the
+      // round, 20 s at sf0.1; measured in round 10). Checkpointing truncates the
       // plan itself, so every round is a constant-cost job over the
       // ≤ Q·k checkpointed rows: 0.9/0.5/0.5/0.4/0.4 s at sf0.1.
       selected = selected.union(picked).localCheckpoint(true)

@@ -30,7 +30,7 @@ object TextFunctions {
     * lambdas are interpreted (no codegen), and the measured cost of
     * the `transform`+`concat_ws` formulation ([[wordShingles]]) is
     * ~20× a JIT-compiled single-pass UDF on the same corpus
-    * (7.5 s vs 0.4 s per 5k docs warm, see NgramProfile). One
+    * (7.5 s vs 0.4 s per 5k docs warm, measured in round 1). One
     * string-in/array-out UDF call per document keeps serialization
     * overhead negligible. */
   private val shingleUdf = udf((text: String, n: Int) =>

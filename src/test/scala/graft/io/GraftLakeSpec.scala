@@ -846,7 +846,7 @@ class GraftLakeSpec extends SparkSpec {
     val joined = big.join(rel, Seq("k"))
     joined.collect()
     // the executed plan is an AdaptiveSparkPlanExec LEAF — string-render
-    // it (the PlanAudit convention) to see the final adaptive plan
+    // it to see the final adaptive plan
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"a small lake dimension must auto-broadcast from entry stats:\n$plan")

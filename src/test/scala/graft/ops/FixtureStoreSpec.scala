@@ -1,12 +1,14 @@
 package graft.ops
 
+import graft.SparkSpec
 import java.io.File
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.input_file_name
+import org.apache.spark.storage.StorageLevel
 
 /** The generic FixtureStore contract, on a toy fixture: one part with a
   * `_SUCCESS` and a recorded row count. */
-class FixtureStoreSpec extends AnyFunSuite {
+class FixtureStoreSpec extends SparkSpec {
 
   private val name = "fxstore_spec"
 
@@ -15,10 +17,11 @@ class FixtureStoreSpec extends AnyFunSuite {
   private final class Toy(var rows: Long = 7L, var ok: Boolean = true) {
     val dir = s"/fxstore/${java.util.UUID.randomUUID()}"
     var builds = 0
-    def ensure(fingerprint: String = "fp1"): String =
+    def ensure(fingerprint: String = "fp1", also: String => Unit = _ => ()): String =
       FixtureStore.ensureKeyed(fingerprint, name, dir, Seq("part"),
         _ => ok, _ => rows) { root =>
         builds += 1
+        also(root)
         val part = new File(root, "part")
         part.mkdirs()
         Files.writeString(new File(part, "_SUCCESS").toPath, "")
@@ -100,6 +103,29 @@ class FixtureStoreSpec extends AnyFunSuite {
       assert(!new File(root, "livelog").exists())
       assert(new File(root, "part/_SUCCESS").exists())
     }
+  }
+
+  test("a build's side tables are released; the caller's stay registered") {
+    val s = spark
+    import s.implicits._
+    val callers = SideCache.persist(spark.range(3).toDF())
+    try withToy { toy =>
+      var built: Option[org.apache.spark.sql.DataFrame] = None
+      val root = toy.ensure(also = { root =>
+        spark.range(20).write.parquet(s"$root/data")
+        built = Some(SideCache.persist(spark.read.parquet(s"$root/data")))
+        built.get.count()
+      })
+      val live = SideCache.liveSnapshot
+      assert(live.exists(_ eq callers))
+      assert(callers.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(built.nonEmpty && !live.exists(_ eq built.get))
+      // a plain read of the stored path scans files, not a cached copy
+      val files = spark.read.parquet(s"$root/data")
+        .select(input_file_name()).as[String].collect()
+      assert(files.length === 20)
+      assert(files.forall(_.nonEmpty))
+    } finally SideCache.releaseAll()
   }
 
   test("the engine fingerprint hashes the compiled classes") {

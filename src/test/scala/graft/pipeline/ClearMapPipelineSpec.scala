@@ -170,4 +170,9 @@ class ClearMapPipelineSpec extends SparkSpec {
     // a contended CI run must not flake the gate on a non-defect
     assert(secs < 90.0, s"end-to-end run took $secs s")
   }
+
+  test("the driver's smoke entry (the exported ClearMap frame) has rows") {
+    try assert(graft.SparkEntry.entry(spark).count() > 0)
+    finally graft.ops.SideCache.releaseAll()
+  }
 }

@@ -454,13 +454,15 @@ object GraftLakeSource {
               "change feed — write with option('changeFeed', 'true')")
           val dirs = dataParts.map(p => (p, partDir(e.dataPath, p)))
             .filter { case (_, loc) => new java.io.File(loc).exists() }
+          // the entry's recorded schema spares a footer probe
+          val staged = e.dataSchema.fold(spark.read)(s => spark.read.schema(s))
           (dirs, partCol) match {
             case (Nil, _) => Nil
             case (ds, Some(c)) =>
               // ONE partitioned read over every first-ownership dir —
               // a frame per partition would put |partitions| scan legs
               // into the union plan for what is a single commit's data
-              val dataSch = spark.read.parquet(ds.head._2).schema
+              val dataSch = staged.parquet(ds.head._2).schema
               val full = StructType(dataSch.fields :+
                 StructField(c, StringType, nullable = true))
               Seq(spark.read.schema(full)
@@ -468,7 +470,7 @@ object GraftLakeSource {
                 .parquet(ds.map(_._2): _*)
                 .withColumn(ct, lit("insert")))
             case (ds, None) =>
-              ds.map { case (p, loc) => spark.read.parquet(loc)
+              ds.map { case (p, loc) => staged.parquet(loc)
                 .withColumn(pName, lit(p))
                 .withColumn(ct, lit("insert")) }
           }
@@ -701,7 +703,8 @@ class GraftLakeDataSource extends RelationProvider
           })
         }
         CommitLog.Entry(writer, op, attempt, touched, base,
-          partBytes = bytesA)
+          partBytes = bytesA, dataSchema = Some(StructType(
+            full.schema.filterNot(f => partCol.contains(f.name)))))
       } else {
         if (changeFeed && base > 0L) {
           // overwrite delta: the touched partitions' OLD content (at
@@ -744,7 +747,7 @@ class GraftLakeDataSource extends RelationProvider
           bytes0 = stageTo(data, stage0)
         }
         CommitLog.Entry(writer, op, stage0, touched, base,
-          partBytes = bytes0)
+          partBytes = bytes0, dataSchema = Some(dataSchema))
       }
     })
     catch { case t: Throwable =>
@@ -860,10 +863,11 @@ class GraftLakeDataSource extends RelationProvider
             !n.startsWith("_") && !n.startsWith(".")
           }))
     }
-    // infer from the first partition that actually HAS data files
+    // the schema of the first partition that actually HAS data files
     // (checked through the manifest/listing, so empty owners —
     // sentinels, SQL deletes — are skipped without probing missing
-    // directories). When NO partition has readable files (a table
+    // directories): the owning entry's recorded schema when it has
+    // one, else a footer probe. When NO partition has readable files (a table
     // whose only commit so far is an empty first micro-batch's
     // sentinel), fall back to the writer-provided `dataSchemaJson` —
     // without it, a hive-layout Append sink whose batch 0 was empty
@@ -873,8 +877,12 @@ class GraftLakeDataSource extends RelationProvider
     val dataSchema = locations.keys.toSeq.sorted.view
       .filter(p => filesFor(p).nonEmpty)
       .flatMap { p =>
-        scala.util.Try(
-          spark.read.parquet(filesFor(p).head.getPath.toString).schema)
+        val recorded = plan(p) match {
+          case Left((v, _)) => entryByV.get(v).flatMap(_.dataSchema)
+          case Right(_) => None
+        }
+        scala.util.Try(recorded.fold(spark.read)(s => spark.read.schema(s))
+          .parquet(filesFor(p).head.getPath.toString).schema)
           .toOption.filter(_.nonEmpty)
       }.headOption
       .orElse(lower.get("dataschemajson").map(j =>
@@ -1199,10 +1207,12 @@ object GraftLakeStreamSource {
       else s"$root/${e.dataPath}"
     // a DV layer's staged dir holds keys/ + rows/ — the ROW schema is
     // the table's (keys are metadata); probing the dir itself would
-    // mix both
+    // mix both. The entry's recorded schema, when it has one, spares
+    // the footer probe.
     val probe = if (LakeRead.isDvLayer(dp)) s"$dp/rows" else dp
     val dataSchema = StructType(
-      spark.read.parquet(probe).schema.filterNot(_.name == pName))
+      e.dataSchema.fold(spark.read)(s => spark.read.schema(s))
+        .parquet(probe).schema.filterNot(_.name == pName))
     StructType(dataSchema.fields.toSeq ++
       Seq(StructField(pName, StringType, nullable = false)) ++
       (if (cdc) Seq(StructField("_change_type", StringType,

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.types.{DataType, StructType}
+
 /** OPTIMISTIC-CONCURRENCY commit log — the concurrent-writer story
   * the versioned tier ([[VersionChain]]) lacked: immutable
   * generations and a manifest say nothing about TWO writers preparing
@@ -85,7 +87,13 @@ object CommitLog {
     * `sizeInBytes` (the broadcast-join decision) from the entries
     * alone and never lists a directory at plan time — the difference
     * between O(1) metadata and |partitions| listing RPCs per query at
-    * 100k partitions. Absent stats fall back to sampled listing. */
+    * 100k partitions. Absent stats fall back to sampled listing.
+    *
+    * `dataSchema` (optional): the schema of the data files the entry
+    * staged (partition column excluded), as the writer's frame had it.
+    * A reader takes it instead of inferring the schema from a footer,
+    * which costs a Spark job per versioned read. Absent schemas fall
+    * back to the footer probe. */
   final case class Entry(writer: String, op: String, dataPath: String,
                          partitions: Seq[String], baseVersion: Long,
                          ts: Long = -1L,
@@ -93,7 +101,8 @@ object CommitLog {
                          isolation: String = WriteSerializable,
                          keyDomains: Map[String, Seq[(Long, Long)]] =
                            Map.empty,
-                         partBytes: Map[String, Long] = Map.empty)
+                         partBytes: Map[String, Long] = Map.empty,
+                         dataSchema: Option[StructType] = None)
 
   /** Isolation levels (Delta's two write-transaction modes):
     *
@@ -569,7 +578,8 @@ object CommitLog {
     java.nio.file.Files.writeString(entryFile(d).toPath,
       s"$v\t${e.writer}\t${e.op}\t${e.dataPath}\t${e.baseVersion}\t" +
         e.partitions.mkString(",") + s"\t$ts\t" +
-        e.readSet.mkString(",") + s"\t${e.isolation}\t$kd\t$pb\n")
+        e.readSet.mkString(",") + s"\t${e.isolation}\t$kd\t$pb\t" +
+        e.dataSchema.fold("")(_.json) + "\n")
   }
 
   /** Read a slot's entry; None while the racing writer is between
@@ -610,9 +620,14 @@ object CommitLog {
             val q = s.split("\\^", -1); q(0) -> q(1).toLong
           }.toMap
         else Map.empty[String, Long]
+        // entries from before schema recording (≤11 columns) read back
+        // schema-free — readers fall back to the footer probe
+        val ds = if (p.length > 11 && p(11).nonEmpty)
+          Some(DataType.fromJson(p(11)).asInstanceOf[StructType])
+        else None
         Some((v, Entry(p(1), p(2), p(3),
           if (p(5).isEmpty) Nil else p(5).split(",").toSeq, p(4).toLong,
-          ts, rs, iso, kd, pb)))
+          ts, rs, iso, kd, pb, ds)))
       }
     }.toOption.flatten
 

@@ -71,9 +71,17 @@ object VersionChain {
   def ensure(spark: SparkSession, dir: String): String =
     FixtureStore.ensure("verchain", dir, parts = gens :+ "manifest",
       valid = root => CommitLog.committedVersions(root) == Seq(1L, 2L, 3L, 4L),
-      rows = root => spark.read.parquet(s"$root/gen0").count()) {
+      rows = root => spark.read.schema(ingest(spark, dir).schema)
+        .parquet(s"$root/gen0").count()) {
       root => commit(spark, dir, root)
     }
+
+  /** v0's content: the events projection the chain ingests. */
+  private def ingest(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"),
+        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
+        to_date(col("ts")).as("day"))
 
   /** The root holding the chain's optimistic commit log: the chain's
     * own if present (owner, file copy, or shallow clone — clones get
@@ -267,38 +275,35 @@ object VersionChain {
       CommitLog.tryCommit(root,
         CommitLog.Entry("chain", op, gen, Seq(gen), base))
     // ---- v0: ingest, one file per day
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("event_type"),
-        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
-        to_date(col("ts")).as("day"))
-      .repartition(col("day"))
+    val in = ingest(spark, dir)
+    in.repartition(col("day"))
       .write.mode("overwrite").partitionBy("day").parquet(s"$root/gen0")
-    val v0 = SideCache.persist(spark.read.parquet(s"$root/gen0"))
+    val v0 = SideCache.persist(spark.read.schema(in.schema).parquet(s"$root/gen0"))
     val n0 = v0.count()
     logCommit("ingest", "gen0", 0L)
     // ---- v1: compact (q_compact_manifest's cumulative split)
-    v0.join(broadcast(binPlan(v0)), Seq("day"))
-      .repartition(col("bin"))
+    val packed = v0.join(broadcast(binPlan(v0)), Seq("day"))
+    packed.repartition(col("bin"))
       .write.mode("overwrite").partitionBy("bin").parquet(s"$root/gen1")
-    val v1 = SideCache.persist(spark.read.parquet(s"$root/gen1"))
+    val v1 = SideCache.persist(spark.read.schema(packed.schema).parquet(s"$root/gen1"))
     val n1 = v1.count()
     logCommit("compact", "gen1", 1L)
     // ---- v2: retention sweep on the compacted generation
     v1.filter(dayofmonth(col("day")) <= 20)
       .repartition(col("bin"))
       .write.mode("overwrite").partitionBy("bin").parquet(s"$root/gen2")
-    val v2 = SideCache.persist(spark.read.parquet(s"$root/gen2"))
+    val v2 = SideCache.persist(spark.read.schema(v1.schema).parquet(s"$root/gen2"))
     val n2 = v2.count()
     logCommit("retain", "gen2", 2L)
     // ---- v3: point update (vc += 100 where event_id % 7 = 0)
     val updCond = col("event_id") % 7 === 0
-    v2.withColumn("vc",
+    val updated = v2.withColumn("vc",
         when(updCond, col("vc") + 100L).otherwise(col("vc")))
       .select(col("event_id"), col("event_type"), col("vc"), col("bin"),
         col("day"))
-      .repartition(col("bin"))
+    updated.repartition(col("bin"))
       .write.mode("overwrite").partitionBy("bin").parquet(s"$root/gen3")
-    val n3 = spark.read.parquet(s"$root/gen3").count()
+    val n3 = spark.read.schema(updated.schema).parquet(s"$root/gen3").count()
     logCommit("update", "gen3", 3L)
     // ---- per-commit CDF deltas (change-proportional; the writer
     // KNOWS its change set — no diff join is ever needed to record it)

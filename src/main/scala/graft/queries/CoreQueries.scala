@@ -96,14 +96,14 @@ object CoreQueries {
     * proven generically in ScaleTechniquesSpec) and aggregates; the
     * oracle computes the same from the raw events table, verifying
     * the writer's partition-value round-trip (date → directory name →
-    * inferred partition column) bit-for-bit. */
+    * partition column, read back under the writer's schema) bit-for-bit. */
   private def writePartitioned(spark: SparkSession, dir: String): DataFrame = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_part_events"
-    Tables.events(spark, dir)
+    val out = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("ts"),
         Num.cents(col("value")).as("vc"), to_date(col("ts")).as("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-    spark.read.parquet(path)
+    out.write.mode("overwrite").partitionBy("day").parquet(path)
+    spark.read.schema(out.schema).parquet(path)
       .filter(dayofmonth(col("day")) <= 5)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n"), sum(col("vc")).as("sum_vc"),
@@ -319,18 +319,13 @@ object CoreQueries {
           Seq(1L, 2L, 3L, 4L)) { root =>
       import spark.implicits._
       // the ONE physical write: columns live under physical ids only
-      Tables.events(spark, dir).select(
-        col("event_id").as("c1"), col("event_type").as("c2"),
-        coalesce(Num.cents(col("value")), lit(-1L)).as("c3"),
-        to_date(col("ts")).as("c4"))
-        .write.mode("overwrite").parquet(s"$root/data")
+      colMapData(spark, dir).write.mode("overwrite").parquet(s"$root/data")
       // stage each version's RESOLVED mapping privately, then commit
       // it as a schema: entry — versions 1..4 in the log ARE the
       // schema history, replayable through resolveAsOf
       Seq(1 -> "init", 2 -> "rename", 3 -> "drop", 4 -> "add")
         .foreach { case (v, opName) =>
-          colMapLog.filter(_._1 == v)
-            .toDF("version", "op", "logical", "physical", "dtype")
+          colMapLog.filter(_._1 == v).toDF(colMapCols: _*)
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$root/schemalog/v$v")
           val cv = graft.ops.CommitLog.commitSchema(root, "schema_writer",
@@ -340,6 +335,14 @@ object CoreQueries {
         }
     }
 
+  private def colMapData(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).select(
+      col("event_id").as("c1"), col("event_type").as("c2"),
+      coalesce(Num.cents(col("value")), lit(-1L)).as("c3"),
+      to_date(col("ts")).as("c4"))
+
+  private val colMapCols = Seq("version", "op", "logical", "physical", "dtype")
+
   /** Versioned read THROUGH the mapping: logical names resolve to
     * physical columns; a mapped-but-absent physical id (a re-added
     * column) reads as typed NULL. Public for ColumnMappingSpec. */
@@ -347,7 +350,8 @@ object CoreQueries {
                         version: Int): DataFrame = {
     val root = ensureColMap(spark, dir)
     val mapping = colMapLog.filter(_._1 == version)
-    val data = spark.read.parquet(s"$root/data")
+    val data = spark.read.schema(colMapData(spark, dir).schema)
+      .parquet(s"$root/data")
     val present = data.columns.toSet
     data.select(mapping.sortBy(_._3).map { case (_, _, lg, ph, dt) =>
       (if (present(ph)) col(ph) else lit(null).cast(dt)).as(lg)
@@ -364,7 +368,9 @@ object CoreQueries {
     val mappingPaths = (1L to 4L).map(v =>
       graft.ops.CommitLog.resolveAsOf(root, v)(
         graft.ops.CommitLog.SchemaPartition)._2)
-    val stored = spark.read.parquet(mappingPaths.map(p => s"$root/$p"): _*)
+    import spark.implicits._
+    val stored = spark.read.schema(colMapLog.toDF(colMapCols: _*).schema)
+      .parquet(mappingPaths.map(p => s"$root/$p"): _*)
       .collect().map(r => (r.getAs[Int]("version"), r.getAs[String]("op"),
         r.getAs[String]("logical"), r.getAs[String]("physical"),
         r.getAs[String]("dtype"))).toSeq
@@ -485,17 +491,17 @@ object CoreQueries {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3))).toSeq
     Expectations.enforceFail(collected.map(r => (r._1, r._2, r._3)))
-    Expectations.admitted(li, exps)
+    val admitted = Expectations.admitted(li, exps)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_quantity").cast(LongType).as("qty"),
         Num.cents(col("l_discount")).as("disc_c"),
         Num.cents(col("l_tax")).as("tax_c"))
-      .write.mode("overwrite").parquet(s"$path/admitted")
+    admitted.write.mode("overwrite").parquet(s"$path/admitted")
     import spark.implicits._
-    collected.toDF("cname", "cmode", "n", "key_xor")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/report")
-    val storedRep = spark.read.parquet(s"$path/report")
-    val admRow = spark.read.parquet(s"$path/admitted")
+    val report = collected.toDF("cname", "cmode", "n", "key_xor")
+    report.coalesce(1).write.mode("overwrite").parquet(s"$path/report")
+    val storedRep = spark.read.schema(report.schema).parquet(s"$path/report")
+    val admRow = spark.read.schema(admitted.schema).parquet(s"$path/admitted")
       .withColumn("h", graft.functions.F.polyHash(concat_ws("|",
         col("l_orderkey"), col("l_linenumber"), col("qty"),
         col("disc_c"), col("tax_c"))))
@@ -704,12 +710,12 @@ object CoreQueries {
     val outPath = s"$tmp/graft_compact_out"
     val logicalBytes = (lit(32) + length(col("event_type"))).cast("long")
     // 1. the small-files fixture: one file per day
-    Tables.events(spark, dir)
+    val src = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("ts"),
         to_date(col("ts")).as("day"))
-      .repartition(col("day"))
+    src.repartition(col("day"))
       .write.mode("overwrite").partitionBy("day").parquet(srcPath)
-    val sink = spark.read.parquet(srcPath)
+    val sink = spark.read.schema(src.schema).parquet(srcPath)
     // 2. per-file manifest + cumulative-split bin plan (|days| rows)
     val manifest = sink.groupBy("day")
       .agg(count(lit(1)).as("n_rows"), sum(logicalBytes).as("bytes"))
@@ -724,11 +730,11 @@ object CoreQueries {
         expr("cum_before div (total div 8 + 1)"))
       .select(col("day"), col("bin"))
     // 3. the rewrite: one exchange, one file per bin
-    sink.join(broadcast(plan), Seq("day"))
-      .repartition(col("bin"))
+    val compacted = sink.join(broadcast(plan), Seq("day"))
+    compacted.repartition(col("bin"))
       .write.mode("overwrite").partitionBy("bin").parquet(outPath)
     // 4. AFTER manifest, read back from the COMPACTED table
-    spark.read.parquet(outPath)
+    spark.read.schema(compacted.schema).parquet(outPath)
       .groupBy(col("bin").cast("long").as("bin"))
       .agg(countDistinct(col("day")).as("n_files"),
         count(lit(1)).as("n_rows"),

@@ -100,13 +100,13 @@ object GovernancePipelineQuery {
     // ---- the events BASE generation is fixture (deterministic from
     // the dataset) — built once per dataset; the erasure REWRITE
     // below (into the same root) is the operation being priced
+    val base = Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
+        to_date(col("ts")).as("day"))
     val root = graft.ops.FixtureStore.ensure("forget", dir,
         parts = Seq("events")) { root =>
-      Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
-          to_date(col("ts")).as("day"))
-        .repartition(col("day"))
+      base.repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(s"$root/events")
     }
     // ---- the SHARED content-keyed full-corpus index (built once per
@@ -136,7 +136,7 @@ object GovernancePipelineQuery {
     // generation is already hive-partitioned by day, so partitionBy
     // regroups nothing.
     val delV = emb.filter(col("vec_id") % 13 === 0).select("vec_id")
-    val stored = spark.read.parquet(s"$root/events")
+    val stored = spark.read.schema(base.schema).parquet(s"$root/events")
     val Seq(liveSeg, eventsLive) = graft.ops.DriverPar.all(Seq(
       () => Similarity.ivfPqCompactDelete(
         spark, annPath, delV, Seq("codes")).head,
@@ -158,8 +158,9 @@ object GovernancePipelineQuery {
     require(resV == commitV,
       s"readers resolve v$resV but the spanning commit landed at v$commitV")
     // ---- stage 3 accounting (live read through the resolved slot)
-    val codes = spark.read.parquet(s"$annPath/codes").select("vec_id")
-    val live = spark.read.parquet(liveTiers("index")).select("vec_id")
+    val ids = emb.select("vec_id").schema
+    val codes = spark.read.schema(ids).parquet(s"$annPath/codes").select("vec_id")
+    val live = spark.read.schema(ids).parquet(liveTiers("index")).select("vec_id")
     // one scan of the stored segment (r19): the former count subtree +
     // semi-join subtree re-read it twice; a left join against the
     // broadcast tombstone list (unique keys, so row counts are
@@ -179,7 +180,7 @@ object GovernancePipelineQuery {
       .select(lit("3_vector_index").as("stage"), lit("codes").as("tier"),
         col("n_before"), col("n_erased"), col("n_after"), col("key_xor"))
     // ---- stage 4 accounting (live read through the resolved slot)
-    val evLive = spark.read.parquet(liveTiers("events"))
+    val evLive = spark.read.schema(base.schema).parquet(liveTiers("events"))
     // same conditional-aggregation fold: one scan of the stored fact
     // instead of a full-count subtree plus a filtered subtree
     val s4 = stored.agg(count(lit(1)).as("n_before"),

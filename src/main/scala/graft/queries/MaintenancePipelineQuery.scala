@@ -3,6 +3,7 @@ package graft.queries
 import graft.ops.{FixtureStore, Num, NumSql, VersionChain}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The LAKEHOUSE MAINTENANCE tier: the nightly table-service cycle
   * every partitioned fact table runs — ingest, compaction, retention,
@@ -310,9 +311,9 @@ object MaintenancePipelineQuery {
     }
     // the sweep: REFERENCES go (the log row stays); physical deletion
     // is refcounted — only zero-ref generations are reclaimed
-    audit.toDF("version", "op", "path", "status", "n_files_before",
-        "n_files_after", "n_rows", "xor_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
+    val manifest = audit.toDF("version", "op", "path", "status",
+      "n_files_before", "n_files_after", "n_rows", "xor_hash")
+    manifest.coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     // the expiry is itself a COMMIT, routed through this chain's OWN
     // optimistic log (a shallow clone carries an independent copy):
     // its touched partitions are the generations whose references it
@@ -323,7 +324,7 @@ object MaintenancePipelineQuery {
       log.filter(c => expired(c.version)).map(_.path),
       graft.ops.CommitLog.latestCommitted(root)))
     VersionChain.retireUnreferenced(spark, root)
-    spark.read.parquet(s"$root/manifest").orderBy("version")
+    spark.read.schema(manifest.schema).parquet(s"$root/manifest").orderBy("version")
   }
 
   def vacuum(spark: SparkSession, dir: String): DataFrame = {
@@ -401,11 +402,10 @@ object MaintenancePipelineQuery {
   private def ensureOrphanBase(spark: SparkSession, dir: String): String =
     FixtureStore.ensure("orphans", dir, parts = Seq("data/live"),
       valid = root => graft.ops.CommitLog.committedVersions(root) == Seq(1L),
-      rows = root => spark.read.parquet(s"$root/data/live").count()) { root =>
+      rows = root => spark.read.schema(clogStaged(clogEvents(spark, dir)).schema)
+        .parquet(s"$root/data/live").count()) { root =>
       val e = clogEvents(spark, dir)
-      e.filter(col("dom").between(16, 20))
-        .select(col("event_id"), col("vc"), col("day"))
-        .withColumn("pday", col("day"))
+      clogStaged(e.filter(col("dom").between(16, 20)))
         .repartition(col("pday"))
         .write.mode("overwrite").partitionBy("pday").parquet(s"$root/data/live")
       graft.ops.CommitLog.tryCommit(root, graft.ops.CommitLog.Entry(
@@ -421,9 +421,7 @@ object MaintenancePipelineQuery {
     // the conflicted writer's staging, rebuilt each run (last run's
     // sweep reclaimed it): days 12-18, event_id % 7 <> 0
     val orphanPath = s"$root/data/orphan"
-    e.filter(col("dom").between(12, 18) && col("event_id") % 7 =!= 0)
-      .select(col("event_id"), col("vc"), col("day"))
-      .withColumn("pday", col("day"))
+    clogStaged(e.filter(col("dom").between(12, 18) && col("event_id") % 7 =!= 0))
       .repartition(col("pday"))
       .write.mode("overwrite").partitionBy("pday").parquet(orphanPath)
     // the conflicted commit: days 12-18 overlap v1's 16-20 and the
@@ -447,7 +445,7 @@ object MaintenancePipelineQuery {
     // accounting is EAGER (collected before the sweep mutates the FS —
     // a lazy frame would read after the delete)
     def tripleOf(p: String): (Long, Long, Long) = {
-      val r = spark.read.parquet(p)
+      val r = spark.read.schema(clogStaged(e).schema).parquet(p)
         .agg(count(lit(1)), coalesce(expr("bit_xor(event_id)"), lit(0L)),
           coalesce(sum("vc"), lit(0L))).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -560,11 +558,11 @@ object MaintenancePipelineQuery {
     wapUpdate(e).withColumn("vc",
       when(col("event_id") % 5 === 0, lit(-2L)).otherwise(col("vc")))
 
-  private def wapAudit(spark: SparkSession, path: String,
+  private def wapAudit(spark: SparkSession, schema: StructType, path: String,
                        expectedRows: Long): Seq[(String, String, Long)] = {
     import graft.ops.Expectations
     import graft.ops.Expectations.Expectation
-    val staged = spark.read.parquet(path)
+    val staged = spark.read.schema(schema).parquet(path)
     val exps = Seq(
       // floor at −1, NOT 0: clogEvents writes vc = −1 as the
       // NULL-value sentinel (coalesce(cents(value), −1)), which is a
@@ -607,8 +605,8 @@ object MaintenancePipelineQuery {
         "producer", "update", s"$root/data/branch_good", upDays, 1L))
       // AUDIT the branch head, then PUBLISH: main gains the branch's
       // entry (same dataPath — zero bytes move)
-      val audit = wapAudit(spark, s"$root/data/branch_good",
-        spark.read.parquet(s"$root/data/base")
+      val audit = wapAudit(spark, e.schema, s"$root/data/branch_good",
+        spark.read.schema(e.schema).parquet(s"$root/data/base")
           .filter(col("dom").between(6, 7)).count())
       graft.ops.Expectations.enforceFail(audit)
       CommitLog.tryCommit(s"$root/main", CommitLog.Entry("publisher",
@@ -621,7 +619,7 @@ object MaintenancePipelineQuery {
     val root = ensureWap(spark, dir)
     val e = clogEvents(spark, dir).filter(col("dom") <= 10)
     val upDays = daysIn(e, col("dom").between(6, 7))
-    val expectedRows = spark.read.parquet(s"$root/data/base")
+    val expectedRows = spark.read.schema(e.schema).parquet(s"$root/data/base")
       .filter(col("dom").between(6, 7)).count()
     // the BAD branch's audit + refused publish — re-proven every run
     VersionChain.rmTree(new java.io.File(s"$root/branch_bad"))
@@ -630,7 +628,7 @@ object MaintenancePipelineQuery {
     CommitLog.tryCommit(s"$root/branch_bad", CommitLog.Entry(
       "corruptor", "update", s"$root/data/branch_bad", upDays,
       CommitLog.latestCommitted(s"$root/branch_bad")))
-    val badAudit = wapAudit(spark, s"$root/data/branch_bad", expectedRows)
+    val badAudit = wapAudit(spark, e.schema, s"$root/data/branch_bad", expectedRows)
     val refused = scala.util.Try(
       graft.ops.Expectations.enforceFail(badAudit)) match {
       case scala.util.Failure(_: graft.ops.Expectations.ExpectationViolated)
@@ -640,7 +638,7 @@ object MaintenancePipelineQuery {
     }
     // the GOOD audit re-runs under the hash too (its zeros are
     // computed, not asserted)
-    val goodAudit = wapAudit(spark, s"$root/data/branch_good",
+    val goodAudit = wapAudit(spark, e.schema, s"$root/data/branch_good",
       expectedRows)
     val goodOutcome = scala.util.Try(
       graft.ops.Expectations.enforceFail(goodAudit)) match {
@@ -650,7 +648,7 @@ object MaintenancePipelineQuery {
     val mainHead = CommitLog.latestCommitted(s"$root/main")
     def triple(step: String, outcome: String, ver: Long,
                path: String): DataFrame =
-      spark.read.parquet(path).withColumn("h", rowHash)
+      spark.read.schema(e.schema).parquet(path).withColumn("h", rowHash)
         .agg(count(lit(1)).as("n_rows"),
           coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
           coalesce(sum("vc"), lit(0L)).as("vc_sum"))
@@ -762,7 +760,7 @@ object MaintenancePipelineQuery {
     def resolvedStats(step: String, ver: Long): DataFrame = {
       val paths = CommitLog.resolvePartitions(logRoot)
         .values.map(_._2).toSeq.distinct.sorted
-      paths.map(spark.read.parquet).reduce(_ unionAll _)
+      paths.map(spark.read.schema(e.schema).parquet(_)).reduce(_ unionAll _)
         .withColumn("h", rowHash)
         .agg(count(lit(1)).as("n_rows"),
           coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
@@ -844,15 +842,16 @@ object MaintenancePipelineQuery {
     val root = ensureStreamCommitData(spark, dir)
     val logRoot = s"$root/mvlog"
     VersionChain.rmTree(new java.io.File(logRoot))
+    val ev = clogEvents(spark, dir).schema
     def mvAgg(df: DataFrame): DataFrame =
       df.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("vc").as("vc_sum"))
     def deliver(bid: Long): Option[Long] =
       StreamCommit.commitBatch(logRoot, "mv_stream", bid, () => {
-        val delta = mvAgg(spark.read.parquet(s"$root/data/b$bid"))
+        val delta = mvAgg(spark.read.schema(ev).parquet(s"$root/data/b$bid"))
         val merged = CommitLog.resolvePartitions(logRoot).get("mv") match {
           case Some((_, prev)) =>
-            spark.read.parquet(prev).unionByName(delta)
+            spark.read.schema(delta.schema).parquet(prev).unionByName(delta)
               .groupBy("event_type")
               .agg(sum("n").as("n"), sum("vc_sum").as("vc_sum"))
           case None => delta
@@ -862,7 +861,7 @@ object MaintenancePipelineQuery {
         (path, Seq("mv"))
       })
     def batchRow(step: String, bid: Long, ver: Long): DataFrame =
-      spark.read.parquet(s"$root/data/b$bid")
+      spark.read.schema(ev).parquet(s"$root/data/b$bid")
         .agg(count(lit(1)).as("n_rows"),
           coalesce(sum("vc"), lit(0L)).as("vc_sum"))
         .select(lit(step).as("step"), lit("applied").as("outcome"),
@@ -876,7 +875,8 @@ object MaintenancePipelineQuery {
       .select(lit("4_redeliver_b1").as("step"),
         lit("skipped").as("outcome"), lit(-1L).as("version"),
         lit(0L).as("n_rows"), lit(0L).as("vc_sum"))
-    val mvRows = spark.read.parquet(mvPath)
+    val mvRows = spark.read.schema(mvAgg(clogEvents(spark, dir)).schema)
+      .parquet(mvPath)
       .select(concat(lit("z_mv_"), col("event_type")).as("step"),
         lit("head").as("outcome"), lit(headV).as("version"),
         col("n").as("n_rows"), col("vc_sum"))
@@ -997,7 +997,7 @@ object MaintenancePipelineQuery {
     // every surviving (id, key, value) bit-for-bit
     val root = FixtureStore.root("rowtrack", dir)
     gen3.repartition(4).write.mode("overwrite").parquet(s"$root/compacted")
-    val compacted = spark.read.parquet(s"$root/compacted")
+    val compacted = spark.read.schema(gen3.schema).parquet(s"$root/compacted")
     val h = graft.functions.F.polyHash(concat_ws("|",
       col("row_id"), col("event_id"), col("vc")))
     def stage(df: DataFrame, name: String): DataFrame =
@@ -1158,8 +1158,9 @@ object MaintenancePipelineQuery {
       feed.filter(_._1 == v).foreach { case (_, dp, p) => replica(p) = dp }
       (v, replica.toMap)
     }
+    val staged = clogStaged(clogEvents(spark, dir)).schema
     def stats(v: Long, owners: Map[String, String]): DataFrame =
-      spark.read.parquet(owners.toSeq.map { case (p, dp) =>
+      spark.read.schema(staged).parquet(owners.toSeq.map { case (p, dp) =>
           s"$root/$dp/pday=$p"
         }.sorted: _*)
         .agg(count(lit(1)).as("n_rows"),
@@ -1633,17 +1634,17 @@ object MaintenancePipelineQuery {
       spark.read.parquet(s"$mcRoot/gen0")
         .select("custkey", "nation", "bal")
         .write.mode("overwrite").parquet(s"$root/data/base")
-      spark.read.parquet(s"$mcRoot/dv/v2").select("custkey")
-        .coalesce(1).write.mode("overwrite")
+      val keys = spark.read.parquet(s"$mcRoot/dv/v2").select("custkey")
+      keys.coalesce(1).write.mode("overwrite")
         .parquet(s"$root/data/dv1/keys")
-      spark.read.parquet(s"$mcRoot/append/v2")
+      val rows = spark.read.parquet(s"$mcRoot/append/v2")
         .select("custkey", "nation", "bal")
-        .coalesce(1).write.mode("overwrite")
+      rows.coalesce(1).write.mode("overwrite")
         .parquet(s"$root/data/dv1/rows")
       // the entry's conflict domain: the hull of every touched key
       // (tombstones ∪ appended) — one tiny agg over the delta
-      val hull = spark.read.parquet(s"$root/data/dv1/keys")
-        .unionByName(spark.read.parquet(s"$root/data/dv1/rows")
+      val hull = spark.read.schema(keys.schema).parquet(s"$root/data/dv1/keys")
+        .unionByName(spark.read.schema(rows.schema).parquet(s"$root/data/dv1/rows")
           .select("custkey"))
         .agg(min("custkey"), max("custkey")).head()
       CommitLog.tryCommit(root, Entry("ingest", "ingest", "data/base",
@@ -1935,15 +1936,16 @@ object MaintenancePipelineQuery {
       .select(lit("4_overlap").as("step"), lit(refused).as("outcome"),
         lit(-1L).as("version"), lit(0L).as("n_rows"),
         lit(0L).as("xor_hash"), lit(0L).as("vc_sum"))
-    stats(spark.read.parquet(s"$root/data/base"), "1_base", "commit", 1L)
-      .unionAll(stats(spark.read.parquet(s"$root/data/low"),
+    def stored(p: String) = spark.read.schema(e.schema).parquet(s"$root/data/$p")
+    stats(stored("base"), "1_base", "commit", 1L)
+      .unionAll(stats(stored("low"),
         "2_merge_low", "commit", vLow))
-      .unionAll(stats(spark.read.parquet(s"$root/data/high"),
+      .unionAll(stats(stored("high"),
         "3_merge_high", "commit", vHigh))
       .unionAll(refusedRow)
       .unionAll(stats(layered, "5_layered", "read", vHigh))
-      .unionAll(stats(spark.read.parquet(s"$root/data/compacted"),
-        "6_compacted", "commit", vComp))
+      .unionAll(stats(spark.read.schema(layered.schema)
+        .parquet(s"$root/data/compacted"), "6_compacted", "commit", vComp))
       .orderBy("step")
   }
 
@@ -2063,14 +2065,15 @@ object MaintenancePipelineQuery {
     // batches own disjoint day partitions by construction
     val livePaths = graft.ops.CommitLog.resolvePartitions(logRoot)
       .values.map(_._2).toSeq.distinct.sorted
-    val live = livePaths.map(spark.read.parquet).reduce(_ unionAll _)
+    val live = livePaths.map(spark.read.schema(e.schema).parquet(_))
+      .reduce(_ unionAll _)
     val headV = graft.ops.CommitLog.latestCommitted(logRoot)
     val skipRow = spark.range(1)
       .select(lit("4_redeliver_b1").as("step"),
         lit("skipped").as("outcome"), lit(-1L).as("version"),
         lit(0L).as("n_rows"), lit(0L).as("xor_hash"),
         lit(0L).as("vc_sum"))
-    (0 to 2).map(b => stats(spark.read.parquet(s"$root/data/b$b"),
+    (0 to 2).map(b => stats(spark.read.schema(e.schema).parquet(s"$root/data/b$b"),
         s"${b + 1}_apply_b$b", "applied", vs(b)))
       .reduce(_ unionAll _)
       .unionAll(skipRow)
@@ -2166,7 +2169,7 @@ object MaintenancePipelineQuery {
       // both report payloads, staged from the two snapshots
       e.filter(col("dom") === 5)
         .write.mode("overwrite").parquet(s"$root/data/report_stale")
-      spark.read.parquet(s"$root/data/mut")
+      spark.read.schema(mut.schema).parquet(s"$root/data/mut")
         .write.mode("overwrite").parquet(s"$root/data/report_fresh")
       // write-serializable: the stale report COMMITS (the anomaly)
       CommitLog.tryCommit(root, CommitLog.Entry("reporter_ws", "report",
@@ -2196,9 +2199,10 @@ object MaintenancePipelineQuery {
       case scala.util.Success(v) => s"committed_v$v" // hash-fails
     }
     val log = CommitLog.readLog(root).toMap
+    val stored = clogEvents(spark, dir).schema
     def acct(step: String, writer: String, iso: String, outcome: String,
              ver: Long, path: String): DataFrame =
-      spark.read.parquet(path)
+      spark.read.schema(stored).parquet(path)
         .agg(count(lit(1)).as("n_rows"),
           coalesce(sum("vc"), lit(0L)).as("vc_sum"))
         .select(lit(step).as("step"), lit(writer).as("writer"),
@@ -2341,7 +2345,7 @@ object MaintenancePipelineQuery {
     }
     // CDF accounting reads the STORED restore delta (the certificate
     // is over what was committed, not what was computed)
-    val storedCdf = spark.read.parquet(
+    val storedCdf = spark.read.schema(restoreCdf.schema).parquet(
       VersionChain.resolvePath(root, "cdf/v4")).withColumn("h", rowHash)
     def cdfRow(label: Long, change: String): DataFrame =
       storedCdf.filter(col("change_type") === change)
@@ -2498,31 +2502,39 @@ object MaintenancePipelineQuery {
     * stored. */
   def ensurePartEvo(spark: SparkSession, dir: String): String =
     FixtureStore.ensure("part_evo", dir, parts = Seq("gen0", "gen1", "manifest"),
-      rows = root => spark.read.parquet(s"$root/gen0").count()) { root =>
-      import spark.implicits._
-      val base = graft.tables.Tables.events(spark, dir)
-        .select(col("event_id"), col("event_type"),
-          coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
-          to_date(col("ts")).as("day"))
-        .withColumn("period",
-          concat(lit("p"), expr("(dayofmonth(day) - 1) div 10")))
+      rows = root => spark.read.schema(partEvoBase(spark, dir).schema)
+        .parquet(s"$root/gen0").count()) { root =>
+      val base = partEvoBase(spark, dir)
       base.repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(s"$root/gen0")
       base.repartition(col("period"))
         .write.mode("overwrite").partitionBy("period").parquet(s"$root/gen1")
-      Seq((0L, "day", "gen0"), (1L, "period", "gen1"))
-        .toDF("version", "spec", "path")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
+      partEvoLog(spark).coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
     }
+
+  /** The content both partition specs hold. */
+  private def partEvoBase(spark: SparkSession, dir: String): DataFrame =
+    graft.tables.Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"),
+        coalesce(Num.cents(col("value")), lit(-1L)).as("vc"),
+        to_date(col("ts")).as("day"))
+      .withColumn("period",
+        concat(lit("p"), expr("(dayofmonth(day) - 1) div 10")))
+
+  private def partEvoLog(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq((0L, "day", "gen0"), (1L, "period", "gen1")).toDF("version", "spec", "path")
+  }
 
   def partitionEvolution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = ensurePartEvo(spark, dir)
-    val log = spark.read.parquet(s"$root/manifest")
+    val log = spark.read.schema(partEvoLog(spark).schema).parquet(s"$root/manifest")
       .select(col("version"), col("spec"), col("path"))
       .as[(Long, String, String)].collect().sortBy(_._1)
+    val stored = partEvoBase(spark, dir).schema
     log.map { case (v, spec, p) =>
-      spark.read.parquet(s"$root/$p").withColumn("h", rowHash)
+      spark.read.schema(stored).parquet(s"$root/$p").withColumn("h", rowHash)
         .agg(countDistinct(col(spec)).as("n_parts"),
           count(lit(1)).as("n_rows"),
           coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
@@ -2692,17 +2704,22 @@ object MaintenancePipelineQuery {
       parts = Seq("gen0", "gen1", "filemanifest/v1", "cdf/v1", "bloom/v1"),
       // both commits must be resolved in the optimistic log
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L),
-      rows = r => spark.read.parquet(s"$r/gen0").count()) {
+      // the raw columns lead every stored file; a count needs no more
+      rows = r => spark.read.schema(mergeRaw(spark, dir).schema)
+        .parquet(s"$r/gen0").count()) {
       root => buildMerge(spark, dir, root)
     }
+
+  private def mergeRaw(spark: SparkSession, dir: String): DataFrame =
+    graft.tables.Tables.customer(spark, dir)
+      .select(col("c_custkey").as("custkey"),
+        col("c_nationkey").cast("long").as("nation"),
+        coalesce(Num.cents(col("c_acctbal")), lit(-1L)).as("bal"))
 
   private def buildMerge(spark: SparkSession, dir: String,
                          root: String): Unit = {
     import spark.implicits._
-    val raw = graft.tables.Tables.customer(spark, dir)
-      .select(col("c_custkey").as("custkey"),
-        col("c_nationkey").cast("long").as("nation"),
-        coalesce(Num.cents(col("c_acctbal")), lit(-1L)).as("bal"))
+    val raw = mergeRaw(spark, dir)
     // range bucketing: width = ⌈maxkey/16⌉ (bounded driver scalar)
     val maxKey = raw.agg(max("custkey")).head().getLong(0)
     val width = 1 + (maxKey - 1) / 16
@@ -2711,7 +2728,8 @@ object MaintenancePipelineQuery {
       .withColumn("pbucket", col("bucket")) // partition col duplicated
     base.repartition(col("pbucket"))
       .write.mode("overwrite").partitionBy("pbucket").parquet(s"$root/gen0")
-    val g0 = graft.ops.SideCache.persist(spark.read.parquet(s"$root/gen0"))
+    val g0 = graft.ops.SideCache.persist(spark.read.schema(base.schema)
+      .parquet(s"$root/gen0"))
     g0.count() // materialize once, before the jobs below that scan it twice
     // the MERGE delta, localized to the hot tail; delete wins on overlap
     val hot = col("bucket") >= 12
@@ -2738,7 +2756,7 @@ object MaintenancePipelineQuery {
     // rewrite ONLY the touched base buckets (partition-pruned scan of
     // gen0 — MergeUpsertSpec asserts the pruning), then the new
     // generation holds rewritten buckets ∪ insert buckets ONLY
-    val touchedBase = spark.read.parquet(s"$root/gen0")
+    val touchedBase = spark.read.schema(base.schema).parquet(s"$root/gen0")
       .filter(col("pbucket").isin(touched.toSeq: _*))
     val survivors = touchedBase
       .join(broadcast(delKeys.select("custkey")), Seq("custkey"), "left_anti")
@@ -2766,7 +2784,7 @@ object MaintenancePipelineQuery {
     // cache substitution hands input_file_name an InMemoryRelation
     // where it returns "" for every row.
     def withStats(b: Long, f: String, rw: Boolean): MergeFile = {
-      val r = spark.read.parquet(s"$root/$f")
+      val r = spark.read.schema(raw.schema).parquet(s"$root/$f")
         .agg(min("custkey"), max("custkey"), count(lit(1))).head()
       MergeFile(b, f, rw, r.getLong(0), r.getLong(1), r.getLong(2))
     }
@@ -2795,10 +2813,10 @@ object MaintenancePipelineQuery {
     // prunes point probes the residual range still covers
     // (q_merge_prune's deleted-key false positive; q_merge_bloom is
     // the consumer)
-    val bloomSrc = spark.read.parquet(s"$root/gen0")
+    val bloomSrc = spark.read.schema(base.schema).parquet(s"$root/gen0")
       .filter(!col("pbucket").isin(touched.toSeq: _*))
       .select(col("custkey"), col("bucket"), lit(false).as("rewritten"))
-      .unionAll(spark.read.parquet(s"$root/gen1")
+      .unionAll(spark.read.schema(rewritten.schema).parquet(s"$root/gen1")
         .select(col("custkey"), col("bucket"), lit(true).as("rewritten")))
     graft.ops.Bloom.cellsBy(bloomSrc, "custkey", Seq("bucket", "rewritten"))
       .coalesce(1).write.mode("overwrite").parquet(s"$root/bloom/v1")
@@ -3219,24 +3237,23 @@ object MaintenancePipelineQuery {
     FixtureStore.ensure("mergedv", dir,
       parts = Seq("gen0", "dv/v2", "append/v2", "cdf/v2", "gen1"),
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
-      rows = r => spark.read.parquet(s"$r/gen0").count()) {
+      rows = r => spark.read.schema(mergeRaw(spark, dir).schema)
+        .parquet(s"$r/gen0").count()) {
       root => buildMergeDv(spark, dir, root)
     }
 
   private def buildMergeDv(spark: SparkSession, dir: String,
                            root: String): Unit = {
     import spark.implicits._
-    val raw = graft.tables.Tables.customer(spark, dir)
-      .select(col("c_custkey").as("custkey"),
-        col("c_nationkey").cast("long").as("nation"),
-        coalesce(Num.cents(col("c_acctbal")), lit(-1L)).as("bal"))
+    val raw = mergeRaw(spark, dir)
     val maxKey = raw.agg(max("custkey")).head().getLong(0)
     val width = 1 + (maxKey - 1) / 16
-    raw.withColumn("bucket", expr(s"(custkey - 1) div $width"))
+    val base = raw.withColumn("bucket", expr(s"(custkey - 1) div $width"))
       .withColumn("pbucket", col("bucket"))
-      .repartition(col("pbucket"))
+    base.repartition(col("pbucket"))
       .write.mode("overwrite").partitionBy("pbucket").parquet(s"$root/gen0")
-    val g0 = graft.ops.SideCache.persist(spark.read.parquet(s"$root/gen0"))
+    val g0 = graft.ops.SideCache.persist(spark.read.schema(base.schema)
+      .parquet(s"$root/gen0"))
     g0.count() // materialize once, before the jobs below that scan it twice
     val baseBuckets = g0.select(col("pbucket").cast("long"))
       .distinct().as[Long].collect().toSet
@@ -3440,6 +3457,12 @@ object MaintenancePipelineQuery {
         to_date(col("ts")).as("day"),
         dayofmonth(to_date(col("ts"))).as("dom"))
 
+  /** The staged layout of a commit-log writer: the event columns plus
+    * `pday`, the hive partition column (a copy of `day`). */
+  private def clogStaged(e: DataFrame): DataFrame =
+    e.select(col("event_id"), col("vc"), col("day"))
+      .withColumn("pday", col("day"))
+
   private def daysIn(e: DataFrame, cond: Column): Seq[String] = {
     import e.sparkSession.implicits._
     e.filter(cond).select(col("day").cast("string"))
@@ -3454,11 +3477,11 @@ object MaintenancePipelineQuery {
       parts = Seq("ingest", "sweeper", "updater", "conflicter")
         .map(w => s"data/$w"),
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
-      rows = r => spark.read.parquet(s"$r/data/ingest").count()) { root =>
+      rows = r => spark.read.schema(clogStaged(clogEvents(spark, dir)).schema)
+        .parquet(s"$r/data/ingest").count()) { root =>
       val e = graft.ops.SideCache.persist(clogEvents(spark, dir))
       def stage(name: String, df: DataFrame): Unit =
-        df.select(col("event_id"), col("vc"), col("day"))
-          .withColumn("pday", col("day"))
+        clogStaged(df)
           .repartition(col("pday"))
           .write.mode("overwrite").partitionBy("pday")
           .parquet(s"$root/data/$name")
@@ -3503,9 +3526,12 @@ object MaintenancePipelineQuery {
     // the log holds exactly one tombstone at steady state — committed
     // history and the hash are untouched either way)
     CommitLog.purgeAborted(root)
+    // the layout every writer staged; a leaf `pday=` path reads it
+    // without the partition column
+    val staged = clogStaged(e).schema
     def acct(version: Long, writer: String, op: String, nParts: Long,
              paths: Seq[String]): DataFrame =
-      spark.read.parquet(paths.filter(p =>
+      spark.read.schema(staged).parquet(paths.filter(p =>
           new java.io.File(p).exists()): _*)
         .agg(count(lit(1)).as("n_rows"),
           coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),

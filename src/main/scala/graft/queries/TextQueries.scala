@@ -1048,14 +1048,14 @@ object TextQueries {
     // ---- nightly BUILD: one pass over the existing corpus computes
     // BOTH tiers' keys; overwrite = the nightly refresh.
     val ex = docs.filter(col("doc_id") % 7 =!= 0)
-    ex.select(col("doc_id"), normHash(col("text")).as("h"),
-        graft.functions.F.simhash64(TF.tokens(col("text"))).as("simhash"),
-        pmod(col("doc_id"), lit(8L)).as("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+    val keys = ex.select(col("doc_id"), normHash(col("text")).as("h"),
+      graft.functions.F.simhash64(TF.tokens(col("text"))).as("simhash"),
+      pmod(col("doc_id"), lit(8L)).as("shard"))
+    keys.write.mode("overwrite").partitionBy("shard").parquet(path)
     // ---- serve: delta admission against the STORED table. persisted:
     // the stored frame feeds the exact tier and the block join; the
     // delta frame feeds both tiers and the verdict spine.
-    val stored = graft.ops.SideCache.persist(spark.read.parquet(path))
+    val stored = graft.ops.SideCache.persist(spark.read.schema(keys.schema).parquet(path))
     val incDocs = docs.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), col("text"))
       .unionAll(docs

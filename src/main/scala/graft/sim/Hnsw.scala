@@ -168,16 +168,18 @@ object Hnsw {
                   emb: DataFrame, dir: String): String =
     graft.ops.FixtureStore.ensure("hnsw", dir,
       parts = (0 to MaxLevel).map(l => s"e$l") :+ "t10",
-      rows = root => spark.read.parquet(s"$root/e0").count()) { root =>
+      rows = root => spark.read.schema(emb.select(col("vec_id").as("src")).schema)
+        .parquet(s"$root/e0").count()) { root =>
       val base = graft.ops.SideCache.persist(withLevels(emb))
       val dstSide = base.select(col("vec_id").as("dst"),
         col("embedding").as("demb"), col("nrm").as("dnrm"))
-      (0 to MaxLevel).foreach(l => adjacency(base, l)
+      val edges = (0 to MaxLevel).map(l => adjacency(base, l)
         .join(dstSide, Seq("dst"))
-        .select("src", "dst", "ic", "demb", "dnrm")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/e$l"))
-      val adjs = (0 to MaxLevel).map(l =>
-        graft.ops.SideCache.persist(spark.read.parquet(s"$root/e$l")))
+        .select("src", "dst", "ic", "demb", "dnrm"))
+      edges.zipWithIndex.foreach { case (e, l) =>
+        e.coalesce(1).write.mode("overwrite").parquet(s"$root/e$l") }
+      val adjs = edges.zipWithIndex.map { case (e, l) =>
+        graft.ops.SideCache.persist(spark.read.schema(e.schema).parquet(s"$root/e$l")) }
       val (_, _, top10) = search(base, adjs)
       top10.coalesce(1).write.mode("overwrite").parquet(s"$root/t10")
     }

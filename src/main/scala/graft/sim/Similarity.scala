@@ -776,7 +776,8 @@ object Similarity {
       if (split9) "annix_split9" else "annix_full", dir,
       parts = Seq("codes", "cents", "seeds", "meta") ++
         (if (split9) Seq("codes_delta") else Nil),
-      rows = root => spark.read.parquet(s"$root/codes").count()) { root =>
+      rows = root => spark.read.schema(emb.select("vec_id").schema)
+        .parquet(s"$root/codes").count()) { root =>
       if (split9) {
         ivfPqIndexWrite(emb.filter(col("vec_id") % 9 =!= 0), root)
         ivfPqUpsertDelta(emb.filter(col("vec_id") % 9 === 0), root)
@@ -798,13 +799,13 @@ object Similarity {
     * corpus snapshot and reused across every index configuration. */
   def ensureBruteBaseline(spark: org.apache.spark.sql.SparkSession,
                           emb: DataFrame, dir: String): DataFrame = {
+    val topk = bruteTopK(emb, queryMod = 50L, k = 10)
     val root = graft.ops.FixtureStore.ensure("brute10", dir,
       parts = Seq("topk"),
-      rows = root => spark.read.parquet(s"$root/topk").count()) { root =>
-      bruteTopK(emb, queryMod = 50L, k = 10)
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/topk")
+      rows = root => spark.read.schema(topk.schema).parquet(s"$root/topk").count()) { root =>
+      topk.coalesce(1).write.mode("overwrite").parquet(s"$root/topk")
     }
-    spark.read.parquet(s"$root/topk")
+    spark.read.schema(topk.schema).parquet(s"$root/topk")
   }
 
   /** SEGMENT MERGE — the consolidation step the delta-upsert tier

@@ -6,34 +6,46 @@ import org.apache.spark.sql.types._
 
 /** Readers for the driver test tables (`TESTDATA.md`, `FIXTURES.md` §B).
   *
-  * All tables are plain parquet; `events.ts` is written as parquet
-  * `TIMESTAMP(NANOS, isAdjustedToUTC=false)` which Spark's vectorized
-  * reader only surfaces as a raw nano-epoch long under
-  * `spark.sql.legacy.parquet.nanosAsLong` (SPARK-40819). [[events]]
-  * normalizes it back to a session-TZ (UTC) timestamp so downstream
-  * `to_date` matches DuckDB's `CAST(ts AS DATE)` on the same file.
-  */
+  * All tables are plain parquet, read with the declared [[schemas]]
+  * (schema on read, never inference: a read without a schema runs a
+  * footer job while the DataFrame is being built). The three timestamp
+  * columns are stored as `TIMESTAMP(MICROS, isAdjustedToUTC=false)`,
+  * which Spark reads as `TIMESTAMP_NTZ`; [[events]] casts `ts` to a
+  * session-TZ (UTC) timestamp so downstream `to_date` matches DuckDB's
+  * `CAST(ts AS DATE)` on the same file. `TablesSchemaSpec` checks every
+  * declared schema against the footers at all three scale factors. */
 object Tables {
+
+  /** The declared schema of every table, as the footers spell it. */
+  val schemas: Map[String, StructType] = Map(
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"),
+    "nation" -> ("n_nationkey INT, n_name STRING, n_regionkey INT"),
+    "region" -> ("r_regionkey INT, r_name STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> ("vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Harmless for non-nano tables; required before reading events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path(dir, name))
-  }
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schemas(name)).parquet(path(dir, name))
 
-  /** events with `ts` normalized to TimestampType (UTC session). */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = table(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // nano-epoch long -> micros (integer division keeps full precision)
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
+  /** events with `ts` as TimestampType (UTC session). */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    table(spark, dir, "events").withColumn("ts", col("ts").cast(TimestampType))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -3,6 +3,7 @@ package graft.io
 import graft.SparkSpec
 import graft.ops.{CommitLog, LakeRead}
 import graft.ops.CommitLog.Entry
+import org.apache.spark.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -860,6 +861,37 @@ class GraftLakeSpec extends SparkSpec {
     assert(sinkEntry.op.startsWith("stream:") &&
       sinkEntry.partBytes.keySet === Set("p9"),
       "sink commits must carry per-partition stats")
+  }
+
+  test("a versionAsOf read of an entry that records its data schema starts no job; an entry without it reads the same rows through the footer probe") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    def put(rows: Seq[(Long, Long, String)], mode: String): Unit =
+      rows.toDF("k", "v", "pday").write.format("graftlake")
+        .option("partitionColumn", "pday").mode(mode).save(root)
+    put((1L to 12L).map(k => (k, k * 10L, s"p${k % 3}")), "overwrite")
+    put(Seq((13L, 130L, "p1")), "append")
+    assert(CommitLog.readLog(root).map(_._2.dataSchema.map(_.fieldNames.toSeq)) ===
+      Seq(Some(Seq("k", "v")), Some(Seq("k", "v"))))
+    val (v1, jobs) = JobCount.of(s.sparkContext)(lake(root, "versionAsOf" -> "1"))
+    assert(jobs === 0)
+    val (head, headJobs) = JobCount.of(s.sparkContext)(lake(root))
+    assert(headJobs === 0)
+    val (v1Rows, headRows) = (canon(v1), canon(head))
+    assert(v1Rows.length === 12 && headRows.length === 13)
+    // drop the trailing schema column, as in an entry written before it
+    for (slot <- new java.io.File(root, "commitlog").listFiles() if slot.isDirectory) {
+      val f = new java.io.File(slot, "entry.tsv").toPath
+      val fields = java.nio.file.Files.readString(f).stripLineEnd.split("\t", -1)
+      java.nio.file.Files.writeString(f, fields.dropRight(1).mkString("\t") + "\n")
+    }
+    assert(CommitLog.readLog(root).map(_._2.dataSchema) === Seq(None, None))
+    val (probed, probeJobs) = JobCount.of(s.sparkContext)(lake(root, "versionAsOf" -> "1"))
+    assert(probeJobs > 0, "an entry without a schema is read through the footer probe")
+    assert(probed.schema === v1.schema)
+    assert(canon(probed) === v1Rows)
+    assert(canon(lake(root)) === headRows)
   }
 
   test("plain SQL consumes the table: CREATE TEMPORARY VIEW ... USING graftlake") {

@@ -103,10 +103,8 @@ object GraftLakeSource {
                     partitionOf: String => Option[String])
       : Map[String, Long] = {
     val base = new java.io.File(stagedDir)
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val entries = walk(base)
-      .filter(f => f.isFile && f.length() > 0)
+    val entries = graft.ops.VersionChain.parquetFiles(stagedDir)
+      .filter(_.length() > 0)
       .flatMap { f =>
         val rel = base.toPath.relativize(f.toPath).toString
           .replace(java.io.File.separatorChar, '/')

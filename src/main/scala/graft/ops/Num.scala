@@ -35,6 +35,18 @@ object Num {
 
   /** driver-side twin of [[floorEps]] for collected doubles. */
   def floorEpsLong(x: Double): Long = math.floor(x + 1e-6).toLong
+
+  /** The order-free content digest a lake or maintenance step is
+    * proved with: row count, xor of `key` (a per-row hash or a unique
+    * key), integer sum of `value`. xor and sum coalesce to 0, so
+    * an empty input digests to (0, 0, 0) in both engines. Aggregate
+    * columns only: `df.select(digest(..): _*)` is one global aggregate,
+    * `df.agg(other, digest(..): _*)` extends one. */
+  def digest(key: Column, value: Column,
+             nAs: String, xorAs: String, sumAs: String): Seq[Column] = Seq(
+    count(lit(1)).as(nAs),
+    coalesce(bit_xor(key), lit(0L)).as(xorAs),
+    coalesce(sum(value), lit(0L)).as(sumAs))
 }
 
 /** DuckDB-SQL fragments matching [[Num]] exactly. */
@@ -43,4 +55,10 @@ object NumSql {
   def floorEps(e: String): String = s"CAST(floor(($e) + 0.000001) AS BIGINT)"
   def roundEps(e: String): String = s"CAST(floor(($e) + 0.500000001) AS BIGINT)"
   def round1Eps(e: String): String = s"floor(($e) * 10 + 0.500000001) / 10.0"
+  /** SELECT-list twin of [[Num.digest]]; DuckDB's SUM widens to
+    * HUGEINT and its bit_xor keeps the key's type, hence both casts. */
+  def digest(key: String, value: String,
+             nAs: String, xorAs: String, sumAs: String): String =
+    s"COUNT(*) AS $nAs, CAST(COALESCE(bit_xor($key), 0) AS BIGINT) AS $xorAs, " +
+      s"CAST(COALESCE(SUM($value), 0) AS BIGINT) AS $sumAs"
 }

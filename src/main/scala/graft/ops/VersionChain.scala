@@ -245,6 +245,17 @@ object VersionChain {
     f.delete(); ()
   }
 
+  /** Every `.parquet` file under `p`, recursively (none if `p` does
+    * not exist); like [[rmTree]], a directory that vanishes or cannot
+    * be listed midway contributes nothing. */
+  def parquetFiles(p: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(p))
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+  }
+
   /** `q_compact_manifest`'s cumulative-split bin plan (day → bin):
     * deterministic in the table content only, so a streaming twin
     * that ingested the same rows derives the same plan — the shared

@@ -25,6 +25,54 @@ object MaintenancePipelineQuery {
   /** Canonical per-row content hash + metric (vc with NULL → −1). */
   private def rowHash: Column = VersionChain.rowHash
 
+  /** SQL twin of [[rowHash]]. */
+  private val rowHashSql = OracleSqlFrag.poly(
+    "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
+      "CAST(vc AS VARCHAR)")
+
+  /** [[Num.digest]] of a chain generation hashed by [[rowHash]] into
+    * `h`, and its twin over [[chainCte]]'s `h`. */
+  private def chainDigest: Seq[Column] =
+    Num.digest(col("h"), col("vc"), "n_rows", "xor_hash", "content_sum")
+  private val chainDigestSql =
+    NumSql.digest("h", "vc", "n_rows", "xor_hash", "content_sum")
+
+  /** [[Num.digest]] of staged commit-log events (`event_id`, `vc`),
+    * and its twin. */
+  private def clogDigest: Seq[Column] =
+    Num.digest(col("event_id"), col("vc"), "n_rows", "key_xor", "vc_sum")
+  private val clogDigestSql =
+    NumSql.digest("event_id", "vc", "n_rows", "key_xor", "vc_sum")
+
+  /** [[Num.digest]] of a merge fixture's customer rows (`custkey`,
+    * `bal`), and its twin. */
+  private def mergeDigest: Seq[Column] =
+    Num.digest(col("custkey"), col("bal"), "n_rows", "key_xor", "bal_sum")
+  private val mergeDigestSql =
+    NumSql.digest("custkey", "bal", "n_rows", "key_xor", "bal_sum")
+
+  /** The [[rowHash]] digest of `df` as one (step, outcome, version)
+    * row, and its twin over `rel`. */
+  private def stepStats(df: DataFrame, step: String, outcome: String,
+                        ver: Long): DataFrame =
+    df.withColumn("h", rowHash)
+      .select(Num.digest(col("h"), col("vc"), "n_rows", "xor_hash", "vc_sum"): _*)
+      .select(lit(step).as("step"), lit(outcome).as("outcome"),
+        lit(ver).as("version"), col("n_rows"), col("xor_hash"), col("vc_sum"))
+  private def stepStatsSql(step: String, outcome: String, ver: Long,
+                           rel: String): String =
+    s"""SELECT '$step' AS step, '$outcome' AS outcome,
+       |  CAST($ver AS BIGINT) AS version,
+       |  ${NumSql.digest(rowHashSql, "vc", "n_rows", "xor_hash", "vc_sum")}
+       |FROM $rel""".stripMargin
+
+  /** One labelled [[clogDigest]] row, and its twin over `rel`. */
+  private def clogStats(df: DataFrame, step: String): DataFrame =
+    df.select(clogDigest: _*)
+      .select(lit(step).as("step"), col("n_rows"), col("key_xor"), col("vc_sum"))
+  private def clogStatsSql(step: String, rel: String): String =
+    s"SELECT '$step' AS step, $clogDigestSql FROM $rel"
+
   // ------------------------------------------------ maintenance flagship
 
   /** `q_maintenance_pipeline` — the maintenance-cycle ACCOUNTING: one
@@ -49,10 +97,7 @@ object MaintenancePipelineQuery {
       spark.read.parquet(s"$root/$p").withColumn("h", rowHash)
     def acct(stage: String, df: DataFrame, fileKey: Column,
              nFilesOverride: Option[Column] = None): DataFrame = {
-      val base = df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-        coalesce(sum("vc"), lit(0L)).as("content_sum"),
-        countDistinct(fileKey).as("nf"))
+      val base = df.agg(countDistinct(fileKey).as("nf"), chainDigest: _*)
       base.select(lit(stage).as("stage"),
         nFilesOverride.getOrElse(col("nf")).as("n_files"),
         col("n_rows"), col("xor_hash"), col("content_sum"))
@@ -70,16 +115,13 @@ object MaintenancePipelineQuery {
     * the raw events — base (v0 content), the bin plan, binned (v1),
     * and binned3 (v3 content: the point update applied to the swept
     * subset). A writer that mutated the wrong rows hash-fails. */
-  private val chainCte = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
+  private val chainCte =
     s"""WITH base AS (
        |  SELECT event_id, event_type,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
        |    CAST(ts AS DATE) AS day
        |  FROM events),
-       |hashed AS (SELECT *, $h AS h FROM base),
+       |hashed AS (SELECT *, $rowHashSql AS h FROM base),
        |daily AS (
        |  SELECT day, CAST(SUM(24 + length(event_type)) AS BIGINT) AS bytes
        |  FROM base GROUP BY 1),
@@ -97,33 +139,23 @@ object MaintenancePipelineQuery {
        |    CASE WHEN event_id % 7 = 0 THEN vc + 100 ELSE vc END AS vc, day
        |  FROM base WHERE EXTRACT(day FROM day) <= 20),
        |binned3 AS (
-       |  SELECT b3.*, $h AS h, p.bin
+       |  SELECT b3.*, $rowHashSql AS h, p.bin
        |  FROM base3 b3 JOIN plan_ p ON b3.day = p.day)""".stripMargin
-  }
 
   private val sql =
     s"""$chainCte,
        |rows_ AS (
        |  SELECT '1_ingest' AS stage,
-       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files,
-       |    COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT) AS xor_hash,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS content_sum
+       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files, $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT '2_compact', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT '2_compact', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT '3_retained', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT '3_retained', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned WHERE EXTRACT(day FROM day) <= 20
        |  UNION ALL
-       |  SELECT '4_deleted', 0, COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT '4_deleted', 0, $chainDigestSql
        |  FROM binned WHERE EXTRACT(day FROM day) > 20)
        |SELECT stage, n_files, n_rows, xor_hash, content_sum
        |FROM rows_ ORDER BY stage""".stripMargin
@@ -163,17 +195,8 @@ object MaintenancePipelineQuery {
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = VersionChain.ensure(spark, dir)
     val log = VersionChain.manifest(spark, root)
-    def triple(v: Long, fileKey: String, label: Long = -1L): DataFrame = {
-      val (c, df) = VersionChain.asOf(spark, root, log, v)
-      df.withColumn("h", rowHash)
-        .agg(countDistinct(col(fileKey)).as("n_files"),
-          count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("content_sum"))
-        .select(lit(if (label >= 0) label else v).as("version"),
-          lit(c.op).as("op"), col("n_files"),
-          col("n_rows"), col("xor_hash"), col("content_sum"))
-    }
+    def triple(v: Long, fileKey: String, label: Long = -1L): DataFrame =
+      versionTriple(spark, root, log, if (label >= 0) label else v, v, fileKey)
     // timestamp → log version → chain version (log slot N+1 holds
     // chain generation N): half-way between two commits must resolve
     // the EARLIER one; far future resolves the head
@@ -193,39 +216,38 @@ object MaintenancePipelineQuery {
       .orderBy("version")
   }
 
+  /** Chain version `v`, resolved through `log`: its file count and
+    * [[chainDigest]] as one row labelled `label`. */
+  private def versionTriple(spark: SparkSession, root: String,
+                            log: Seq[VersionChain.Commit], label: Long,
+                            v: Long, fileKey: String): DataFrame = {
+    val (c, df) = VersionChain.asOf(spark, root, log, v)
+    df.withColumn("h", rowHash)
+      .agg(countDistinct(col(fileKey)).as("n_files"), chainDigest: _*)
+      .select(lit(label).as("version"), lit(c.op).as("op"), col("n_files"),
+        col("n_rows"), col("xor_hash"), col("content_sum"))
+  }
+
   private val timeTravelSql =
     s"""$chainCte,
        |rows_ AS (
        |  SELECT 0 AS version, 'ingest' AS op,
-       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files,
-       |    COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT) AS xor_hash,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS content_sum
+       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files, $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT 1, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 1, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT 2, 'retain', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 2, 'retain', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned WHERE EXTRACT(day FROM day) <= 20
        |  UNION ALL
-       |  SELECT 3, 'update', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 3, 'update', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned3
        |  UNION ALL
-       |  SELECT 90, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 90, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT 91, 'update', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 91, 'update', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned3)
        |SELECT CAST(version AS BIGINT) AS version, op, n_files, n_rows,
        |  xor_hash, content_sum
@@ -282,12 +304,6 @@ object MaintenancePipelineQuery {
     val log = VersionChain.manifest(spark, root)
     val expired = log.sortBy(-_.version).drop(keepNewest)
       .map(_.version).toSet
-    def parquetFiles(p: String): Seq[java.io.File] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      val d = new java.io.File(p)
-      if (d.exists()) walk(d).filter(_.getName.endsWith(".parquet")) else Nil
-    }
     // pre-sweep audit: record what will be expired before expiring it.
     // ONE fused job over a version-tagged union of all generations —
     // a per-generation loop of agg jobs costs |versions| scheduler
@@ -302,7 +318,7 @@ object MaintenancePipelineQuery {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap // bounded: |versions| rows
     val audit = log.map { c =>
-      val nf = parquetFiles(VersionChain.resolvePath(root, c.path))
+      val nf = VersionChain.parquetFiles(VersionChain.resolvePath(root, c.path))
         .size.toLong
       val (nRows, xor) = counts(c.version)
       val status = if (expired(c.version)) "vacuumed" else "live"
@@ -435,19 +451,12 @@ object MaintenancePipelineQuery {
         s"overlapping stale commit was not rejected: $other")
     }
     CommitLog.purgeAborted(root) // bound prior runs' tombstones
-    def parquetCount(p: String): Long = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      val d = new java.io.File(p)
-      if (d.exists()) walk(d).count(_.getName.endsWith(".parquet")).toLong
-      else 0L
-    }
+    def parquetCount(p: String): Long = VersionChain.parquetFiles(p).size.toLong
     // accounting is EAGER (collected before the sweep mutates the FS —
     // a lazy frame would read after the delete)
     def tripleOf(p: String): (Long, Long, Long) = {
       val r = spark.read.schema(clogStaged(e).schema).parquet(p)
-        .agg(count(lit(1)), coalesce(expr("bit_xor(event_id)"), lit(0L)),
-          coalesce(sum("vc"), lit(0L))).head()
+        .select(clogDigest: _*).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     val liveBefore = tripleOf(s"$root/data/live")
@@ -482,25 +491,18 @@ object MaintenancePipelineQuery {
        |  SELECT * FROM e WHERE dom BETWEEN 12 AND 18 AND event_id % 7 <> 0),
        |rows_ AS (
        |  SELECT '1_live_before' AS stage,
-       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files,
-       |    COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+       |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_files, $clogDigestSql
        |  FROM live
        |  UNION ALL
        |  SELECT '2_orphan_staged', CAST(COUNT(DISTINCT day) AS BIGINT),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM orph
        |  UNION ALL
        |  SELECT '3_swept', CAST(COUNT(DISTINCT day) AS BIGINT), 1, 0, 0
        |  FROM orph
        |  UNION ALL
        |  SELECT '4_live_after', CAST(COUNT(DISTINCT day) AS BIGINT),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM live
        |  UNION ALL
        |  SELECT '5_orphan_after', 0, 0, 0, 0)
@@ -648,13 +650,7 @@ object MaintenancePipelineQuery {
     val mainHead = CommitLog.latestCommitted(s"$root/main")
     def triple(step: String, outcome: String, ver: Long,
                path: String): DataFrame =
-      spark.read.schema(e.schema).parquet(path).withColumn("h", rowHash)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), lit(outcome).as("outcome"),
-          lit(ver).as("version"), col("n_rows"), col("xor_hash"),
-          col("vc_sum"))
+      stepStats(spark.read.schema(e.schema).parquet(path), step, outcome, ver)
     val log = CommitLog.readLog(s"$root/main").toMap
     def violRow(step: String, outcome: String, ver: Long,
                 audit: Seq[(String, String, Long)]) = {
@@ -681,9 +677,6 @@ object MaintenancePipelineQuery {
   }
 
   private val wapSql = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
     val cn = OracleSqlFrag.poly("'chk_nonneg'")
     s"""WITH e AS (
        |  SELECT event_id, event_type,
@@ -695,33 +688,20 @@ object MaintenancePipelineQuery {
        |    CASE WHEN event_id % 4 = 0 THEN vc + 50 ELSE vc END AS vc
        |  FROM e WHERE dom BETWEEN 6 AND 7),
        |rows_ AS (
-       |  SELECT '1_main_base' AS step, 'commit' AS outcome,
-       |    CAST(1 AS BIGINT) AS version, COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor($h), 0) AS BIGINT) AS xor_hash,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-       |  FROM e
+       |  ${stepStatsSql("1_main_base", "commit", 1L, "e")}
        |  UNION ALL
-       |  SELECT '2_branch_good', 'commit', 2, COUNT(*),
-       |    CAST(COALESCE(bit_xor($h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
-       |  FROM good
+       |  ${stepStatsSql("2_branch_good", "commit", 2L, "good")}
        |  UNION ALL
        |  SELECT '3_audit_good', 'pass', 2, 0, 0, 0
        |  UNION ALL
-       |  SELECT '4_published', 'publish', 2, COUNT(*),
-       |    CAST(COALESCE(bit_xor($h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
-       |  FROM good
+       |  ${stepStatsSql("4_published", "publish", 2L, "good")}
        |  UNION ALL
        |  SELECT '5_audit_bad', 'refused', -1,
        |    (SELECT COUNT(*) FROM e
        |     WHERE dom BETWEEN 6 AND 7 AND event_id % 5 = 0),
        |    CAST($cn AS BIGINT), 1
        |  UNION ALL
-       |  SELECT '6_main_head', 'head', 2, COUNT(*),
-       |    CAST(COALESCE(bit_xor($h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
-       |  FROM good)
+       |  ${stepStatsSql("6_main_head", "head", 2L, "good")})
        |SELECT step, outcome, version, n_rows, xor_hash, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -762,9 +742,7 @@ object MaintenancePipelineQuery {
         .values.map(_._2).toSeq.distinct.sorted
       paths.map(spark.read.schema(e.schema).parquet(_)).reduce(_ unionAll _)
         .withColumn("h", rowHash)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .select(Num.digest(col("h"), col("vc"), "n_rows", "xor_hash", "vc_sum"): _*)
         .select(lit(step).as("step"), lit(ver).as("version"),
           col("n_rows"), col("xor_hash"), col("vc_sum"))
     }
@@ -792,14 +770,9 @@ object MaintenancePipelineQuery {
   }
 
   private val checkpointFoldSql = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
     def stats(step: String, ver: Long) =
       s"""SELECT '$step' AS step, CAST($ver AS BIGINT) AS version,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor($h), 0) AS BIGINT) AS xor_hash,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+         |  ${NumSql.digest(rowHashSql, "vc", "n_rows", "xor_hash", "vc_sum")}
          |FROM e""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id, event_type,
@@ -1002,10 +975,8 @@ object MaintenancePipelineQuery {
       col("row_id"), col("event_id"), col("vc")))
     def stage(df: DataFrame, name: String): DataFrame =
       df.withColumn("h", h)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(max("row_id"), lit(0L)).as("id_hi"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_map"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .agg(coalesce(max("row_id"), lit(0L)).as("id_hi"),
+          Num.digest(col("h"), col("vc"), "n_rows", "xor_map", "vc_sum"): _*)
         .select(lit(name).as("stage"), col("n_rows"), col("id_hi"),
           col("xor_map"), col("vc_sum"))
     stage(g0, "1_ingest")
@@ -1021,10 +992,9 @@ object MaintenancePipelineQuery {
       "CAST(row_id AS VARCHAR) || '|' || CAST(event_id AS VARCHAR)" +
         " || '|' || CAST(vc AS VARCHAR)")
     def stage(name: String, rel: String) =
-      s"""SELECT '$name' AS stage, CAST(COUNT(*) AS BIGINT) AS n_rows,
+      s"""SELECT '$name' AS stage,
          |  CAST(COALESCE(MAX(row_id), 0) AS BIGINT) AS id_hi,
-         |  CAST(COALESCE(bit_xor($h), 0) AS BIGINT) AS xor_map,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+         |  ${NumSql.digest(h, "vc", "n_rows", "xor_map", "vc_sum")}
          |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id, COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -1163,9 +1133,7 @@ object MaintenancePipelineQuery {
       spark.read.schema(staged).parquet(owners.toSeq.map { case (p, dp) =>
           s"$root/$dp/pday=$p"
         }.sorted: _*)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .select(clogDigest: _*)
         .select(lit(s"after_v$v").as("step"),
           lit(owners.size.toLong).as("n_parts"), col("n_rows"),
           col("key_xor"), col("vc_sum"))
@@ -1177,10 +1145,7 @@ object MaintenancePipelineQuery {
   private val feedReplicaSql = {
     def stats(step: String, rel: String) =
       s"""SELECT '$step' AS step,
-         |  (SELECT COUNT(DISTINCT day) FROM e) AS n_parts,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+         |  (SELECT COUNT(DISTINCT day) FROM e) AS n_parts, $clogDigestSql
          |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id,
@@ -1281,35 +1246,23 @@ object MaintenancePipelineQuery {
           .option("partitionColumn", "pday")) {
         case (r, (k, v)) => r.option(k, v)
       }.load(root)
-    def stats(df: DataFrame, step: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-        coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), col("n_rows"), col("key_xor"),
-          col("vc_sum"))
     // the layered leg: a fresh single-partition log over the
     // mergeConc staged data — two disjoint-range MERGEs layered on
     // the base, read through the connector's merge-on-read path
     val lakeLog = ensureLakeLayerLog(spark, dir)
     val layered = spark.read.format("graftlake")
       .option("keyColumn", "event_id").load(lakeLog)
-    stats(lk(), "1_head")
-      .unionAll(stats(lk("versionAsOf" -> "1"), "2_asof1"))
-      .unionAll(stats(lk().filter(
+    clogStats(lk(), "1_head")
+      .unionAll(clogStats(lk("versionAsOf" -> "1"), "2_asof1"))
+      .unionAll(clogStats(lk().filter(
         dayofmonth(to_date(col("pday"))).between(5, 8)), "3_pruned"))
-      .unionAll(stats(lk("timestampAsOf" ->
+      .unionAll(clogStats(lk("timestampAsOf" ->
         s"${CommitLog.commitTimestamp(2L)}"), "4_ts2"))
-      .unionAll(stats(layered, "5_layered"))
+      .unionAll(clogStats(layered, "5_layered"))
       .orderBy("step")
   }
 
   private val lakeReadSql = {
-    def stats(step: String, rel: String) =
-      s"""SELECT '$step' AS step,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-         |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id, event_type,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -1349,15 +1302,15 @@ object MaintenancePipelineQuery {
        |    CASE WHEN event_id % 5 = 0 THEN vc - 50 ELSE vc END
        |  FROM e, qs WHERE event_id BETWEEN q3 + 1 AND mx),
        |rows_ AS (
-       |  ${stats("1_head", "resolved")}
+       |  ${clogStatsSql("1_head", "resolved")}
        |  UNION ALL
-       |  ${stats("2_asof1", "e")}
+       |  ${clogStatsSql("2_asof1", "e")}
        |  UNION ALL
-       |  ${stats("3_pruned", "pruned")}
+       |  ${clogStatsSql("3_pruned", "pruned")}
        |  UNION ALL
-       |  ${stats("4_ts2", "asof2")}
+       |  ${clogStatsSql("4_ts2", "asof2")}
        |  UNION ALL
-       |  ${stats("5_layered", "merged")})
+       |  ${clogStatsSql("5_layered", "merged")})
        |SELECT step, n_rows, key_xor, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -1418,25 +1371,13 @@ object MaintenancePipelineQuery {
     def at(v: Long): DataFrame = spark.read.format("graftlake")
       .option("partitionColumn", "pday")
       .option("versionAsOf", v.toString).load(root)
-    def stats(df: DataFrame, step: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-        coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), col("n_rows"), col("key_xor"),
-          col("vc_sum"))
-    stats(at(1L), "1_overwrite")
-      .unionAll(stats(at(2L), "2_sweep"))
-      .unionAll(stats(at(3L), "3_append"))
+    clogStats(at(1L), "1_overwrite")
+      .unionAll(clogStats(at(2L), "2_sweep"))
+      .unionAll(clogStats(at(3L), "3_append"))
       .orderBy("step")
   }
 
   private val lakeWriteSql = {
-    def stats(step: String, rel: String) =
-      s"""SELECT '$step' AS step,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-         |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -1452,11 +1393,11 @@ object MaintenancePipelineQuery {
        |  UNION ALL
        |  SELECT event_id + 1000000000, vc + 7 FROM e WHERE dom >= 21),
        |rows_ AS (
-       |  ${stats("1_overwrite", "e")}
+       |  ${clogStatsSql("1_overwrite", "e")}
        |  UNION ALL
-       |  ${stats("2_sweep", "v2")}
+       |  ${clogStatsSql("2_sweep", "v2")}
        |  UNION ALL
-       |  ${stats("3_append", "v3")})
+       |  ${clogStatsSql("3_append", "v3")})
        |SELECT step, n_rows, key_xor, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -1501,12 +1442,6 @@ object MaintenancePipelineQuery {
     spark.conf.set("spark.sql.catalog.lake", "graft.io.GraftLakeCatalog")
     spark.conf.set("spark.sql.catalog.lake.root", catRoot)
     val t = s"lake.`${new java.io.File(root).getName}`"
-    def stats(df: DataFrame, step: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-        coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), col("n_rows"), col("key_xor"),
-          col("vc_sum"))
     // v2's logical commit stamp as a UTC SQL timestamp literal
     val ts2 = java.time.Instant
       .ofEpochSecond(CommitLog.commitTimestamp(2L)).toString
@@ -1533,7 +1468,7 @@ object MaintenancePipelineQuery {
       "SELECT event_id, vc, pday FROM lake_sql_ins_src")
     require(CommitLog.committedVersions(insRoot) == Seq(1L, 2L),
       "the SQL insert must land exactly one commit")
-    val insertStats = stats(spark.sql(s"SELECT * FROM lake.`$insName`"),
+    val insertStats = clogStats(spark.sql(s"SELECT * FROM lake.`$insName`"),
       "4_insert_sql").localCheckpoint(true) // BEFORE the delete mutates
     // the partition-granular SQL DELETE: day 3's hive value, looked up
     // from the data (one 1-row driver agg)
@@ -1542,24 +1477,18 @@ object MaintenancePipelineQuery {
     spark.sql(s"DELETE FROM lake.`$insName` WHERE pday = '$day3'")
     require(CommitLog.committedVersions(insRoot) == Seq(1L, 2L, 3L),
       "the SQL delete must land exactly one commit")
-    stats(spark.sql(s"SELECT * FROM $t"), "1_head_sql")
-      .unionAll(stats(spark.sql(s"SELECT * FROM $t VERSION AS OF 1"),
+    clogStats(spark.sql(s"SELECT * FROM $t"), "1_head_sql")
+      .unionAll(clogStats(spark.sql(s"SELECT * FROM $t VERSION AS OF 1"),
         "2_asof_sql"))
-      .unionAll(stats(spark.sql(
+      .unionAll(clogStats(spark.sql(
         s"SELECT * FROM $t TIMESTAMP AS OF '$ts2'"), "3_ts_sql"))
       .unionAll(insertStats)
-      .unionAll(stats(spark.sql(s"SELECT * FROM lake.`$insName`"),
+      .unionAll(clogStats(spark.sql(s"SELECT * FROM lake.`$insName`"),
         "5_delete_sql"))
       .orderBy("step")
   }
 
   private val lakeSqlSql = {
-    def stats(step: String, rel: String) =
-      s"""SELECT '$step' AS step,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-         |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -1580,15 +1509,15 @@ object MaintenancePipelineQuery {
        |  SELECT event_id + 1000000000, vc + 7, dom FROM e
        |  WHERE dom BETWEEN 6 AND 8),
        |rows_ AS (
-       |  ${stats("1_head_sql", "v3")}
+       |  ${clogStatsSql("1_head_sql", "v3")}
        |  UNION ALL
-       |  ${stats("2_asof_sql", "e")}
+       |  ${clogStatsSql("2_asof_sql", "e")}
        |  UNION ALL
-       |  ${stats("3_ts_sql", "v2")}
+       |  ${clogStatsSql("3_ts_sql", "v2")}
        |  UNION ALL
-       |  ${stats("4_insert_sql", "ins")}
+       |  ${clogStatsSql("4_insert_sql", "ins")}
        |  UNION ALL
-       |  ${stats("5_delete_sql", "(SELECT * FROM ins WHERE dom <> 3)")})
+       |  ${clogStatsSql("5_delete_sql", "(SELECT * FROM ins WHERE dom <> 3)")})
        |SELECT step, n_rows, key_xor, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -1655,9 +1584,7 @@ object MaintenancePipelineQuery {
           Seq((hull.getLong(0), hull.getLong(1))))))
     }
     def stats(df: DataFrame, step: String): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-        coalesce(sum("bal"), lit(0L)).as("bal_sum"))
+      df.select(mergeDigest: _*)
         .select(lit(step).as("step"), col("n_rows"), col("key_xor"),
           col("bal_sum"))
     def at(opts: (String, String)*): DataFrame =
@@ -1678,15 +1605,9 @@ object MaintenancePipelineQuery {
        |  SELECT custkey, bal FROM carried
        |  UNION ALL SELECT custkey, bal FROM gen1),
        |rows_ AS (
-       |  SELECT '1_masked' AS step, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT) AS key_xor,
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT) AS bal_sum
-       |  FROM finalc
+       |  SELECT '1_masked' AS step, $mergeDigestSql FROM finalc
        |  UNION ALL
-       |  SELECT '2_base', CAST(COUNT(*) AS BIGINT),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT)
-       |  FROM base)
+       |  SELECT '2_base', $mergeDigestSql FROM base)
        |SELECT step, n_rows, key_xor, bal_sum
        |FROM rows_ ORDER BY step""".stripMargin
 
@@ -1747,9 +1668,7 @@ object MaintenancePipelineQuery {
     def stats(df: DataFrame, src: String): DataFrame =
       df.groupBy(col("_commit_version").as("version"),
           col("_change_type").as("change_type"))
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .agg(clogDigest.head, clogDigest.tail: _*)
         .select(lit(src).as("src"), col("version"), col("change_type"),
           col("n_rows"), col("key_xor"), col("vc_sum"))
     stats(graft.io.GraftLakeSource.tableChanges(spark, rootA, 0L, 3L,
@@ -1762,10 +1681,7 @@ object MaintenancePipelineQuery {
   private val cdcRead2Sql = {
     def stats(src: String, v: Long, change: String, rel: String) =
       s"""SELECT '$src' AS src, CAST($v AS BIGINT) AS version,
-         |  '$change' AS change_type,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+         |  '$change' AS change_type, $clogDigestSql
          |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id,
@@ -1922,44 +1838,24 @@ object MaintenancePipelineQuery {
       CommitLog.stableVersion(logRoot)))
     require(CommitLog.resolveLayers(logRoot, "events").size == 1,
       "compaction must shadow every layer")
-    val h = rowHash
-    def stats(df: DataFrame, step: String, outcome: String,
-              ver: Long): DataFrame =
-      df.withColumn("h", h)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), lit(outcome).as("outcome"),
-          lit(ver).as("version"), col("n_rows"), col("xor_hash"),
-          col("vc_sum"))
     val refusedRow = spark.range(1)
       .select(lit("4_overlap").as("step"), lit(refused).as("outcome"),
         lit(-1L).as("version"), lit(0L).as("n_rows"),
         lit(0L).as("xor_hash"), lit(0L).as("vc_sum"))
     def stored(p: String) = spark.read.schema(e.schema).parquet(s"$root/data/$p")
-    stats(stored("base"), "1_base", "commit", 1L)
-      .unionAll(stats(stored("low"),
+    stepStats(stored("base"), "1_base", "commit", 1L)
+      .unionAll(stepStats(stored("low"),
         "2_merge_low", "commit", vLow))
-      .unionAll(stats(stored("high"),
+      .unionAll(stepStats(stored("high"),
         "3_merge_high", "commit", vHigh))
       .unionAll(refusedRow)
-      .unionAll(stats(layered, "5_layered", "read", vHigh))
-      .unionAll(stats(spark.read.schema(layered.schema)
+      .unionAll(stepStats(layered, "5_layered", "read", vHigh))
+      .unionAll(stepStats(spark.read.schema(layered.schema)
         .parquet(s"$root/data/compacted"), "6_compacted", "commit", vComp))
       .orderBy("step")
   }
 
   private val mergeConcurrentSql = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
-    def stats(step: String, outcome: String, ver: Long, rel: String) =
-      s"""SELECT '$step' AS step, '$outcome' AS outcome,
-         |  CAST($ver AS BIGINT) AS version,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor($h), 0) AS BIGINT) AS xor_hash,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-         |FROM $rel""".stripMargin
     s"""WITH e AS (
        |  SELECT event_id, event_type,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc
@@ -1983,17 +1879,17 @@ object MaintenancePipelineQuery {
        |  UNION ALL SELECT * FROM low
        |  UNION ALL SELECT * FROM high),
        |rows_ AS (
-       |  ${stats("1_base", "commit", 1L, "e")}
+       |  ${stepStatsSql("1_base", "commit", 1L, "e")}
        |  UNION ALL
-       |  ${stats("2_merge_low", "commit", 2L, "low")}
+       |  ${stepStatsSql("2_merge_low", "commit", 2L, "low")}
        |  UNION ALL
-       |  ${stats("3_merge_high", "commit", 3L, "high")}
+       |  ${stepStatsSql("3_merge_high", "commit", 3L, "high")}
        |  UNION ALL
        |  SELECT '4_overlap', 'refused', -1, 0, 0, 0
        |  UNION ALL
-       |  ${stats("5_layered", "read", 3L, "merged")}
+       |  ${stepStatsSql("5_layered", "read", 3L, "merged")}
        |  UNION ALL
-       |  ${stats("6_compacted", "commit", 5L, "merged")})
+       |  ${stepStatsSql("6_compacted", "commit", 5L, "merged")})
        |SELECT step, outcome, version, n_rows, xor_hash, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -2052,15 +1948,6 @@ object MaintenancePipelineQuery {
       .getOrElse(sys.error(s"fresh batch $b must apply")))
     val re = deliver(1L) // the crash-window re-delivery
     require(re.isEmpty, "a re-delivered batch must be skipped")
-    def stats(df: DataFrame, step: String, outcome: String,
-              ver: Long): DataFrame =
-      df.withColumn("h", rowHash)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
-        .select(lit(step).as("step"), lit(outcome).as("outcome"),
-          lit(ver).as("version"), col("n_rows"), col("xor_hash"),
-          col("vc_sum"))
     // the resolved LIVE table: the owners' distinct data paths —
     // batches own disjoint day partitions by construction
     val livePaths = graft.ops.CommitLog.resolvePartitions(logRoot)
@@ -2073,25 +1960,17 @@ object MaintenancePipelineQuery {
         lit("skipped").as("outcome"), lit(-1L).as("version"),
         lit(0L).as("n_rows"), lit(0L).as("xor_hash"),
         lit(0L).as("vc_sum"))
-    (0 to 2).map(b => stats(spark.read.schema(e.schema).parquet(s"$root/data/b$b"),
+    (0 to 2).map(b => stepStats(spark.read.schema(e.schema).parquet(s"$root/data/b$b"),
         s"${b + 1}_apply_b$b", "applied", vs(b)))
       .reduce(_ unionAll _)
       .unionAll(skipRow)
-      .unionAll(stats(live, "5_head", "head", headV))
+      .unionAll(stepStats(live, "5_head", "head", headV))
       .orderBy("step")
   }
 
   private val streamCommitSql = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
     def bstats(step: String, ver: Long, cond: String) =
-      s"""SELECT '$step' AS step, 'applied' AS outcome,
-         |  CAST($ver AS BIGINT) AS version,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COALESCE(bit_xor($h), 0) AS BIGINT) AS xor_hash,
-         |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
-         |FROM e WHERE $cond""".stripMargin
+      stepStatsSql(step, "applied", ver, s"e WHERE $cond")
     s"""WITH e AS (
        |  SELECT event_id, event_type,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -2106,10 +1985,7 @@ object MaintenancePipelineQuery {
        |  UNION ALL
        |  SELECT '4_redeliver_b1', 'skipped', -1, 0, 0, 0
        |  UNION ALL
-       |  SELECT '5_head', 'head', 3, CAST(COUNT(*) AS BIGINT),
-       |    CAST(COALESCE(bit_xor($h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
-       |  FROM e)
+       |  ${stepStatsSql("5_head", "head", 3L, "e")})
        |SELECT step, outcome, version, n_rows, xor_hash, vc_sum
        |FROM rows_ ORDER BY step""".stripMargin
   }
@@ -2332,26 +2208,15 @@ object MaintenancePipelineQuery {
       graft.ops.CommitLog.latestCommitted(root)))
 
     val newLog = VersionChain.manifest(spark, root)
-    def triple(label: Long, v: Long): DataFrame = {
-      val (c, df) = VersionChain.asOf(spark, root, newLog, v)
-      df.withColumn("h", rowHash)
-        .agg(countDistinct(col("bin")).as("n_files"),
-          count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("content_sum"))
-        .select(lit(label).as("version"), lit(c.op).as("op"),
-          col("n_files"), col("n_rows"), col("xor_hash"),
-          col("content_sum"))
-    }
+    def triple(label: Long, v: Long): DataFrame =
+      versionTriple(spark, root, newLog, label, v, "bin")
     // CDF accounting reads the STORED restore delta (the certificate
     // is over what was committed, not what was computed)
     val storedCdf = spark.read.schema(restoreCdf.schema).parquet(
       VersionChain.resolvePath(root, "cdf/v4")).withColumn("h", rowHash)
     def cdfRow(label: Long, change: String): DataFrame =
       storedCdf.filter(col("change_type") === change)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("content_sum"))
+        .select(chainDigest: _*)
         .select(lit(label).as("version"), lit(s"cdf_$change").as("op"),
           lit(0L).as("n_files"), col("n_rows"), col("xor_hash"),
           col("content_sum"))
@@ -2377,35 +2242,22 @@ object MaintenancePipelineQuery {
     s"""$chainCte,
        |rows_ AS (
        |  SELECT 3 AS version, 'update' AS op,
-       |    CAST(COUNT(DISTINCT bin) AS BIGINT) AS n_files,
-       |    COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT) AS xor_hash,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS content_sum
+       |    CAST(COUNT(DISTINCT bin) AS BIGINT) AS n_files, $chainDigestSql
        |  FROM binned3
        |  UNION ALL
-       |  SELECT 4, 'restore', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 4, 'restore', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT 60, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 60, 'compact', CAST(COUNT(DISTINCT bin) AS BIGINT), $chainDigestSql
        |  FROM binned
        |  UNION ALL
-       |  SELECT 70, 'cdf_insert', 0, COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 70, 'cdf_insert', 0, $chainDigestSql
        |  FROM binned WHERE EXTRACT(day FROM day) > 20
        |  UNION ALL
-       |  SELECT 71, 'cdf_update_post', 0, COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 71, 'cdf_update_post', 0, $chainDigestSql
        |  FROM binned WHERE EXTRACT(day FROM day) <= 20 AND event_id % 7 = 0
        |  UNION ALL
-       |  SELECT 72, 'cdf_update_pre', 0, COUNT(*),
-       |    CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |  SELECT 72, 'cdf_update_pre', 0, $chainDigestSql
        |  FROM binned3 WHERE event_id % 7 = 0)
        |SELECT CAST(version AS BIGINT) AS version, op, n_files, n_rows,
        |  xor_hash, content_sum
@@ -2441,9 +2293,7 @@ object MaintenancePipelineQuery {
           spark.read.parquet(s"$root/${c.cdf_path}")
             .select(col("change_type"), col("event_id"), col("vc"))
       feed.groupBy("change_type")
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .agg(clogDigest.head, clogDigest.tail: _*)
         .select(lit(c.version).as("version"), col("change_type"),
           col("n_rows"), col("key_xor"), col("vc_sum"))
     }.reduce(_ unionAll _).orderBy("version", "change_type")
@@ -2452,24 +2302,17 @@ object MaintenancePipelineQuery {
   private val cdfReadSql =
     s"""$chainCte
        |SELECT CAST(0 AS BIGINT) AS version, 'insert' AS change_type,
-       |  COUNT(*) AS n_rows,
-       |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-       |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+       |  $clogDigestSql
        |FROM base
        |UNION ALL
-       |SELECT 2, 'remove', COUNT(*),
-       |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |  CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |SELECT 2, 'remove', $clogDigestSql
        |FROM base WHERE EXTRACT(day FROM day) > 20
        |UNION ALL
-       |SELECT 3, 'update_pre', COUNT(*),
-       |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |  CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |SELECT 3, 'update_pre', $clogDigestSql
        |FROM base WHERE EXTRACT(day FROM day) <= 20 AND event_id % 7 = 0
        |UNION ALL
-       |SELECT 3, 'update_post', COUNT(*),
-       |  CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |  CAST(COALESCE(SUM(vc + 100), 0) AS BIGINT)
+       |SELECT 3, 'update_post',
+       |  ${NumSql.digest("event_id", "vc + 100", "n_rows", "key_xor", "vc_sum")}
        |FROM base WHERE EXTRACT(day FROM day) <= 20 AND event_id % 7 = 0
        |ORDER BY version, change_type""".stripMargin
 
@@ -2535,20 +2378,14 @@ object MaintenancePipelineQuery {
     val stored = partEvoBase(spark, dir).schema
     log.map { case (v, spec, p) =>
       spark.read.schema(stored).parquet(s"$root/$p").withColumn("h", rowHash)
-        .agg(countDistinct(col(spec)).as("n_parts"),
-          count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(h)"), lit(0L)).as("xor_hash"),
-          coalesce(sum("vc"), lit(0L)).as("content_sum"))
+        .agg(countDistinct(col(spec)).as("n_parts"), chainDigest: _*)
         .select(lit(v).as("version"), lit(spec).as("spec"),
           col("n_parts"), col("n_rows"), col("xor_hash"),
           col("content_sum"))
     }.reduce(_ unionAll _).orderBy("version")
   }
 
-  private val partitionEvolutionSql = {
-    val h = OracleSqlFrag.poly(
-      "CAST(event_id AS VARCHAR) || '|' || event_type || '|' || " +
-        "CAST(vc AS VARCHAR)")
+  private val partitionEvolutionSql =
     s"""WITH base AS (
        |  SELECT event_id, event_type,
        |    COALESCE(${NumSql.cents("value")}, -1) AS vc,
@@ -2556,19 +2393,14 @@ object MaintenancePipelineQuery {
        |  FROM events),
        |hashed AS (
        |  SELECT *, 'p' || CAST((EXTRACT(day FROM day) - 1) // 10 AS VARCHAR)
-       |    AS period, $h AS h FROM base)
+       |    AS period, $rowHashSql AS h FROM base)
        |SELECT CAST(0 AS BIGINT) AS version, 'day' AS spec,
-       |  COUNT(DISTINCT day) AS n_parts, COUNT(*) AS n_rows,
-       |  CAST(COALESCE(bit_xor(h), 0) AS BIGINT) AS xor_hash,
-       |  CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS content_sum
+       |  COUNT(DISTINCT day) AS n_parts, $chainDigestSql
        |FROM hashed
        |UNION ALL
-       |SELECT 1, 'period', COUNT(DISTINCT period), COUNT(*),
-       |  CAST(COALESCE(bit_xor(h), 0) AS BIGINT),
-       |  CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |SELECT 1, 'period', COUNT(DISTINCT period), $chainDigestSql
        |FROM hashed
        |ORDER BY version""".stripMargin
-  }
 
   // -------------------------------------------------------- version diff
 
@@ -2855,22 +2687,12 @@ object MaintenancePipelineQuery {
 
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureMerge(spark, dir)
-    val feed = spark.read.parquet(s"$root/cdf/v1")
-      .groupBy("change_type")
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-        coalesce(sum("bal"), lit(0L)).as("bal_sum"))
-      .select(col("change_type").as("row_kind"), col("n_rows"),
-        col("key_xor"), col("bal_sum"), lit(-1L).as("n_files"))
+    val feed = mergeFeedRows(spark.read.parquet(s"$root/cdf/v1"))
     val man = mergeManifest(spark, root)
     val (carry, commit) = man.partition(!_.rewritten)
     def triple(kind: String, files: Seq[MergeFile]): DataFrame =
-      spark.read.parquet(files.map(f => s"$root/${f.file}"): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-          coalesce(sum("bal"), lit(0L)).as("bal_sum"))
-        .select(lit(kind).as("row_kind"), col("n_rows"), col("key_xor"),
-          col("bal_sum"), lit(files.size.toLong).as("n_files"))
+      mergeRow(kind, spark.read.parquet(files.map(f => s"$root/${f.file}"): _*),
+        files.size.toLong)
     feed.unionAll(triple("carry", carry))
       .unionAll(triple("commit", commit))
       // zz_final IS the manifest-resolved v1 read: carried ∪ rewritten
@@ -2920,29 +2742,32 @@ object MaintenancePipelineQuery {
        |  SELECT * FROM base
        |  WHERE bucket NOT IN (SELECT bucket FROM touched))""".stripMargin
 
+  /** One [[mergeDigest]] accounting row of the MERGE tiers. */
+  private def mergeRow(kind: String, df: DataFrame, nFiles: Long): DataFrame =
+    df.select(mergeDigest: _*)
+      .select(lit(kind).as("row_kind"), col("n_rows"), col("key_xor"),
+        col("bal_sum"), lit(nFiles).as("n_files"))
+
   /** The four per-change-type feed accounting rows both MERGE tiers
-    * share (identical deltas, identical CDF). */
+    * share (identical deltas, identical CDF), and their twin. */
+  private def mergeFeedRows(cdf: DataFrame): DataFrame =
+    cdf.groupBy("change_type")
+      .agg(mergeDigest.head, mergeDigest.tail: _*)
+      .select(col("change_type").as("row_kind"), col("n_rows"),
+        col("key_xor"), col("bal_sum"), lit(-1L).as("n_files"))
   private val mergeFeedRowsSql =
-    s"""SELECT 'remove' AS row_kind, COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT) AS key_xor,
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT) AS bal_sum,
+    s"""SELECT 'remove' AS row_kind, $mergeDigestSql,
        |    CAST(-1 AS BIGINT) AS n_files
        |  FROM base WHERE custkey % 13 = 0 AND bucket >= 12
        |  UNION ALL
-       |  SELECT 'update_pre', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT), -1
+       |  SELECT 'update_pre', $mergeDigestSql, -1
        |  FROM base
        |  WHERE custkey % 10 = 3 AND custkey % 13 <> 0 AND bucket >= 12
        |  UNION ALL
-       |  SELECT 'update_post', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT), -1
+       |  SELECT 'update_post', $mergeDigestSql, -1
        |  FROM upds
        |  UNION ALL
-       |  SELECT 'insert', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT), -1
+       |  SELECT 'insert', $mergeDigestSql, -1
        |  FROM ins""".stripMargin
 
   private val mergeUpsertSql =
@@ -2950,21 +2775,15 @@ object MaintenancePipelineQuery {
        |rows_ AS (
        |  $mergeFeedRowsSql
        |  UNION ALL
-       |  SELECT 'carry', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'carry', $mergeDigestSql,
        |    CAST(COUNT(DISTINCT bucket) AS BIGINT)
        |  FROM carried
        |  UNION ALL
-       |  SELECT 'commit', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'commit', $mergeDigestSql,
        |    CAST(COUNT(DISTINCT bucket) AS BIGINT)
        |  FROM gen1
        |  UNION ALL
-       |  SELECT 'zz_final', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'zz_final', $mergeDigestSql,
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM carried) +
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM gen1)
        |  FROM (SELECT * FROM carried UNION ALL SELECT * FROM gen1))
@@ -3315,45 +3134,20 @@ object MaintenancePipelineQuery {
       touched.toSeq.sorted.map(_.toString), 2L))
   }
 
-  /** Recursive parquet file listing (bounded: |files| per fixture). */
-  private def parquetFilesUnder(p: String): Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val d = new java.io.File(p)
-    if (d.exists()) walk(d).filter(_.getName.endsWith(".parquet")) else Nil
-  }
-
   def mergeDv(spark: SparkSession, dir: String): DataFrame = {
     val root = ensureMergeDv(spark, dir)
-    val feed = spark.read.parquet(s"$root/cdf/v2")
-      .groupBy("change_type")
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-        coalesce(sum("bal"), lit(0L)).as("bal_sum"))
-      .select(col("change_type").as("row_kind"), col("n_rows"),
-        col("key_xor"), col("bal_sum"), lit(-1L).as("n_files"))
+    val feed = mergeFeedRows(spark.read.parquet(s"$root/cdf/v2"))
     val g0 = spark.read.parquet(s"$root/gen0")
     val dv = spark.read.parquet(s"$root/dv/v2")
     val app = spark.read.parquet(s"$root/append/v2")
-    val nBase = parquetFilesUnder(s"$root/gen0").size.toLong
-    val nDv = parquetFilesUnder(s"$root/dv/v2").size.toLong
-    val nApp = parquetFilesUnder(s"$root/append/v2").size.toLong
-    val nGen1 = parquetFilesUnder(s"$root/gen1").size.toLong
+    val nBase = VersionChain.parquetFiles(s"$root/gen0").size.toLong
+    val nDv = VersionChain.parquetFiles(s"$root/dv/v2").size.toLong
+    val nApp = VersionChain.parquetFiles(s"$root/append/v2").size.toLong
+    val nGen1 = VersionChain.parquetFiles(s"$root/gen1").size.toLong
     // the DV audit row: tombstone count/xor + PRE-IMAGE balance sum
     // (joined from the stored base — the DV itself holds only keys)
-    val dvRow = dv
-      .join(g0.select(col("custkey"), col("bal")), Seq("custkey"))
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-        coalesce(sum("bal"), lit(0L)).as("bal_sum"))
-      .select(lit("dv").as("row_kind"), col("n_rows"), col("key_xor"),
-        col("bal_sum"), lit(nDv).as("n_files"))
-    def triple(kind: String, df: DataFrame, nFiles: Long): DataFrame =
-      df.agg(count(lit(1)).as("n_rows"),
-        coalesce(expr("bit_xor(custkey)"), lit(0L)).as("key_xor"),
-        coalesce(sum("bal"), lit(0L)).as("bal_sum"))
-        .select(lit(kind).as("row_kind"), col("n_rows"), col("key_xor"),
-          col("bal_sum"), lit(nFiles).as("n_files"))
+    val dvRow = mergeRow("dv",
+      dv.join(g0.select(col("custkey"), col("bal")), Seq("custkey")), nDv)
     // MERGE-ON-READ: base ⟕anti broadcast(DV keys) ∪ append — no base
     // file was rewritten to serve this
     val masked = g0.join(broadcast(dv.select("custkey")),
@@ -3371,10 +3165,10 @@ object MaintenancePipelineQuery {
     val compacted = carried.select("custkey", "bal")
       .unionAll(spark.read.parquet(s"$root/gen1").select("custkey", "bal"))
     val touchedBaseFiles = touchedLog
-      .map(b => parquetFilesUnder(s"$root/gen0/pbucket=$b").size).sum
+      .map(b => VersionChain.parquetFiles(s"$root/gen0/pbucket=$b").size).sum
     feed.unionAll(dvRow)
-      .unionAll(triple("read_masked", masked, nBase + nDv + nApp))
-      .unionAll(triple("zz_compacted", compacted,
+      .unionAll(mergeRow("read_masked", masked, nBase + nDv + nApp))
+      .unionAll(mergeRow("zz_compacted", compacted,
         nBase - touchedBaseFiles + nGen1))
       .orderBy("row_kind")
   }
@@ -3393,22 +3187,16 @@ object MaintenancePipelineQuery {
        |rows_ AS (
        |  $mergeFeedRowsSql
        |  UNION ALL
-       |  SELECT 'dv', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'dv', $mergeDigestSql,
        |    CAST(COUNT(DISTINCT bucket) AS BIGINT)
        |  FROM tomb
        |  UNION ALL
-       |  SELECT 'read_masked', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'read_masked', $mergeDigestSql,
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM base) +
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM tomb) + 1
        |  FROM finalc
        |  UNION ALL
-       |  SELECT 'zz_compacted', COUNT(*),
-       |    CAST(COALESCE(bit_xor(custkey), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(bal), 0) AS BIGINT),
+       |  SELECT 'zz_compacted', $mergeDigestSql,
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM base) -
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM tomb) +
        |    (SELECT CAST(COUNT(DISTINCT bucket) AS BIGINT) FROM gen1)
@@ -3533,9 +3321,7 @@ object MaintenancePipelineQuery {
              paths: Seq[String]): DataFrame =
       spark.read.schema(staged).parquet(paths.filter(p =>
           new java.io.File(p).exists()): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(expr("bit_xor(event_id)"), lit(0L)).as("key_xor"),
-          coalesce(sum("vc"), lit(0L)).as("vc_sum"))
+        .select(clogDigest: _*)
         .select(lit(version).as("version"), lit(writer).as("writer"),
           lit(op).as("op"), lit(nParts).as("n_parts"), col("n_rows"),
           col("key_xor"), col("vc_sum"))
@@ -3594,39 +3380,29 @@ object MaintenancePipelineQuery {
        |    'purge7' AS op,
        |    (SELECT COUNT(DISTINCT day) FROM e WHERE dom BETWEEN 5 AND 15)
        |      AS n_parts,
-       |    COUNT(*) AS n_rows,
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT) AS key_xor,
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT) AS vc_sum
+       |    $clogDigestSql
        |  FROM e WHERE dom BETWEEN 5 AND 15 AND event_id % 7 <> 0
        |  UNION ALL
        |  SELECT 1, 'ingest', 'ingest',
        |    (SELECT COUNT(DISTINCT day) FROM e),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM e
        |  UNION ALL
        |  SELECT 2, 'sweeper', 'purge5',
        |    (SELECT COUNT(DISTINCT day) FROM e WHERE dom <= 10),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM e WHERE dom <= 10 AND event_id % 5 <> 0
        |  UNION ALL
        |  SELECT 3, 'updater', 'bump3',
        |    (SELECT COUNT(DISTINCT day) FROM e WHERE dom >= 21),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(
-       |      CASE WHEN event_id % 3 = 0 THEN vc + 7 ELSE vc END), 0)
-       |      AS BIGINT)
+       |    ${NumSql.digest("event_id",
+      "CASE WHEN event_id % 3 = 0 THEN vc + 7 ELSE vc END",
+      "n_rows", "key_xor", "vc_sum")}
        |  FROM e WHERE dom >= 21
        |  UNION ALL
        |  SELECT 96, 'ckptfold', 'table',
        |    (SELECT COUNT(DISTINCT day) FROM e),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc2), 0) AS BIGINT)
+       |    ${NumSql.digest("event_id", "vc2", "n_rows", "key_xor", "vc_sum")}
        |  FROM (
        |    SELECT event_id, vc AS vc2 FROM e
        |    WHERE dom <= 10 AND event_id % 5 <> 0
@@ -3639,16 +3415,12 @@ object MaintenancePipelineQuery {
        |  UNION ALL
        |  SELECT 97, 'asof1', 'table',
        |    (SELECT COUNT(DISTINCT day) FROM e),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM e
        |  UNION ALL
        |  SELECT 98, 'asof2', 'table',
        |    (SELECT COUNT(DISTINCT day) FROM e),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc), 0) AS BIGINT)
+       |    $clogDigestSql
        |  FROM (
        |    SELECT event_id, vc FROM e
        |    WHERE dom <= 10 AND event_id % 5 <> 0
@@ -3657,9 +3429,7 @@ object MaintenancePipelineQuery {
        |  UNION ALL
        |  SELECT 99, 'resolved', 'table',
        |    (SELECT COUNT(DISTINCT day) FROM e),
-       |    COUNT(*),
-       |    CAST(COALESCE(bit_xor(event_id), 0) AS BIGINT),
-       |    CAST(COALESCE(SUM(vc2), 0) AS BIGINT)
+       |    ${NumSql.digest("event_id", "vc2", "n_rows", "key_xor", "vc_sum")}
        |  FROM (
        |    SELECT event_id, vc AS vc2 FROM e
        |    WHERE dom <= 10 AND event_id % 5 <> 0

@@ -2018,6 +2018,24 @@ object SimilarityQueries {
     }
   }
 
+  /** One labelled edge-accounting row: the [[graft.ops.Num.digest]] of
+    * (src, dst, ic) edges keyed by the (src|dst) polyhash, and its twin
+    * over `rel` (`pred` filters it). */
+  private def edgeAcct(label: String, df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    df.withColumn("exr", graft.functions.F.polyHash(
+        concat_ws("|", col("src"), col("dst"))))
+      .select(graft.ops.Num.digest(col("exr"), col("ic"),
+        "n_edges", "edge_xor", "ic_sum"): _*)
+      .select(lit(label).as("stat"), col("n_edges"), col("ic_sum"),
+        col("edge_xor"))
+  }
+  private def edgeAcctSql(rel: String, pred: String = ""): String = {
+    val xr = OracleSqlFrag.poly(
+      "CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR)")
+    s"${graft.ops.NumSql.digest(xr, "ic", "n_edges", "edge_xor", "ic_sum")} FROM $rel$pred"
+  }
+
   /** Disjoint-union edge accounting (r19, reshaped r20): (n, Σic, xor)
     * over carried ⊎ recomputed compose componentwise — counts and sums
     * add, bit_xors XOR (the parts are src-disjoint by construction,
@@ -2268,14 +2286,6 @@ object SimilarityQueries {
     val gRoot = Hnsw.ensureGraph(spark, emb, dir)
     val uRoot = ensureHnswUpsert(spark, dir)
     val lateIds = base.filter(hnswLate).select(col("vec_id").as("lid"))
-    def edgeAcct(label: String, df: DataFrame): DataFrame =
-      df.withColumn("exr", graft.functions.F.polyHash(
-          concat_ws("|", col("src"), col("dst"))))
-        .agg(count(lit(1)).as("n_edges"),
-          coalesce(sum("ic"), lit(0L)).as("ic_sum"),
-          coalesce(expr("bit_xor(exr)"), lit(0L)).as("edge_xor"))
-        .select(lit(label).as("stat"), col("n_edges"), col("ic_sum"),
-          col("edge_xor"))
     val levelRows = (0 until Hnsw.MaxLevel).flatMap { l =>
       val aL = spark.read.parquet(s"$uRoot/a$l")
       val buckets = aL.join(broadcast(lateIds),
@@ -2337,23 +2347,16 @@ object SimilarityQueries {
 
   private lazy val annHnswUpsertSql = {
     import graft.sim.Hnsw
-    val xr = OracleSqlFrag.poly(
-      "CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR)")
-    def triple(rel: String, pred: String = "") =
-      s"""COUNT(*) AS n_edges,
-         |    CAST(COALESCE(SUM(ic), 0) AS BIGINT) AS ic_sum,
-         |    CAST(COALESCE(bit_xor($xr), 0) AS BIGINT) AS edge_xor
-         |  FROM $rel$pred""".stripMargin
     def lvlRows(l: Int) =
-      s"""SELECT 'l${l}_carried' AS stat, ${triple(s"e$l",
+      s"""SELECT 'l${l}_carried' AS stat, ${edgeAcctSql(s"e$l",
         s" WHERE src NOT IN (SELECT vec_id FROM aff$l)")}
          |  UNION ALL
-         |  SELECT 'l${l}_recomputed', ${triple(s"e$l",
+         |  SELECT 'l${l}_recomputed', ${edgeAcctSql(s"e$l",
         s" WHERE src IN (SELECT vec_id FROM aff$l)")}
          |  UNION ALL
-         |  SELECT 'l${l}_merged', ${triple(s"e$l")}
+         |  SELECT 'l${l}_merged', ${edgeAcctSql(s"e$l")}
          |  UNION ALL
-         |  SELECT 'l${l}_canonical', ${triple(s"e$l")}""".stripMargin
+         |  SELECT 'l${l}_canonical', ${edgeAcctSql(s"e$l")}""".stripMargin
     val top = Hnsw.MaxLevel
     s"""WITH $hnswGraphCtes,
        |late AS (SELECT vec_id FROM lv WHERE vec_id % 701 = 5),
@@ -2373,15 +2376,15 @@ object SimilarityQueries {
        |  UNION ALL
        |  ${lvlRows(1)}
        |  UNION ALL
-       |  SELECT 'l${top}_carried', ${triple(s"e$top",
+       |  SELECT 'l${top}_carried', ${edgeAcctSql(s"e$top",
       s" WHERE (SELECT n FROM latetop) = 0")}
        |  UNION ALL
-       |  SELECT 'l${top}_recomputed', ${triple(s"e$top",
+       |  SELECT 'l${top}_recomputed', ${edgeAcctSql(s"e$top",
       s" WHERE (SELECT n FROM latetop) > 0")}
        |  UNION ALL
-       |  SELECT 'l${top}_merged', ${triple(s"e$top")}
+       |  SELECT 'l${top}_merged', ${edgeAcctSql(s"e$top")}
        |  UNION ALL
-       |  SELECT 'l${top}_canonical', ${triple(s"e$top")})
+       |  SELECT 'l${top}_canonical', ${edgeAcctSql(s"e$top")})
        |SELECT stat, CAST(n_edges AS BIGINT) AS n_edges, ic_sum, edge_xor
        |FROM rows_ ORDER BY stat""".stripMargin
   }
@@ -2429,14 +2432,6 @@ object SimilarityQueries {
     val uRoot = ensureHnswUpsert(spark, dir)
     val delIds = graft.ops.SideCache.persist(
       base.filter(hnswLate).select(col("vec_id").as("did")))
-    def edgeAcct(label: String, df: DataFrame): DataFrame =
-      df.withColumn("exr", graft.functions.F.polyHash(
-          concat_ws("|", col("src"), col("dst"))))
-        .agg(count(lit(1)).as("n_edges"),
-          coalesce(sum("ic"), lit(0L)).as("ic_sum"),
-          coalesce(expr("bit_xor(exr)"), lit(0L)).as("edge_xor"))
-        .select(lit(label).as("stat"), col("n_edges"), col("ic_sum"),
-          col("edge_xor"))
     val levelRows = (0 until Hnsw.MaxLevel).flatMap { l =>
       val aL = spark.read.parquet(s"$uRoot/a$l")
       val buckets = aL.join(broadcast(delIds),
@@ -2514,13 +2509,6 @@ object SimilarityQueries {
 
   private lazy val annHnswDeleteSql = {
     import graft.sim.Hnsw
-    val xr = OracleSqlFrag.poly(
-      "CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR)")
-    def triple(rel: String, pred: String = "") =
-      s"""COUNT(*) AS n_edges,
-         |    CAST(COALESCE(SUM(ic), 0) AS BIGINT) AS ic_sum,
-         |    CAST(COALESCE(bit_xor($xr), 0) AS BIGINT) AS edge_xor
-         |  FROM $rel$pred""".stripMargin
     // the subset graph (corpus minus the deleted batch) against the
     // SAME frozen centroids the canonical CTEs define
     def subsetAdjCtes(l: Int): String = {
@@ -2558,19 +2546,19 @@ object SimilarityQueries {
          |  WHERE rn <= ${Hnsw.M})""".stripMargin
     }
     def lvlRows(l: Int) =
-      s"""SELECT 'l${l}_masked' AS stat, ${triple(s"e$l",
+      s"""SELECT 'l${l}_masked' AS stat, ${edgeAcctSql(s"e$l",
         " WHERE src NOT IN (SELECT vec_id FROM del)" +
           " AND dst NOT IN (SELECT vec_id FROM del)")}
          |  UNION ALL
-         |  SELECT 'l${l}_carried', ${triple(s"de$l",
+         |  SELECT 'l${l}_carried', ${edgeAcctSql(s"de$l",
         s" WHERE src NOT IN (SELECT vec_id FROM aff$l)")}
          |  UNION ALL
-         |  SELECT 'l${l}_recomputed', ${triple(s"de$l",
+         |  SELECT 'l${l}_recomputed', ${edgeAcctSql(s"de$l",
         s" WHERE src IN (SELECT vec_id FROM aff$l)")}
          |  UNION ALL
-         |  SELECT 'l${l}_compacted', ${triple(s"de$l")}
+         |  SELECT 'l${l}_compacted', ${edgeAcctSql(s"de$l")}
          |  UNION ALL
-         |  SELECT 'l${l}_target', ${triple(s"de$l")}""".stripMargin
+         |  SELECT 'l${l}_target', ${edgeAcctSql(s"de$l")}""".stripMargin
     val top = Hnsw.MaxLevel
     s"""WITH $hnswGraphCtes,
        |del AS (SELECT vec_id FROM lv WHERE vec_id % 701 = 5),
@@ -2595,19 +2583,19 @@ object SimilarityQueries {
        |  UNION ALL
        |  ${lvlRows(1)}
        |  UNION ALL
-       |  SELECT 'l${top}_masked', ${triple(s"e$top",
+       |  SELECT 'l${top}_masked', ${edgeAcctSql(s"e$top",
       " WHERE src NOT IN (SELECT vec_id FROM del)" +
         " AND dst NOT IN (SELECT vec_id FROM del)")}
        |  UNION ALL
-       |  SELECT 'l${top}_carried', ${triple(s"e$top",
+       |  SELECT 'l${top}_carried', ${edgeAcctSql(s"e$top",
       s" WHERE (SELECT n FROM deltop) = 0")}
        |  UNION ALL
-       |  SELECT 'l${top}_recomputed', ${triple(s"de$top",
+       |  SELECT 'l${top}_recomputed', ${edgeAcctSql(s"de$top",
       s" WHERE (SELECT n FROM deltop) > 0")}
        |  UNION ALL
-       |  SELECT 'l${top}_compacted', ${triple(s"de$top")}
+       |  SELECT 'l${top}_compacted', ${edgeAcctSql(s"de$top")}
        |  UNION ALL
-       |  SELECT 'l${top}_target', ${triple(s"de$top")})
+       |  SELECT 'l${top}_target', ${edgeAcctSql(s"de$top")})
        |SELECT stat, CAST(n_edges AS BIGINT) AS n_edges, ic_sum, edge_xor
        |FROM rows_ ORDER BY stat""".stripMargin
   }

@@ -735,23 +735,20 @@ object Similarity {
     val referenced: Set[String] =
       (livePaths.map(_._2) ++ carried.map(_._2) ++ prevLive.values).toSet
     val root = new java.io.File(path)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
     val liveGen = "(.+)_live_g(\\d+)".r
-    root.listFiles().toSeq.foreach { d =>
+    Option(root.listFiles()).toSeq.flatten.foreach { d =>
       d.getName match {
         case liveGen(_, g)
-          if g.toInt <= gen - 2 && !referenced(d.getName) => rm(d)
+          if g.toInt <= gen - 2 && !referenced(d.getName) =>
+          graft.ops.VersionChain.rmTree(d)
         case _ => ()
       }
     }
     val logDir = new java.io.File(s"$path/livelog")
-    logDir.listFiles().toSeq
+    Option(logDir.listFiles()).toSeq.flatten
       .filter(d => d.getName.matches("v\\d+") &&
         d.getName.drop(1).toInt <= gen - 2)
-      .foreach(rm)
+      .foreach(graft.ops.VersionChain.rmTree)
     livePaths.map(_._2)
   }
 

@@ -96,7 +96,7 @@ class GraftLakeCatalog extends TableCatalog {
     new java.io.File(dir, "commitlog").isDirectory || propsFile(dir).exists()
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
-    Option(new java.io.File(root).listFiles()).map(_.toSeq).getOrElse(Nil)
+    graft.ops.VersionChain.children(new java.io.File(root))
       .filter(d => d.isDirectory && isTable(d))
       .map(d => Identifier.of(namespace, d.getName)).sortBy(_.name)
       .toArray

@@ -215,7 +215,7 @@ object GraftLakeSource {
       case (p, Right(stack)) => cacheName(p, stack)
     }.toSet
     val cacheRoot = new java.io.File(root, "_lake_cache")
-    Option(cacheRoot.listFiles()).map(_.toSeq).getOrElse(Nil)
+    VersionChain.children(cacheRoot)
       .filter(d => d.isDirectory && !liveCaches(d.getName) &&
         d.lastModified() < cutoff)
       .foreach { d =>
@@ -239,11 +239,10 @@ object GraftLakeSource {
       a == b || a.startsWith(b + "/") || b.startsWith(a + "/")
     def unreferenced(rel: String) = !referenced.exists(nests(rel, _))
     val dataRoot = new java.io.File(root, "data")
-    val topDirs = Option(dataRoot.listFiles()).map(_.toSeq).getOrElse(Nil)
+    val topDirs = VersionChain.children(dataRoot)
       .filter(_.isDirectory)
     topDirs.filter(_.getName.startsWith("stream_"))
-      .flatMap(sd => Option(sd.listFiles()).map(_.toSeq).getOrElse(Nil)
-        .map(b => (sd.getName, b)))
+      .flatMap(sd => VersionChain.children(sd).map(b => (sd.getName, b)))
       .filter { case (sn, b) =>
         b.isDirectory && b.lastModified() < cutoff &&
           unreferenced(s"data/$sn/${b.getName}")

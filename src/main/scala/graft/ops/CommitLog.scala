@@ -149,7 +149,7 @@ object CommitLog {
     new java.io.File(logDir(root), s"v$v")
 
   private def slots(root: String): Seq[(Long, java.io.File)] =
-    Option(logDir(root).listFiles()).map(_.toSeq).getOrElse(Nil)
+    VersionChain.children(logDir(root))
       .filter(d => d.isDirectory && d.getName.matches("v\\d+"))
       .map(d => d.getName.drop(1).toLong -> d)
       .sortBy(_._1)
@@ -251,7 +251,7 @@ object CommitLog {
   private val CkptName = "ckpt_v(\\d+)\\.tsv".r
 
   private def checkpoints(root: String): Seq[(Long, java.io.File)] =
-    Option(logDir(root).listFiles()).map(_.toSeq).getOrElse(Nil)
+    VersionChain.children(logDir(root))
       .flatMap(f => f.getName match {
         case CkptName(v) => Some(v.toLong -> f)
         case _ => None

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Distributed rank primitives — global `row_number` WITHOUT a
   * single-partition window.
@@ -25,76 +26,57 @@ import org.apache.spark.sql.functions._
   * unique keys the range partitioner cannot split a tie across a
   * boundary, so `local rank + offset` is exactly the global rank.
   * `RanksSpec` pins equality against the single-window formulation on
-  * random data, both ascending and descending. */
+  * random data, both ascending and descending, on both tiers. */
 object Ranks {
 
   /** Append `rankCol` = the 1-based global `row_number` of each row
     * under `order` (ascending/descending Columns, MUST form a total
-    * order) as a BIGINT column. One range exchange + one bounded
-    * driver collect; no single-partition window anywhere in the plan.
+    * order) as a BIGINT column. No single-partition window over a
+    * corpus-proportional frame anywhere in the plan.
     *
     * Per-group ranks compose from this: rank globally on
     * (group ++ order), then subtract the per-group `min(rank)` via a
     * broadcast join of the \|groups\|-row offset table (see
     * `q_quantile_norm`). */
-  /** Bounded tier (r20, the Bpe/Hnsw driver-tier discipline applied
-    * to ranking): below this many rows the rank is ONE
-    * single-partition sort task over the cached input — no range
-    * sampler, no counts collect, no offset join. A corpus-scale frame
-    * exceeds the bound immediately and takes the distributed path. */
-  val DriverRankMax: Long = 1L << 16
-
   def globalRowNumber(df: DataFrame, rankCol: String,
-                      order: Seq[Column]): DataFrame = {
-    // persisted: the gate count materializes the cache that both
-    // tiers then rank (the distributed tier's sampler + counts jobs
-    // re-read it instead of recomputing the caller's upstream plan).
-    // SideCache lifecycle: caller releases between queries, the repo
-    // convention.
-    val in = SideCache.persist(df)
-    if (in.count() <= DriverRankMax) boundedRank(in, rankCol, order)
-    else distributedRank(in, rankCol, order)
-  }
+                      order: Seq[Column]): DataFrame =
+    globalRowNumbers(df, Seq((rankCol, order)))
+
+  /** Driver-tier bound ([[Tier]]): up to this many rows are ranked
+    * from the collected rows, so no range sampler, no counts collect
+    * and no offset join. A corpus-scale frame exceeds it after
+    * 2^16 + 1 rows and takes the distributed path. */
+  val DriverRankMax: Int = 1 << 16
 
   /** CHAINED ranks over one frame — gate once, rank K times.
-    * Bounded: all K windows run inside the one single-partition task
-    * (one exchange, K sorts, zero intermediate persists); distributed:
-    * folds [[distributedRank]] per rank, each rank's exchange carrying
-    * the previous rank columns (the prior chained-caller shape). */
+    * Driver tier: the collected rows become a local frame, and all K
+    * windows run inside its one single-partition task (one exchange,
+    * K sorts, no persist). The window carries a (constant) partition
+    * spec, so this is never the partition-less logical Window the plan
+    * lint forbids. Distributed: folds [[distributedRank]] per rank,
+    * each rank's exchange carrying the previous rank columns. */
   def globalRowNumbers(df: DataFrame,
-                       ranks: Seq[(String, Seq[Column])]): DataFrame = {
-    val in = SideCache.persist(df)
-    if (in.count() <= DriverRankMax) {
-      val base = in.repartition(1)
-        .withColumn("__rk_pid", spark_partition_id())
-      ranks.foldLeft(base) { case (d, (rc, ord)) =>
-        d.withColumn(rc, row_number()
-          .over(Window.partitionBy("__rk_pid").orderBy(ord: _*))
-          .cast("long"))
-      }.drop("__rk_pid")
-    } else ranks.foldLeft(in: DataFrame) { case (d, (rc, ord)) =>
-      distributedRank(d, rc, ord)
+                       ranks: Seq[(String, Seq[Column])]): DataFrame =
+    Tier.rows("ranks", df, DriverRankMax) match {
+      case Some(rows) =>
+        val base = df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
+          .repartition(1)
+          .withColumn("__rk_pid", spark_partition_id())
+        ranks.foldLeft(base) { case (d, (rc, ord)) =>
+          d.withColumn(rc, row_number()
+            .over(Window.partitionBy("__rk_pid").orderBy(ord: _*))
+            .cast("long"))
+        }.drop("__rk_pid")
+      case None => ranks.foldLeft(df) { case (d, (rc, ord)) =>
+        distributedRank(d, rc, ord)
+      }
     }
-  }
-
-  /** ≤ [[DriverRankMax]] rows: exchange to a single partition and
-    * rank inside it — the window carries a (constant) partition spec,
-    * so this is never the partition-less logical Window the plan lint
-    * forbids, and the bound + fallback make it scale-safe. */
-  private[ops] def boundedRank(df: DataFrame, rankCol: String,
-                               order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy("__rk_pid").orderBy(order: _*)
-    df.repartition(1)
-      .withColumn("__rk_pid", spark_partition_id())
-      .withColumn(rankCol, row_number().over(w).cast("long"))
-      .drop("__rk_pid")
-  }
 
   /** The range-partition + per-partition rank + collected-offset
     * composition — identical values to the global window iff the
     * order key is total (see object doc). */
-  private[ops] def distributedRank(df: DataFrame, rankCol: String,
-                                   order: Seq[Column]): DataFrame = {
+  private def distributedRank(df: DataFrame, rankCol: String,
+                              order: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val parts = SideCache.persist(

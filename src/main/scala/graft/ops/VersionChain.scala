@@ -198,8 +198,7 @@ object VersionChain {
     val base = dataRoot(anyRoot)
     val reg = new java.io.File(s"$base/clones")
     val cloneRoots: Seq[String] =
-      if (!reg.exists()) Nil
-      else reg.listFiles().toSeq.filter(_.getName.endsWith(".ref"))
+      children(reg).filter(_.getName.endsWith(".ref"))
         .flatMap { f =>
           val dest = java.nio.file.Files.readString(f.toPath).trim
           if (new java.io.File(dest).exists()) Some(dest)
@@ -221,7 +220,7 @@ object VersionChain {
   private[graft] def cpTree(src: java.io.File, dst: java.io.File): Unit = {
     if (src.isDirectory) {
       dst.mkdirs()
-      src.listFiles().foreach(f => cpTree(f, new java.io.File(dst, f.getName)))
+      children(src).foreach(f => cpTree(f, new java.io.File(dst, f.getName)))
     } else if (src.exists())
       java.nio.file.Files.copy(src.toPath, dst.toPath)
     ()
@@ -238,10 +237,15 @@ object VersionChain {
     ()
   }
 
+  /** The entries of directory `f`; none when `f` does not exist, is
+    * not a directory, vanishes or cannot be listed. */
+  def children(f: java.io.File): Seq[java.io.File] =
+    Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
+
   /** Recursive delete; a directory that vanishes or cannot be listed
     * midway is skipped, never thrown on. */
   def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    children(f).foreach(rmTree)
     f.delete(); ()
   }
 
@@ -250,7 +254,7 @@ object VersionChain {
     * be listed midway contributes nothing. */
   def parquetFiles(p: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      if (f.isDirectory) children(f).flatMap(walk)
       else Seq(f)
     walk(new java.io.File(p))
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))

@@ -2603,12 +2603,10 @@ object MaintenancePipelineQuery {
       .write.mode("overwrite").partitionBy("pbucket").parquet(s"$root/gen1")
     // v1 FILE MANIFEST: carried base files by VERBATIM reference +
     // the rewritten/new files (driver FS listing — |files| bounded)
-    def listFiles(gen: String, b: Long): Seq[String] = {
-      val d = new java.io.File(s"$root/$gen/pbucket=$b")
-      if (!d.exists()) Nil
-      else d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+    def listFiles(gen: String, b: Long): Seq[String] =
+      VersionChain.children(new java.io.File(s"$root/$gen/pbucket=$b"))
+        .filter(_.getName.endsWith(".parquet"))
         .map(f => s"$gen/pbucket=$b/${f.getName}").sorted
-    }
     // per-file data-skipping stats: one per-file aggregate at commit
     // time (|files| bounded, paid once behind the content key). NOT a
     // whole-directory read keyed by input_file_name: the generation
@@ -3299,8 +3297,10 @@ object MaintenancePipelineQuery {
     val e = clogEvents(spark, dir)
     // the guard proves itself every run: the overlapping writer must
     // be rejected (its data was staged at ensure time; the attempt is
-    // metadata-only)
-    val confDays = daysIn(e, col("dom").between(5, 15))
+    // metadata-only, and its partitions are its staged `pday=` dirs)
+    val confDays = VersionChain.children(new java.io.File(s"$root/data/conflicter"))
+      .map(_.getName).filter(_.startsWith("pday=")).map(_.stripPrefix("pday="))
+      .sorted
     val accepted = scala.util.Try(CommitLog.tryCommit(root,
       CommitLog.Entry("conflicter", "purge7", "data/conflicter",
         confDays, 1L)))

@@ -2080,9 +2080,11 @@ object SimilarityQueries {
     * (dim·4 B + overhead) collects in single-digit MB; a real corpus
     * exceeds it immediately and takes the distributed path. */
   private val DriverAcctCorpusMax = 1 << 14
-  /** Candidate-pair bound per level (and top-layer pair bound): caps
-    * local recompute work at ~16M icos evaluations. */
-  private val DriverAcctPairMax = 1 << 24
+  /** Candidate-pair bound per level (and for the top layer), from a
+    * 256 MB driver-heap budget at 256 B per pair: the boxed
+    * (src, dst, ic) tuple (~96 B), its buffer slot and its (src, dst)
+    * dedupe-set entry (~72 B), rounded up. 2^20 pairs. */
+  private val DriverAcctPairMax = (256L << 20) / 256
 
   private final case class AcctVecL(emb: Array[Float], nrm: Double, lvl: Int)
 
@@ -2121,16 +2123,16 @@ object SimilarityQueries {
 
   /** Driver tier for BOTH hnsw maintenance accountings (`delete`
     * selects the tombstone variant). None above any bound. */
-  private[queries] def hnswAcctLocal(spark: SparkSession, dir: String,
-                                     delete: Boolean): Option[DataFrame] = {
+  private def hnswAcctLocal(spark: SparkSession, dir: String,
+                            delete: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
+    import graft.ops.Tier
     import graft.sim.Hnsw
     val emb = Tables.embeddings(spark, dir)
     val gRoot = Hnsw.ensureGraph(spark, emb, dir)
     val uRoot = ensureHnswUpsert(spark, dir)
-    val baseRows = Hnsw.withLevels(emb)
-      .limit(DriverAcctCorpusMax + 1).collect()
-    if (baseRows.length > DriverAcctCorpusMax) return None
+    val baseRows = Tier.rows("hnsw.acct.corpus", Hnsw.withLevels(emb),
+      DriverAcctCorpusMax).getOrElse(return None)
     val baseMap = new java.util.HashMap[java.lang.Long, AcctVecL](
       baseRows.length * 2)
     baseRows.foreach { r =>
@@ -2141,20 +2143,33 @@ object SimilarityQueries {
     baseRows.foreach { r =>
       if (r.getLong(0) % 701L == 5L) lateSet.add(r.getLong(0))
     }
-    def edges(path: String): Option[Array[(Long, Long, Long)]] = {
-      val rows = spark.read.parquet(path).select("src", "dst", "ic")
-        .limit(Hnsw.DriverEdgeMax + 1).collect()
-      if (rows.length > Hnsw.DriverEdgeMax) None
-      else Some(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-    }
-    def assignRows(l: Int): Option[Array[(Long, Long)]] = {
-      val rows = spark.read.parquet(s"$uRoot/a$l").select("vec_id", "cid")
-        .limit(Hnsw.DriverEdgeMax + 1).collect()
-      if (rows.length > Hnsw.DriverEdgeMax) None
-      else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
-    }
+    def edges(path: String): Option[Array[(Long, Long, Long)]] =
+      Tier.rows("hnsw.acct.edges", spark.read.parquet(path)
+        .select("src", "dst", "ic"), Hnsw.DriverEdgeMax)
+        .map(_.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    def assignRows(l: Int): Option[Array[(Long, Long)]] =
+      Tier.rows("hnsw.acct.assign", spark.read.parquet(s"$uRoot/a$l")
+        .select("vec_id", "cid"), Hnsw.DriverEdgeMax)
+        .map(_.map(r => (r.getLong(0), r.getLong(1))))
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(String, Long, Long, Long)]
+    // one level's rows, labelled as the distributed plan labels them
+    def emit(l: Int, carried: Iterable[(Long, Long, Long)],
+             rec: Iterable[(Long, Long, Long)],
+             canonical: Array[(Long, Long, Long)],
+             early: Array[(Long, Long, Long)]): Unit = {
+      val carriedAcct = acctLocal(s"l${l}_carried", carried)
+      val recAcct = acctLocal(s"l${l}_recomputed", rec)
+      if (delete) out ++= Seq(
+        acctLocal(s"l${l}_masked", canonical.filter(e =>
+          !lateSet.contains(e._1) && !lateSet.contains(e._2))),
+        carriedAcct, recAcct,
+        acctMergeLocal(s"l${l}_compacted", carriedAcct, recAcct),
+        acctLocal(s"l${l}_target", early))
+      else out ++= Seq(carriedAcct, recAcct,
+        acctMergeLocal(s"l${l}_merged", carriedAcct, recAcct),
+        acctLocal(s"l${l}_canonical", canonical))
+    }
     for (l <- 0 until Hnsw.MaxLevel) {
       val aL = assignRows(l).getOrElse(return None)
       val early = edges(s"$uRoot/early_e$l").getOrElse(return None)
@@ -2201,23 +2216,7 @@ object SimilarityQueries {
           }
         }
       }
-      val rec = topMLocal(cand)
-      val carriedAcct = acctLocal(s"l${l}_carried", carried)
-      val recAcct = acctLocal(s"l${l}_recomputed", rec)
-      if (delete) {
-        val masked = canonical.filter(e =>
-          !lateSet.contains(e._1) && !lateSet.contains(e._2))
-        out += acctLocal(s"l${l}_masked", masked)
-        out += carriedAcct
-        out += recAcct
-        out += acctMergeLocal(s"l${l}_compacted", carriedAcct, recAcct)
-        out += acctLocal(s"l${l}_target", early)
-      } else {
-        out += carriedAcct
-        out += recAcct
-        out += acctMergeLocal(s"l${l}_merged", carriedAcct, recAcct)
-        out += acctLocal(s"l${l}_canonical", canonical)
-      }
+      emit(l, carried, topMLocal(cand), canonical, early)
     }
     // top layer: carries or recomputes wholesale
     val top = Hnsw.MaxLevel
@@ -2252,22 +2251,7 @@ object SimilarityQueries {
         if (anyLateTop) (Seq.empty, topAdj(topNodesAll))
         else (earlyTop.toSeq, Seq.empty)
       }
-    val carriedTopAcct = acctLocal(s"l${top}_carried", carriedTop)
-    val recTopAcct = acctLocal(s"l${top}_recomputed", recTop)
-    if (delete) {
-      val maskedTop = canonicalTop.filter(e =>
-        !lateSet.contains(e._1) && !lateSet.contains(e._2))
-      out += acctLocal(s"l${top}_masked", maskedTop)
-      out += carriedTopAcct
-      out += recTopAcct
-      out += acctMergeLocal(s"l${top}_compacted", carriedTopAcct, recTopAcct)
-      out += acctLocal(s"l${top}_target", earlyTop)
-    } else {
-      out += carriedTopAcct
-      out += recTopAcct
-      out += acctMergeLocal(s"l${top}_merged", carriedTopAcct, recTopAcct)
-      out += acctLocal(s"l${top}_canonical", canonicalTop)
-    }
+    emit(top, carriedTop, recTop, canonicalTop, earlyTop)
     import spark.implicits._
     Some(out.toSeq.toDF("stat", "n_edges", "ic_sum", "edge_xor")
       .orderBy("stat"))
@@ -2277,7 +2261,7 @@ object SimilarityQueries {
     hnswAcctLocal(spark, dir, delete = false)
       .getOrElse(annHnswUpsertDistributed(spark, dir))
 
-  private[queries] def annHnswUpsertDistributed(
+  private def annHnswUpsertDistributed(
       spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.sim.Hnsw
@@ -2422,7 +2406,7 @@ object SimilarityQueries {
     hnswAcctLocal(spark, dir, delete = true)
       .getOrElse(annHnswDeleteDistributed(spark, dir))
 
-  private[queries] def annHnswDeleteDistributed(
+  private def annHnswDeleteDistributed(
       spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.sim.Hnsw
@@ -2723,10 +2707,8 @@ object SimilarityQueries {
         .select(col("qid"), col("a"), col("b"),
           (Similarity.dot(col("ea"), col("eb")) / (col("na") * col("nb")))
             .as("cosab")))
-    val nPairs = pairs.count() // same rule: scanned by all 5 rounds
     val slim = cand.select("qid", "id", "rel")
-    val nCand = cand.count() // cached — a metadata-cheap second action
-    return mmrSelect(spark, slim, pairs, nCand, nPairs)
+    return mmrSelect(spark, slim, pairs)
       .select(col("qid"), col("id").as("vec_id"), col("pick"), col("mmr_q"))
       .orderBy("qid", "pick")
   }
@@ -2739,20 +2721,26 @@ object SimilarityQueries {
     * tiered precedent; each distributed round was a join + window +
     * eager checkpoint of constant cost ~0.3 s against microseconds of
     * math). MmrDriverTierSpec pins tier equality. */
-  private val MmrCandMax = 1L << 16
-  private val MmrPairsMax = 1L << 20
+  private val MmrCandMax = 1 << 16
+  private val MmrPairsMax = 1 << 20
 
-  private[queries] def mmrSelect(spark: SparkSession, slim: DataFrame,
-      pairs: DataFrame, nCand: Long, nPairs: Long): DataFrame = {
+  private def mmrSelect(spark: SparkSession, slim: DataFrame,
+      pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    if (nCand <= MmrCandMax && nPairs <= MmrPairsMax) {
+    import graft.ops.Tier
+    val local = for {
+      candRows <- Tier.rows("mmr.cand", slim.select(col("qid"), col("id"),
+        col("rel")), MmrCandMax)
+      pairRows <- Tier.rows("mmr.pairs", pairs.select(col("qid"), col("a"),
+        col("b"), col("cosab")), MmrPairsMax)
+    } yield {
       import spark.implicits._
-      val cand = slim.select(col("qid"), col("id"), col("rel"))
-        .as[(Long, Long, Double)].collect()
-      val pr = pairs.select(col("qid"), col("a"), col("b"), col("cosab"))
-        .as[(Long, Long, Long, Double)].collect()
+      val cand = candRows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       val pairMap = new java.util.HashMap[(Long, Long, Long), java.lang.Double]()
-      pr.foreach { case (q, a, b, c) => pairMap.put((q, a, b), java.lang.Double.valueOf(c)) }
+      pairRows.foreach { r =>
+        pairMap.put((r.getLong(0), r.getLong(1), r.getLong(2)),
+          java.lang.Double.valueOf(r.getDouble(3)))
+      }
       val byQ = cand.groupBy(_._1)
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Long)]
       byQ.foreach { case (qid, rows) =>
@@ -2786,14 +2774,14 @@ object SimilarityQueries {
           k += 1
         }
       }
-      return out.toSeq.toDF("qid", "id", "pick", "mmr_q")
+      out.toSeq.toDF("qid", "id", "pick", "mmr_q")
     }
-    mmrSelectDistributed(spark, slim, pairs)
+    local.getOrElse(mmrSelectDistributed(spark, slim, pairs))
   }
 
   /** The distributed greedy rounds — corpus-scale tier, and the
     * reference the driver tier is pinned against. */
-  private[queries] def mmrSelectDistributed(spark: SparkSession,
+  private def mmrSelectDistributed(spark: SparkSession,
       slim: DataFrame, pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     // greedy rounds: argmax of quantized λ·rel − (1−λ)·maxpen

@@ -191,8 +191,8 @@ object Hnsw {
   // window, a level-end checkpoint. At gate scale that is ~15 driver-
   // synchronized jobs of pure scheduling around microseconds of
   // arithmetic (measured r19: q_ann_hnsw ~3.5 s of which the search
-  // was ~3 s). The driver tier below — the `connectedComponents` /
-  // `Bpe.train` bounded-state precedent — collects the query set and
+  // was ~3 s). The driver tier below — a [[graft.ops.Tier]] gate like
+  // `connectedComponents` and `Bpe.train` — collects the query set and
   // the edge segments when BOTH are bounded and replays the descent
   // locally with the IDENTICAL integer decisions (same VecDot
   // sequential float-sum, same floor-quantized icos, same incumbent-
@@ -233,18 +233,16 @@ object Hnsw {
   private def localBeamRows(base: DataFrame, adjs: Seq[DataFrame],
                             efs: Seq[Int])
       : Option[(Seq[(Int, Long, Long, Long)], Seq[(Int, Long, Long, Long)])] = {
-    val qRows = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id"), col("embedding"), col("nrm"))
-      .limit(DriverQueryMax + 1).collect()
-    if (qRows.length > DriverQueryMax) return None
+    val qRows = graft.ops.Tier.rows("hnsw.queries",
+      base.filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id"), col("embedding"), col("nrm")),
+      DriverQueryMax).getOrElse(return None)
+    // callers persist the adjacency frames: a collect that fits scans
+    // every partition, so it also fills the cache the readouts read
     val edgeRows = adjs.map { a =>
-      // count BEFORE collect: callers persist the adjacency frames,
-      // and a bare limit().collect() would bypass cache population —
-      // a computed (patched-graph) adjacency would then be recomputed
-      // from scratch by every downstream readout. The count
-      // materializes the cache; the collect and the readouts read it.
-      if (a.count() > DriverEdgeMax) return None
-      a.select(col("src"), col("dst"), col("demb"), col("dnrm")).collect()
+      graft.ops.Tier.rows("hnsw.edges",
+        a.select(col("src"), col("dst"), col("demb"), col("dnrm")),
+        DriverEdgeMax).getOrElse(return None)
     }
     val entry = base.filter(col("lvl") >= MaxLevel)
       .agg(min("vec_id")).head().getLong(0)
@@ -326,110 +324,36 @@ object Hnsw {
 
   /** Greedy descent over the layered graph for the canonical query
     * set (vec_id ≡ 0 mod 50). Returns (visited pairs (qid, dst, ic),
-    * final per-query state (qid, cur, cic), top-10 (qid, dst)). */
+    * final per-query state (qid, cur, cic), top-10 (qid, dst)). The
+    * distributed tier is [[beamSearch]]'s at ef = 1, which reproduces
+    * the greedy descent decision-for-decision (HnswEfSpec). */
   def search(base: DataFrame, adjs: Seq[DataFrame])
       : (DataFrame, DataFrame, DataFrame) = {
-    localBeamRows(base, adjs, Seq(1)).foreach { case (visR, finR) =>
-      val spark = base.sparkSession
-      import spark.implicits._
-      val vis = graft.ops.SideCache.persist(
-        visR.map(t => (t._2, t._3, t._4)).toDF("qid", "dst", "ic"))
-      vis.count()
-      val state = finR.map(t => (t._2, t._3, t._4)).toDF("qid", "cur", "cic")
-      // top-10 locally: per qid by (ic DESC, dst ASC), self excluded —
-      // the wf window verbatim
-      val top10 = visR.filter(t => t._3 != t._2)
-        .groupBy(_._2).toSeq.flatMap { case (_, rows) =>
-          rows.sortBy(t => (-t._4, t._3)).take(10)
-        }
-        .map(t => (t._2, t._3)).toDF("qid", "dst")
-      return (vis, state, top10)
+    val spark = base.sparkSession
+    import spark.implicits._
+    localBeamRows(base, adjs, Seq(1)) match {
+      case Some((visR, finR)) =>
+        val vis = graft.ops.SideCache.persist(
+          visR.map(t => (t._2, t._3, t._4)).toDF("qid", "dst", "ic"))
+        vis.count()
+        val state = finR.map(t => (t._2, t._3, t._4)).toDF("qid", "cur", "cic")
+        // top-10 locally: per qid by (ic DESC, dst ASC), self excluded —
+        // the wf window below verbatim
+        val top10 = visR.filter(t => t._3 != t._2)
+          .groupBy(_._2).toSeq.flatMap { case (_, rows) =>
+            rows.sortBy(t => (-t._4, t._3)).take(10)
+          }
+          .map(t => (t._2, t._3)).toDF("qid", "dst")
+        (vis, state, top10)
+      case None =>
+        val (vis, fin) = beamSearchDistributed(base, adjs, Seq(1))
+        val wf = Window.partitionBy("qid").orderBy(col("ic").desc, col("dst"))
+        val top10 = vis.filter(col("dst") =!= col("qid"))
+          .withColumn("rn", row_number().over(wf))
+          .filter(col("rn") <= 10)
+          .select("qid", "dst")
+        (vis.select("qid", "dst", "ic"), fin.select("qid", "cur", "cic"), top10)
     }
-    searchDistributed(base, adjs)
-  }
-
-  /** Test hook: the distributed loop regardless of scale (tier-
-    * equality pinning; never called from query paths). */
-  private[sim] def searchDistributedForTest(base: DataFrame,
-      adjs: Seq[DataFrame]): (DataFrame, DataFrame, DataFrame) =
-    searchDistributed(base, adjs)
-
-  private[sim] def beamSearchDistributedForTest(base: DataFrame,
-      adjs: Seq[DataFrame], efs: Seq[Int]): (DataFrame, DataFrame) =
-    beamSearchDistributed(base, adjs, efs)
-
-  private def searchDistributed(base: DataFrame, adjs: Seq[DataFrame])
-      : (DataFrame, DataFrame, DataFrame) = {
-    val entry = base.filter(col("lvl") >= MaxLevel)
-      .agg(min("vec_id")).head().getLong(0)
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("nrm").as("qnorm"))
-    val eRow = base.filter(col("vec_id") === entry)
-      .select(col("embedding").as("eemb"), col("nrm").as("enrm"))
-    // ONE eager checkpoint per LEVEL (not per hop): the descent was
-    // driver-sync-bound at ~20 tiny jobs with per-hop checkpoints;
-    // within a level the Hops-deep chain stays lazy (its broadcast
-    // subtrees are ≤ Hops joins from the last checkpoint and their
-    // exchange jobs run concurrently), and the checkpoint both severs
-    // the lineage — no O(depth²) recompute, no self-join ambiguity
-    // across levels — and bounds what the next level replans.
-    var state = qs.crossJoin(broadcast(eRow))
-      .select(col("qid"), col("qvec"), col("qnorm"),
-        lit(entry).as("cur"),
-        icosCol(col("eemb"), col("enrm"), col("qvec"), col("qnorm"))
-          .as("cic"))
-      .localCheckpoint(true)
-    var visited = state.select(col("qid"), col("cur").as("dst"),
-      col("cic").as("ic"))
-    for (level <- MaxLevel to 0 by -1) {
-      for (_ <- 1 to Hops) {
-        // fresh aliases per hop: the intra-level state chain keeps the
-        // adjacency frame in its lineage, so raw adjs(level)("dst")
-        // references would be ambiguous from the second hop on.
-        // ONE join per hop: the stored edge carries the destination
-        // vector (DiskANN layout), so scoring needs no corpus gather —
-        // the bounded state frontier broadcasts into the edge scan.
-        val a = adjs(level).select(col("src").as("esrc"),
-          col("dst").as("edst"), col("demb").as("hdemb"),
-          col("dnrm").as("hdnrm"))
-        val h = a.join(broadcast(state), a("esrc") === state("cur"))
-          .select(col("qid"), col("qvec"), col("qnorm"),
-            col("edst").as("dst"),
-            icosCol(col("hdemb"), col("hdnrm"), col("qvec"), col("qnorm"))
-              .as("ic"))
-        visited = visited.unionAll(h.select(col("qid"), col("dst"),
-          col("ic")))
-        // move ONLY on strict integer improvement, id tie-breaks: the
-        // stay row (keep=1) wins every tie, so `cic desc, keep desc,
-        // cur asc` reproduces the LEFT-JOIN + `ic > cic` rule without
-        // a second join per hop
-        val wq = Window.partitionBy("qid")
-          .orderBy(col("cic").desc, col("keep").desc, col("cur"))
-        // lazy cache: the NEXT hop's broadcast subtree replays this
-        // chain — the cache makes that replay a memory read, while the
-        // level-end checkpoint still severs lineage across levels
-        state = graft.ops.SideCache.persist(
-          state.withColumn("keep", lit(1))
-            .unionByName(h.select(col("qid"), col("qvec"), col("qnorm"),
-              col("dst").as("cur"), col("ic").as("cic"),
-              lit(0).as("keep")))
-            .withColumn("rn", row_number().over(wq))
-            .filter(col("rn") === 1)
-            .select("qid", "qvec", "qnorm", "cur", "cic"))
-      }
-      state = state.localCheckpoint(true)
-    }
-    // one eager pass populates the visited cache for every consumer
-    val vis = graft.ops.SideCache.persist(
-      visited.dropDuplicates("qid", "dst"))
-    vis.count()
-    val wf = Window.partitionBy("qid").orderBy(col("ic").desc, col("dst"))
-    val top10 = vis.filter(col("dst") =!= col("qid"))
-      .withColumn("rn", row_number().over(wf))
-      .filter(col("rn") <= 10)
-      .select("qid", "dst")
-    (vis, state.select("qid", "cur", "cic"), top10)
   }
 
   /** BEAM search — HNSW's `ef` knob: [[search]] generalized to carry
@@ -521,6 +445,9 @@ object Hnsw {
             .filter(col("rn") <= col("ef"))
             .select("ef", "qid", "qvec", "qnorm", "cur", "cic"))
       }
+      // ONE eager checkpoint per level, not per hop: within a level the
+      // Hops-deep chain stays lazy (its exchange jobs run concurrently);
+      // the checkpoint severs the lineage across levels
       state = state.localCheckpoint(true)
     }
     val vis = graft.ops.SideCache.persist(

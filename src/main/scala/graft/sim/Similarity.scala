@@ -645,9 +645,7 @@ object Similarity {
     * `_SUCCESS` marker exists — a crash mid-flip leaves a marker-less
     * directory that readers ignore). */
   private def committedManifests(path: String): Seq[Int] = {
-    val logDir = new java.io.File(s"$path/livelog")
-    if (!logDir.exists()) Nil
-    else logDir.listFiles().toSeq
+    graft.ops.VersionChain.children(new java.io.File(s"$path/livelog"))
       .filter(d => d.isDirectory && d.getName.matches("v\\d+") &&
         new java.io.File(d, "_SUCCESS").exists())
       .map(_.getName.drop(1).toInt)
@@ -736,7 +734,7 @@ object Similarity {
       (livePaths.map(_._2) ++ carried.map(_._2) ++ prevLive.values).toSet
     val root = new java.io.File(path)
     val liveGen = "(.+)_live_g(\\d+)".r
-    Option(root.listFiles()).toSeq.flatten.foreach { d =>
+    graft.ops.VersionChain.children(root).foreach { d =>
       d.getName match {
         case liveGen(_, g)
           if g.toInt <= gen - 2 && !referenced(d.getName) =>
@@ -745,7 +743,7 @@ object Similarity {
       }
     }
     val logDir = new java.io.File(s"$path/livelog")
-    Option(logDir.listFiles()).toSeq.flatten
+    graft.ops.VersionChain.children(logDir)
       .filter(d => d.getName.matches("v\\d+") &&
         d.getName.drop(1).toInt <= gen - 2)
       .foreach(graft.ops.VersionChain.rmTree)

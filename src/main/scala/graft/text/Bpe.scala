@@ -45,34 +45,34 @@ object Bpe {
     * by its occurrence count, which yields IDENTICAL pair totals
     * while every round scans |vocab| rows instead of |corpus| words
     * (the published reference implementations train on exactly this
-    * dict). One groupBy shuffle up front, persisted; natural-language
+    * dict). One groupBy shuffle up front (persisted on the distributed
+    * tier); natural-language
     * vocabularies follow Zipf, so |vocab| ≪ corpus words by orders of
     * magnitude and the K per-round regex folds run over a frame that
     * no longer grows with the corpus at all. */
   /** Vocabulary bound below which the K rounds run on the DRIVER over
-    * the collected dict (the `connectedComponents` driver-tier
-    * precedent: bounded state, distributed fallback above the bound).
-    * The distributed loop pays ~3 scheduled jobs per round — pure
-    * fixed cost once the dict is KB-sized — so a 32-round training on
-    * a Zipf vocabulary was seconds of scheduling over microseconds of
-    * regex work. Both tiers run the SAME java.util.regex machinery
-    * (Spark's regexp_replace/rlike compile to it), so the learned
-    * table is bit-identical; BpeDriverTierSpec pins tier equality. */
+    * the collected dict ([[graft.ops.Tier]]: bounded state, distributed
+    * fallback above the bound). The distributed loop pays ~3 scheduled
+    * jobs per round — pure fixed cost once the dict is KB-sized — so a
+    * 32-round training on a Zipf vocabulary was seconds of scheduling
+    * over microseconds of regex work. Both tiers run the SAME
+    * java.util.regex machinery (Spark's regexp_replace/rlike compile
+    * to it), so the learned table is bit-identical; BpeDriverTierSpec
+    * pins tier equality. */
   val DriverVocabMax = 1 << 16
 
   def train(words: DataFrame, k: Int): Seq[(String, Long)] = {
-    val wc = graft.ops.SideCache.persist(
-      words.groupBy("word").agg(count(lit(1)).as("wn")))
-    if (wc.count() <= DriverVocabMax) {
-      val dict = wc.collect().map(r => (r.getString(0), r.getLong(1)))
-      trainLocal(dict, k)
-    } else trainDistributed(wc, k)
+    val wc = words.groupBy("word").agg(count(lit(1)).as("wn"))
+    graft.ops.Tier.rows("bpe", wc, DriverVocabMax) match {
+      case Some(dict) => trainLocal(dict.map(r => (r.getString(0), r.getLong(1))), k)
+      case None => trainDistributed(graft.ops.SideCache.persist(wc), k)
+    }
   }
 
   /** The distributed tier: K scheduled rounds over the persisted dict
     * frame — the 100 TB-vocabulary path (and the reference the driver
     * tier is pinned against by BpeDriverTierSpec). */
-  private[text] def trainDistributed(wc: DataFrame, k: Int)
+  private def trainDistributed(wc: DataFrame, k: Int)
       : Seq[(String, Long)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     var stream: Column = regexp_replace(col("word"), "(.)", " $1 ")

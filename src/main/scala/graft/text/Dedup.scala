@@ -179,9 +179,10 @@ object Dedup {
     *
     * Two tiers, like every production dedup pipeline:
     *  - the pair graph is OUTPUT-proportional (near-dup rate × corpus,
-    *    not corpus²). When it fits on the driver (`driverLimit`),
-    *    union-find locally in one collect — microseconds of CPU vs
-    *    O(log diameter) distributed rounds.
+    *    not corpus²). When it fits on the driver ([[DriverPairMax]]
+    *    edges, [[graft.ops.Tier]]), union-find locally over the one
+    *    collect — microseconds of CPU vs O(log diameter) distributed
+    *    rounds.
     *  - above the limit, Pregel-style min-label propagation with
     *    pointer jumping (lbl := lbl[lbl] each round ⇒ O(log diameter)
     *    rounds), `localCheckpoint` (cluster: `checkpoint`) per round.
@@ -192,55 +193,61 @@ object Dedup {
     * pair; singleton docs are their own cluster by definition and are
     * not emitted. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b",
-                          driverLimit: Long = 1L << 20): DataFrame = {
+                          idB: String = "id_b"): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, least, min}
     val spark = pairs.sparkSession
     import spark.implicits._
-    val p = pairs.select(col(idA), col(idB)).localCheckpoint()
-    if (p.count() <= driverLimit) {
-      val edges = p.as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      parent.keys.toSeq.map(k => (k, find(k))).toDF("doc_id", "cluster_id")
-    } else {
-      val edges = p.union(p.select(col(idB), col(idA))).toDF("src", "dst")
-        .localCheckpoint()
-      var labels = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl")).localCheckpoint()
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < 50) {
-        val nbrMin = edges.join(labels, col("src") === col("id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-        val stepped = labels.join(nbrMin, col("id") === col("dst"), "left")
-          .select(col("id"), col("lbl").as("old"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("mid"))
-        val next = stepped.join(
-            stepped.select(col("id").as("jid"), col("mid").as("jlbl")),
-            col("mid") === col("jid"), "left")
-          .select(col("id"),
-            least(col("mid"), coalesce(col("jlbl"), col("mid"))).as("lbl"),
-            (least(col("mid"), coalesce(col("jlbl"), col("mid"))) < col("old")).as("ch"))
+    val p = pairs.select(col(idA), col(idB))
+    graft.ops.Tier.rows("dedup.components", p, DriverPairMax) match {
+      case Some(rows) =>
+        val edges = rows.map(r => (r.getLong(0), r.getLong(1)))
+        val parent = scala.collection.mutable.Map.empty[Long, Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        edges.foreach { case (a, b) =>
+          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        parent.keys.toSeq.map(k => (k, find(k))).toDF("doc_id", "cluster_id")
+      case None =>
+        val cp = p.localCheckpoint()
+        val edges = cp.union(cp.select(col(idB), col(idA))).toDF("src", "dst")
           .localCheckpoint()
-        changed = next.filter(col("ch")).count()
-        labels = next.select("id", "lbl")
-        iter += 1
-      }
-      labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
+        var labels = edges.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("lbl")).localCheckpoint()
+        var changed = 1L
+        var iter = 0
+        while (changed > 0 && iter < 50) {
+          val nbrMin = edges.join(labels, col("src") === col("id"))
+            .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+          val stepped = labels.join(nbrMin, col("id") === col("dst"), "left")
+            .select(col("id"), col("lbl").as("old"),
+              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("mid"))
+          val next = stepped.join(
+              stepped.select(col("id").as("jid"), col("mid").as("jlbl")),
+              col("mid") === col("jid"), "left")
+            .select(col("id"),
+              least(col("mid"), coalesce(col("jlbl"), col("mid"))).as("lbl"),
+              (least(col("mid"), coalesce(col("jlbl"), col("mid"))) < col("old")).as("ch"))
+            .localCheckpoint()
+          changed = next.filter(col("ch")).count()
+          labels = next.select("id", "lbl")
+          iter += 1
+        }
+        labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
     }
   }
+
+  /** Edge bound of [[connectedComponents]]' driver tier: at 2^20
+    * edges the collected rows plus the union-find map hold a few
+    * hundred MB of driver heap. */
+  private val DriverPairMax = 1 << 20
 
   // ---- SimHash ----
 

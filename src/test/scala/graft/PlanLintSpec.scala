@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Try
+
 /** Blanket physical-plan lint over EVERY registered query: the two
   * silent scale-killers — an unconstrained CartesianProduct, or a
   * BroadcastNestedLoopJoin that was not an intentional
@@ -213,17 +215,27 @@ class PlanLintSpec extends SparkSpec {
     // rank + total over the 64-row per-dimension variance frame
     "q_embed_anisotropy")
 
+  /** Each registered query built once at sf0.001 and shared by both
+    * lints: the number of partition-less Windows in its optimized plan
+    * and its executed plan's text, each or what stopped it. */
+  private lazy val plans: Seq[(String, Try[Int], Try[String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      try {
+        val qe = Try(fn(spark, sf0001).queryExecution)
+        val bare = qe.map(_.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
+        }.size)
+        (name, bare, qe.flatMap(q => Try(q.executedPlan.toString)))
+      } finally graft.ops.SideCache.releaseAll()
+    }
+
   test("partition-less windows appear only over bounded domains (allowlisted)") {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sf0001).queryExecution.optimizedPlan
-      val bare = plan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }
-      if (bare.nonEmpty && !boundedWindowAllowed(name))
-        offenders += s"$name: ${bare.size} partition-less Window(s)"
-      graft.ops.SideCache.releaseAll()
+    plans.foreach { case (name, windows, _) =>
+      val bare = windows.get
+      if (bare > 0 && !boundedWindowAllowed(name))
+        offenders += s"$name: $bare partition-less Window(s)"
     }
     assert(offenders.isEmpty,
       "unallowlisted single-partition windows (use graft.ops.Ranks or " +
@@ -232,10 +244,9 @@ class PlanLintSpec extends SparkSpec {
 
   test("no registered query plans a cartesian product; nested loops only by design") {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan =
-        try fn(spark, sf0001).queryExecution.executedPlan.toString
-        catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
+    plans.foreach { case (name, _, executed) =>
+      val plan = executed.fold(
+        e => fail(s"$name failed to plan: ${e.getMessage}"), identity)
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name))

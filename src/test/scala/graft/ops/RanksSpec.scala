@@ -66,12 +66,18 @@ class RanksSpec extends SparkSpec {
     val ref = df.withColumn("rnk",
         row_number().over(Window.orderBy(order: _*)).cast("long"))
       .select("id", "rnk").as[(Long, Long)].collect().sorted
-    val dist = Ranks.distributedRank(df, "rnk", order)
-      .select("id", "rnk").as[(Long, Long)].collect().sorted
+    val (dist, forced) = Tier.scoped(forceDistributed = true) {
+      Ranks.globalRowNumber(df, "rnk", order)
+        .select("id", "rnk").as[(Long, Long)].collect().sorted
+    }
+    assert(forced === Seq(Tier.Choice("ranks", driver = false)))
     assert(dist === ref)
     SideCache.releaseAll()
-    val bounded = Ranks.boundedRank(df, "rnk", order)
-      .select("id", "rnk").as[(Long, Long)].collect().sorted
+    val (bounded, chosen) = Tier.scoped(forceDistributed = false) {
+      Ranks.globalRowNumber(df, "rnk", order)
+        .select("id", "rnk").as[(Long, Long)].collect().sorted
+    }
+    assert(chosen === Seq(Tier.Choice("ranks", driver = true)))
     assert(bounded === ref)
     SideCache.releaseAll()
   }

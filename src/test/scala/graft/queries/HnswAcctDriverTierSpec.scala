@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
+import graft.ops.Tier
 
 /** The hnsw maintenance-accounting driver tier (corpus + stored
   * segments collected under the bounds, affected-bucket algebra
@@ -13,24 +14,30 @@ class HnswAcctDriverTierSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
 
+  /** The query's rows on the driver tier and with the distributed tier
+    * forced. */
+  private def bothTiers(name: String) = {
+    val (l, chosen) = Tier.scoped(forceDistributed = false) {
+      rows(SparkEntry.queries(name)(spark, sf0001))
+    }
+    assert(chosen.exists(_.gate == "hnsw.acct.corpus") && chosen.forall(_.driver),
+      "tier must engage at sf0.001")
+    graft.ops.SideCache.releaseAll()
+    val (d, _) = Tier.scoped(forceDistributed = true) {
+      rows(SparkEntry.queries(name)(spark, sf0001))
+    }
+    graft.ops.SideCache.releaseAll()
+    (l, d)
+  }
+
   test("upsert accounting driver tier equals the distributed plan") {
-    val local = SimilarityQueries.hnswAcctLocal(spark, sf0001, delete = false)
-    assert(local.nonEmpty, "tier must engage at sf0.001")
-    val l = rows(local.get)
-    graft.ops.SideCache.releaseAll()
-    val d = rows(SimilarityQueries.annHnswUpsertDistributed(spark, sf0001))
-    graft.ops.SideCache.releaseAll()
+    val (l, d) = bothTiers("q_ann_hnsw_upsert")
     assert(l == d)
     assert(l.nonEmpty)
   }
 
   test("delete accounting driver tier equals the distributed plan") {
-    val local = SimilarityQueries.hnswAcctLocal(spark, sf0001, delete = true)
-    assert(local.nonEmpty, "tier must engage at sf0.001")
-    val l = rows(local.get)
-    graft.ops.SideCache.releaseAll()
-    val d = rows(SimilarityQueries.annHnswDeleteDistributed(spark, sf0001))
-    graft.ops.SideCache.releaseAll()
+    val (l, d) = bothTiers("q_ann_hnsw_delete")
     assert(l == d)
     assert(l.nonEmpty)
   }

@@ -1,51 +1,23 @@
 package graft.queries
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import graft.{SparkEntry, SparkSpec}
+import graft.ops.Tier
 
 /** The MMR greedy-round driver tier (pool/pairs collected under the
   * bounds, 5 argmax rounds run locally) must be row-identical to the
   * distributed round loop: same picks, same order, same quantized
   * mmr_q. */
 class MmrDriverTierSpec extends SparkSpec {
-  import spark.implicits._
 
   test("driver tier equals the distributed greedy rounds") {
-    val emb = graft.tables.Tables.embeddings(spark, sf0001)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      graft.sim.Similarity.l2norm(col("embedding")).as("nrm"))
-    val pool = graft.ops.SideCache.persist(
-      graft.sim.Similarity.bruteTopK(emb, queryMod = 50L, k = 20)
-        .select(col("qid"), col("vec_id").as("id"))
-        .join(base.select(col("vec_id").as("id"), col("embedding"),
-          col("nrm")), Seq("id")))
-    val qs = base.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("nrm").as("qnorm"))
-    val cand = graft.ops.SideCache.persist(
-      pool.join(broadcast(qs), Seq("qid"))
-        .select(col("qid"), col("id"),
-          (graft.sim.Similarity.dot(col("embedding"), col("qvec")) /
-            (col("nrm") * col("qnorm"))).as("rel"),
-          col("embedding"), col("nrm")))
-    cand.count()
-    val a = cand.select(col("qid"), col("id").as("a"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = cand.select(col("qid"), col("id").as("b"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
-    val pairs = graft.ops.SideCache.persist(
-      a.join(b, Seq("qid")).filter(col("a") =!= col("b"))
-        .select(col("qid"), col("a"), col("b"),
-          (graft.sim.Similarity.dot(col("ea"), col("eb")) /
-            (col("na") * col("nb"))).as("cosab")))
-    val nPairs = pairs.count()
-    val slim = cand.select("qid", "id", "rel")
-    val nCand = cand.count()
-    val local = SimilarityQueries.mmrSelect(spark, slim, pairs, nCand, nPairs)
-      .collect().map(_.toSeq).toSet
-    val dist = SimilarityQueries.mmrSelectDistributed(spark, slim, pairs)
-      .collect().map(_.toSeq).toSet
-    assert(local == dist)
+    def rerank() =
+      SparkEntry.queries("q_mmr_rerank")(spark, sf0001).collect().map(_.toSeq)
+    val (local, chosen) = Tier.scoped(forceDistributed = false)(rerank())
+    assert(chosen.map(_.gate) == Seq("mmr.cand", "mmr.pairs") &&
+      chosen.forall(_.driver), "driver tier at test scale")
+    graft.ops.SideCache.releaseAll()
+    val (dist, _) = Tier.scoped(forceDistributed = true)(rerank())
+    assert(local.toSet == dist.toSet)
     assert(local.nonEmpty)
     graft.ops.SideCache.releaseAll()
   }

@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import graft.ops.Tier
 
 /** The HNSW search driver tier (queries + edges collected under the
   * bounds, descent replayed locally) must be row-identical to the
@@ -24,8 +24,13 @@ class HnswDriverTierSpec extends SparkSpec {
 
   test("greedy search: driver tier equals the distributed loop") {
     val (base, adjs) = fixture()
-    val (vis, fin, top) = Hnsw.search(base, adjs) // driver tier at test scale
-    val (dVis, dFin, dTop) = Hnsw.searchDistributedForTest(base, adjs)
+    val ((vis, fin, top), chosen) = Tier.scoped(forceDistributed = false) {
+      Hnsw.search(base, adjs)
+    }
+    assert(chosen.nonEmpty && chosen.forall(_.driver), "driver tier at test scale")
+    val ((dVis, dFin, dTop), _) = Tier.scoped(forceDistributed = true) {
+      Hnsw.search(base, adjs)
+    }
     assert(rows(vis) == rows(dVis))
     assert(rows(fin) == rows(dFin))
     assert(rows(top) == rows(dTop))
@@ -35,8 +40,13 @@ class HnswDriverTierSpec extends SparkSpec {
   test("beam sweep: driver tier equals the distributed loop per ef") {
     val (base, adjs) = fixture()
     val efs = Seq(1, 2, 4, 8)
-    val (vis, fin) = Hnsw.beamSearch(base, adjs, efs)
-    val (dVis, dFin) = Hnsw.beamSearchDistributedForTest(base, adjs, efs)
+    val ((vis, fin), chosen) = Tier.scoped(forceDistributed = false) {
+      Hnsw.beamSearch(base, adjs, efs)
+    }
+    assert(chosen.nonEmpty && chosen.forall(_.driver), "driver tier at test scale")
+    val ((dVis, dFin), _) = Tier.scoped(forceDistributed = true) {
+      Hnsw.beamSearch(base, adjs, efs)
+    }
     assert(rows(vis) == rows(dVis))
     assert(rows(fin) == rows(dFin))
     graft.ops.SideCache.releaseAll()

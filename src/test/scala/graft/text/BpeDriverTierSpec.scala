@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
+import graft.ops.Tier
 import org.apache.spark.sql.functions._
 
 /** The BPE trainer's driver tier (vocab ≤ DriverVocabMax collects the
@@ -11,10 +12,14 @@ class BpeDriverTierSpec extends SparkSpec {
 
   private def bothTiers(words: org.apache.spark.sql.DataFrame, k: Int)
       : (Seq[(String, Long)], Seq[(String, Long)]) = {
-    val viaPublic = Bpe.train(words, k) // driver tier at test scale
-    val wc = graft.ops.SideCache.persist(
-      words.groupBy("word").agg(count(lit(1)).as("wn")))
-    val viaDistributed = Bpe.trainDistributed(wc, k)
+    val (viaPublic, chosen) = Tier.scoped(forceDistributed = false) {
+      Bpe.train(words, k)
+    }
+    assert(chosen === Seq(Tier.Choice("bpe", driver = true)),
+      "driver tier at test scale")
+    val (viaDistributed, _) = Tier.scoped(forceDistributed = true) {
+      Bpe.train(words, k)
+    }
     graft.ops.SideCache.releaseAll()
     (viaPublic, viaDistributed)
   }

@@ -40,8 +40,9 @@ class DedupSpec extends SparkSpec {
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().sorted
-    val dist = Dedup.connectedComponents(pairs, driverLimit = 0)
-      .as[(Long, Long)].collect().sorted
+    val (dist, _) = graft.ops.Tier.scoped(forceDistributed = true) {
+      Dedup.connectedComponents(pairs).as[(Long, Long)].collect().sorted
+    }
     val expect = Array(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L)
     assert(local === expect)

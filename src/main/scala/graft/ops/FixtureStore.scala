@@ -76,28 +76,47 @@ object FixtureStore {
     * @param parts directories under the root whose `_SUCCESS` a hit needs
     * @param valid any further hit condition (e.g. the commit log holds
     *              exactly the versions the build commits)
-    * @param rows  a count recorded after the build and compared on every
-    *              hit (a parquet footer count, so a hit reads no data) */
+    * @param rows  a directory under the root whose row count is recorded
+    *              after the build and compared on every hit: the sum of
+    *              its parquet footers' counts (all levels, so `pday=`
+    *              partitions too), read on the driver with no Spark job */
   def ensure(name: String, dir: String, parts: Seq[String] = Nil,
              valid: String => Boolean = _ => true,
-             rows: String => Long = _ => 0L)(build: String => Unit): String =
+             rows: Option[String] = None)(build: String => Unit): String =
     ensureKeyed(codeFingerprint, name, dir, parts, valid, rows)(build)
+
+  /** Footer-read options over a plain (not Hadoop) configuration,
+    * built once: building them per file re-parses the Hadoop config
+    * resources, ~8 ms a file. */
+  private lazy val footerOptions = org.apache.parquet.ParquetReadOptions
+    .builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build()
+
+  /** Rows in every parquet file under `path`, from the footers. */
+  private def footerRows(path: String): Long =
+    VersionChain.parquetFiles(path).map { f =>
+      val file = new org.apache.parquet.io.LocalInputFile(f.toPath)
+      val in = file.newStream()
+      try org.apache.parquet.hadoop.ParquetFileReader
+        .readFooter(file, footerOptions, in).getBlocks.asScala.map(_.getRowCount).sum
+      finally in.close()
+    }.sum
 
   private[ops] def ensureKeyed(fingerprint: String, name: String, dir: String,
                                parts: Seq[String], valid: String => Boolean,
-                               rows: String => Long)
+                               rows: Option[String])
                               (build: String => Unit): String = {
     val root = this.root(name, dir)
     locked(root) {
       val marker = new File(root, Marker)
       val key = s"$fingerprint\n$name\n$dir\n"
+      def count = rows.fold(0L)(d => footerRows(s"$root/$d"))
       // a torn or foreign marker reads as invalid, never throws
       val hit = marker.exists() && scala.util.Try {
         val txt = Files.readString(marker.toPath)
         val recorded = txt.stripPrefix(key).split("\n", -1)
         txt.startsWith(key) && recorded.length == 2 && recorded(1).isEmpty &&
           parts.forall(p => new File(s"$root/$p/_SUCCESS").exists()) &&
-          valid(root) && rows(root) == recorded(0).toLong
+          valid(root) && count == recorded(0).toLong
       }.getOrElse(false)
       if (!hit) {
         VersionChain.rmTree(new File(root))
@@ -106,7 +125,7 @@ object FixtureStore {
         SideCache.releasingNew(build(root))
         new File(root).mkdirs()
         val tmp = new File(root, s"$Marker.tmp").toPath
-        Files.writeString(tmp, s"$key${rows(root)}\n")
+        Files.writeString(tmp, s"$key$count\n")
         Files.move(tmp, marker.toPath, StandardCopyOption.ATOMIC_MOVE)
       }
       root

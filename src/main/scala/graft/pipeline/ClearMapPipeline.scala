@@ -120,9 +120,7 @@ object ClearMapPipeline {
     val windowed = daysBack match {
       case None => TS.strideSample(base, "id", "date", 7)
       case Some(d) =>
-        val cutoff = base.agg(date_sub(max(col("date")), d).as("cutoff"))
-        base.crossJoin(broadcast(cutoff)).filter(col("date") >= col("cutoff"))
-          .drop("cutoff")
+        base.filter(col("date") >= base.agg(date_sub(max(col("date")), d)).scalar())
     }
     val rebased = TS.rebaseToStart(windowed, "id", "date", Seq("cases", "tests"))
     val withDelta = TS.dailyDelta(rebased, "id", "date", "cases", "delta")

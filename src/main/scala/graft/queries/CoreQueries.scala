@@ -560,7 +560,7 @@ object CoreQueries {
     * cluster lineitem on TWO columns at once by writing it
     * range-split on the Morton interleave of (l_partkey, l_suppkey).
     * Both dims are scaled to the full 16-bit range by one 1-row
-    * max aggregate (broadcast), so the curve GRID is fixed — file =
+    * max aggregate (scalar subqueries), so the curve GRID is fixed — file =
     * top 4 z-bits, a pure projection: NO global sort, no sampled
     * range boundaries (which an oracle could not replay), and the
     * only shuffle is the writer's dynamic-partition commit. Static
@@ -590,7 +590,8 @@ object CoreQueries {
       col("l_partkey").cast(LongType).as("x"),
       col("l_suppkey").cast(LongType).as("y"))
     val mx = src.agg(max("x").as("max_x"), max("y").as("max_y"))
-    src.crossJoin(broadcast(mx))
+    src.withColumn("max_x", mx.select("max_x").scalar())
+      .withColumn("max_y", mx.select("max_y").scalar())
       .withColumn("xs", expr("(x * 65535) div max_x"))
       .withColumn("ys", expr("(y * 65535) div max_y"))
       .withColumn("z", graft.functions.F.morton(col("xs"), col("ys")))
@@ -639,14 +640,15 @@ object CoreQueries {
     * invariant itself: every non-candidate file shows n_match = 0 —
     * skipping reads no row it shouldn't — while candidate files ≪ all
     * files is the payoff (the spec asserts both). Same plan as the
-    * layout: one broadcast max aggregate + one projection + one
+    * layout: one scalar max aggregate + one projection + one
     * groupBy(file_id); no write needed to PLAN the skip. */
   private def zorderPrune(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.lineitem(spark, dir).select(
       col("l_partkey").cast(LongType).as("x"),
       col("l_suppkey").cast(LongType).as("y"))
     val mx = src.agg(max("x").as("max_x"), max("y").as("max_y"))
-    src.crossJoin(broadcast(mx))
+    src.withColumn("max_x", mx.select("max_x").scalar())
+      .withColumn("max_y", mx.select("max_y").scalar())
       .withColumn("xs", expr("(x * 65535) div max_x"))
       .withColumn("ys", expr("(y * 65535) div max_y"))
       .withColumn("z", graft.functions.F.morton(col("xs"), col("ys")))
@@ -719,11 +721,10 @@ object CoreQueries {
     // 2. per-file manifest + cumulative-split bin plan (|days| rows)
     val manifest = sink.groupBy("day")
       .agg(count(lit(1)).as("n_rows"), sum(logicalBytes).as("bytes"))
-    val tot = manifest.agg(sum("bytes").as("total"))
     val wCum = org.apache.spark.sql.expressions.Window.orderBy("day")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         -1)
-    val plan = manifest.crossJoin(broadcast(tot))
+    val plan = manifest.withColumn("total", manifest.agg(sum("bytes")).scalar())
       .withColumn("cum_before",
         coalesce(sum("bytes").over(wCum), lit(0L)))
       .withColumn("bin",
@@ -862,14 +863,13 @@ object CoreQueries {
     "SELECT MAX(CAST(ts AS DATE)) AS last_date FROM events"
 
   /** il_analysis_git.py:78-82,:156 — time-window filter from
-    * max(date)−14d, computed lazily via a broadcast 1-row cross join
-    * (no driver round-trip). */
+    * max(date)−14d, computed lazily as a scalar subquery (no driver
+    * round-trip). */
   private def windowFilter(spark: SparkSession, dir: String): DataFrame = {
     val cutoff = EventSeries.daily(spark, dir)
-      .agg(date_sub(max(col("date")), 14).as("cutoff"))
+      .agg(date_sub(max(col("date")), 14)).scalar()
     EventSeries.series(spark, dir)
-      .crossJoin(broadcast(cutoff))
-      .filter(col("date") >= col("cutoff"))
+      .filter(col("date") >= cutoff)
       .select(col("id"), col("date"), col("cases"))
       .orderBy("id", "date")
   }

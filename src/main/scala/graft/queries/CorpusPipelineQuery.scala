@@ -154,8 +154,7 @@ object CorpusPipelineQuery {
       .groupBy("lang").agg(count(lit(1)).as("n_docs"))
       .withColumn("w_q",
         floor(sqrt(col("n_docs").cast("double")) * 1e6).cast("long"))
-    val tot = weights.agg(sum("w_q").as("sum_w"))
-    val rates = weights.crossJoin(broadcast(tot))
+    val rates = weights.withColumn("sum_w", weights.agg(sum("w_q")).scalar())
       .select(col("lang"),
         // Widened to DECIMAL(38,0)/HUGEINT (the q_epoch_mix convention):
         // w_q = floor(sqrt(n_docs)*1e6) makes the BIGINT product

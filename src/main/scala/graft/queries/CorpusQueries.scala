@@ -454,9 +454,9 @@ object CorpusQueries {
     val langRows = exactLang.join(langMerged, Seq("lang"))
       .select(lit("lang").as("level"), col("lang").as("key"),
         col("n_exact"), col("est"))
-    val globalRow = exactGlobal.crossJoin(broadcast(globalMerged))
+    val globalRow = exactGlobal
       .select(lit("all").as("level"), lit("*").as("key"),
-        col("n_exact"), col("est"))
+        col("n_exact"), globalMerged.select("est").scalar().as("est"))
     langRows.union(globalRow)
       .withColumn("err_pct", Num.floorEps(
         abs(col("est") - col("n_exact")) * 100.0 / col("n_exact")))

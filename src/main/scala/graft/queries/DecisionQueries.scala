@@ -204,9 +204,9 @@ object DecisionQueries {
       Tables.lineitem(spark, dir).select(col("l_orderkey"))
         .join(build, col("l_orderkey") === col("o_orderkey"), "left_anti"))
     val nBuild = build.count()
-    neg.agg(count(lit(1)).as("n_neg")).crossJoin(
-        graft.ops.Bloom.prune(neg, "l_orderkey", lut)
-          .agg(count(lit(1)).as("n_fp")))
+    neg.agg(count(lit(1)).as("n_neg"))
+      .withColumn("n_fp", graft.ops.Bloom.prune(neg, "l_orderkey", lut)
+        .agg(count(lit(1))).scalar())
       .select(lit(nBuild).as("n_build"), col("n_neg"), col("n_fp"),
         expr("(n_fp * 10000) div n_neg").as("fpr_bp"))
   }
@@ -302,10 +302,10 @@ object DecisionQueries {
       .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("np"))
     val med = counts.agg(
-      Num.floorEps(percentile(col("np"), lit(0.5))).as("med"))
-    val conv = counts.crossJoin(broadcast(med))
+      Num.floorEps(percentile(col("np"), lit(0.5)))).scalar()
+    val conv = counts
       .select((col("user_id") % 2).as("arm"),
-        when(col("np") > col("med"), 1L).otherwise(0L).as("converted"))
+        when(col("np") > med, 1L).otherwise(0L).as("converted"))
     val arms = conv.groupBy("arm")
       .agg(count(lit(1)).as("n"), sum("converted").as("x"))
     arms.agg(
@@ -508,8 +508,8 @@ object DecisionQueries {
     * a 1-row decile aggregate, then the ≤9-row threshold list
     * replicated against the histogram (a deliberate broadcast
     * non-equi join over two bounded frames — PlanLint allowlist) and
-    * a ≤9-row fold; the 1-row positive total broadcast-crosses in
-    * for fn/recall. */
+    * a ≤9-row fold; the positive total is a scalar subquery for
+    * fn/recall. */
   private def prCurve(spark: SparkSession, dir: String): DataFrame = {
     val scored = Tables.events(spark, dir)
       .where(col("value").isNotNull)
@@ -521,7 +521,6 @@ object DecisionQueries {
     val h = graft.ops.SideCache.persist(
       scoredP.groupBy("s")
         .agg(sum("y").as("np"), sum(lit(1L) - col("y")).as("nn")))
-    val tot = h.agg(sum("np").as("n_pos"))
     // deciles are ROW-weighted (over scored, not the deduped
     // histogram — distinct-score deciles would be a different curve)
     val thr = scoredP.agg(percentile_approx(col("s"),
@@ -532,7 +531,7 @@ object DecisionQueries {
       .groupBy("decile", "threshold")
       .agg(coalesce(sum("np"), lit(0L)).as("tp"),
         coalesce(sum("nn"), lit(0L)).as("fp"))
-    conf.crossJoin(broadcast(tot))
+    conf.withColumn("n_pos", h.agg(sum("np")).scalar())
       .select(col("decile"), col("threshold"), col("tp"), col("fp"),
         (col("n_pos") - col("tp")).as("fn"),
         expr("1000 * tp div (tp + fp)").as("precision_pm"),
@@ -733,9 +732,8 @@ object DecisionQueries {
     * in spec) rather than engine-computed doubles.
     *
     * Scale shape: the corpus reduces map-side to ≤9 digit counts;
-    * the 9-row expectation table and the 1-row total ride broadcast
-    * joins (the cross is PlanLint-allowlisted). Nothing but the scan
-    * touches the data. */
+    * the 9-row expectation table rides a broadcast join and the total
+    * is a scalar subquery. Nothing but the scan touches the data. */
   private def benford(spark: SparkSession, dir: String): DataFrame = {
     val digits = Tables.orders(spark, dir)
       .where(col("o_totalprice") > 0)
@@ -743,11 +741,10 @@ object DecisionQueries {
       .select(expr("CAST(substring(CAST(c AS STRING), 1, 1) AS BIGINT)")
         .as("d"))
     val obs = digits.groupBy("d").agg(count(lit(1)).as("cnt"))
-    val tot = digits.agg(count(lit(1)).as("n"))
     val expected = spark.createDataFrame(benfordExpectedPpm).toDF("d", "exp_ppm")
     expected
       .join(obs, Seq("d"), "left")
-      .crossJoin(broadcast(tot))
+      .withColumn("n", digits.agg(count(lit(1))).scalar())
       .select(col("d"),
         coalesce(col("cnt"), lit(0L)).as("cnt"),
         expr("1000000 * coalesce(cnt, 0) div n").as("obs_ppm"),

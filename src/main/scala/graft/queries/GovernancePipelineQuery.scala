@@ -176,9 +176,9 @@ object GovernancePipelineQuery {
         count(col("__hit")).as("n_erased"),
         coalesce(expr("bit_xor(CASE WHEN __hit IS NOT NULL THEN vec_id END)"),
           lit(0L)).as("key_xor"))
-      .crossJoin(broadcast(live.agg(count(lit(1)).as("n_after"))))
       .select(lit("3_vector_index").as("stage"), lit("codes").as("tier"),
-        col("n_before"), col("n_erased"), col("n_after"), col("key_xor"))
+        col("n_before"), col("n_erased"),
+        live.agg(count(lit(1))).scalar().as("n_after"), col("key_xor"))
     // ---- stage 4 accounting (live read through the resolved slot)
     val evLive = spark.read.schema(base.schema).parquet(liveTiers("events"))
     // same conditional-aggregation fold: one scan of the stored fact
@@ -188,9 +188,9 @@ object GovernancePipelineQuery {
         coalesce(expr(
           "bit_xor(CASE WHEN pmod(user_id, 13) = 0 THEN event_id END)"),
           lit(0L)).as("key_xor"))
-      .crossJoin(broadcast(evLive.agg(count(lit(1)).as("n_after"))))
       .select(lit("4_fact_rewrite").as("stage"), lit("events").as("tier"),
-        col("n_before"), col("n_erased"), col("n_after"), col("key_xor"))
+        col("n_before"), col("n_erased"),
+        evLive.agg(count(lit(1))).scalar().as("n_after"), col("key_xor"))
     // ---- stage 5: the auditor's line — fold the CASCADE/INDEX/FACT
     // tiers only. Stage 1 is the tombstone LIST, and stage 2's cascade
     // re-emits the same customer keys: folding both would double-count

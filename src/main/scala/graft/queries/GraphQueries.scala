@@ -87,12 +87,12 @@ object GraphQueries {
       if (atScale) df.hint("shuffle_hash") else broadcast(df)
 
     val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    val nTot = nodes.agg(count(lit(1)).as("n"))
+    val nTot = nodes.agg(count(lit(1))).scalar()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
 
-    // r0 = floor(SCALE / N) for every node (nTot is ONE row — always
-    // broadcast, even at web scale)
-    var ranks = nodes.crossJoin(broadcast(nTot))
+    // r0 = floor(SCALE / N) for every node (nTot is a scalar subquery —
+    // one row at any scale)
+    var ranks = nodes.withColumn("n", nTot)
       .select(col("node"), expr(s"${Scale}L div n").as("r"))
 
     for (_ <- 1 to iters) {
@@ -103,7 +103,7 @@ object GraphQueries {
       val contrib = edges.join(side(share), "src")
         .groupBy("dst").agg(sum("share").as("c"))
       ranks = nodes.join(side(contrib), col("node") === col("dst"), "left")
-        .crossJoin(broadcast(nTot))
+        .withColumn("n", nTot)
         .select(col("node"),
           (expr(s"(15 * (${Scale}L div n)) div 100") +
             expr("(85 * coalesce(c, 0L)) div 100")).as("r"))

@@ -93,29 +93,28 @@ object JourneyPipelineQuery {
     // ---- accounting
     val sessions = base.groupBy("user_id", "sid")
       .agg(count(lit(1)).as("n_ev"))
-    val s1 = base.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(sessions.agg(count(lit(1)).as("n_out"),
-        countDistinct("user_id").as("m1"), max("n_ev").as("m2"))))
-      .select(lit("1_sessionize").as("stage"), col("n_in"), col("n_out"),
+    val s1 = sessions.agg(count(lit(1)).as("n_out"),
+        countDistinct("user_id").as("m1"), max("n_ev").as("m2"))
+      .select(lit("1_sessionize").as("stage"),
+        base.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
     val s2 = sessions.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(t3.agg(count(lit(1)).as("n_out"))))
-      .crossJoin(broadcast(t1.agg(count(lit(1)).as("m1"))))
-      .crossJoin(broadcast(t2.agg(count(lit(1)).as("m2"))))
-      .select(lit("2_funnel").as("stage"), col("n_in"), col("n_out"),
-        col("m1"), col("m2"))
-    val s3 = t3.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(credited.agg(count(lit(1)).as("n_out"),
+      .select(lit("2_funnel").as("stage"), col("n_in"),
+        t3.agg(count(lit(1))).scalar().as("n_out"),
+        t1.agg(count(lit(1))).scalar().as("m1"),
+        t2.agg(count(lit(1))).scalar().as("m2"))
+    val s3 = credited.agg(count(lit(1)).as("n_out"),
         sum(when(col("event_type") === "view", col("credit")).otherwise(0L))
           .as("m1"),
         sum(when(col("event_type") === "click", col("credit")).otherwise(0L))
-          .as("m2"))))
-      .select(lit("3_attribution").as("stage"), col("n_in"), col("n_out"),
+          .as("m2"))
+      .select(lit("3_attribution").as("stage"),
+        t3.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
-    val s4 = t3.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(rev.agg(countDistinct("user_id").as("n_out"),
-        sum("vc").as("m1"), max("vc").as("m2"))))
-      .select(lit("4_revenue").as("stage"), col("n_in"), col("n_out"),
+    val s4 = rev.agg(countDistinct("user_id").as("n_out"),
+        sum("vc").as("m1"), max("vc").as("m2"))
+      .select(lit("4_revenue").as("stage"),
+        t3.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
 
     s1.union(s2).union(s3).union(s4).orderBy("stage")

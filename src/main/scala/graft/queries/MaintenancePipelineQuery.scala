@@ -418,8 +418,7 @@ object MaintenancePipelineQuery {
   private def ensureOrphanBase(spark: SparkSession, dir: String): String =
     FixtureStore.ensure("orphans", dir, parts = Seq("data/live"),
       valid = root => graft.ops.CommitLog.committedVersions(root) == Seq(1L),
-      rows = root => spark.read.schema(clogStaged(clogEvents(spark, dir)).schema)
-        .parquet(s"$root/data/live").count()) { root =>
+      rows = Some("data/live")) { root =>
       val e = clogEvents(spark, dir)
       clogStaged(e.filter(col("dom").between(16, 20)))
         .repartition(col("pday"))
@@ -2345,8 +2344,7 @@ object MaintenancePipelineQuery {
     * stored. */
   def ensurePartEvo(spark: SparkSession, dir: String): String =
     FixtureStore.ensure("part_evo", dir, parts = Seq("gen0", "gen1", "manifest"),
-      rows = root => spark.read.schema(partEvoBase(spark, dir).schema)
-        .parquet(s"$root/gen0").count()) { root =>
+      rows = Some("gen0")) { root =>
       val base = partEvoBase(spark, dir)
       base.repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(s"$root/gen0")
@@ -2536,9 +2534,7 @@ object MaintenancePipelineQuery {
       parts = Seq("gen0", "gen1", "filemanifest/v1", "cdf/v1", "bloom/v1"),
       // both commits must be resolved in the optimistic log
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L),
-      // the raw columns lead every stored file; a count needs no more
-      rows = r => spark.read.schema(mergeRaw(spark, dir).schema)
-        .parquet(s"$r/gen0").count()) {
+      rows = Some("gen0")) {
       root => buildMerge(spark, dir, root)
     }
 
@@ -3054,8 +3050,7 @@ object MaintenancePipelineQuery {
     FixtureStore.ensure("mergedv", dir,
       parts = Seq("gen0", "dv/v2", "append/v2", "cdf/v2", "gen1"),
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
-      rows = r => spark.read.schema(mergeRaw(spark, dir).schema)
-        .parquet(s"$r/gen0").count()) {
+      rows = Some("gen0")) {
       root => buildMergeDv(spark, dir, root)
     }
 
@@ -3263,8 +3258,7 @@ object MaintenancePipelineQuery {
       parts = Seq("ingest", "sweeper", "updater", "conflicter")
         .map(w => s"data/$w"),
       valid = r => graft.ops.CommitLog.committedVersions(r) == Seq(1L, 2L, 3L),
-      rows = r => spark.read.schema(clogStaged(clogEvents(spark, dir)).schema)
-        .parquet(s"$r/data/ingest").count()) { root =>
+      rows = Some("data/ingest")) { root =>
       val e = graft.ops.SideCache.persist(clogEvents(spark, dir))
       def stage(name: String, df: DataFrame): Unit =
         clogStaged(df)

@@ -775,17 +775,16 @@ object PipelineQueries {
     *
     * Scale shape: two map-side lang histograms over one scan each
     * (the cohorts differ by a pushed-down predicate), a \|langs\|-row
-    * join, 1-row totals broadcast. */
+    * join, the two totals as scalar subqueries. */
   private def dataCardDiff(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val oldC = docs.filter(!(col("doc_id") % 7 === 0 && col("lang") === "en"))
       .groupBy("lang").agg(count(lit(1)).as("old_docs"))
     val newC = docs.groupBy("lang").agg(count(lit(1)).as("new_docs"))
-    val tot = oldC.agg(sum("old_docs").as("ot"))
-      .crossJoin(newC.agg(sum("new_docs").as("nt")))
     oldC.join(newC, Seq("lang"), "full")
       .na.fill(0L, Seq("old_docs", "new_docs"))
-      .crossJoin(broadcast(tot))
+      .withColumn("ot", oldC.agg(sum("old_docs")).scalar())
+      .withColumn("nt", newC.agg(sum("new_docs")).scalar())
       .select(col("lang"), col("old_docs"), col("new_docs"),
         expr("(1000 * old_docs) div ot").as("old_share_pm"),
         expr("(1000 * new_docs) div nt").as("new_share_pm"))
@@ -890,7 +889,8 @@ object PipelineQueries {
         floor(sqrt(col("sum_chars").cast("double")) * 1e6).cast("long"))
     val tot = per.agg(sum("w_q").as("sum_w"),
       sum("sum_chars").as("tot_chars"))
-    per.crossJoin(broadcast(tot))
+    per.withColumn("sum_w", tot.select("sum_w").scalar())
+      .withColumn("tot_chars", tot.select("tot_chars").scalar())
       .select(col("source"), col("n_docs"), col("sum_chars"),
         least(lit(MaxRepeatMilli), expr(
           """CAST((CAST(2 AS DECIMAL(38,0)) * tot_chars * w_q * 1000)
@@ -1073,8 +1073,8 @@ object PipelineQueries {
     * floor(1000·N_h·S_h / Σ N_g·S_g) — the table a sampler consumes.
     * Variance comes from the one-pass (n, Σx, Σx²) triple — exact
     * BIGINT moments, one map-side aggregate to \|strata\| rows;
-    * sqrt is the floorEps'd double chain; the 1-row Σ weight re-enters
-    * as a broadcast cross (PlanLint allowlist).
+    * sqrt is the floorEps'd double chain; the Σ weight re-enters as a
+    * scalar subquery.
     *
     * Fixture check (probed): allocations span ~140-440‰ across langs
     * at both gate SFs — the en stratum genuinely earns more (bigger
@@ -1095,11 +1095,11 @@ object PipelineQueries {
           .cast("double") / (col("n_docs") * col("n_docs")).cast("double"))
           * 1000))
       .withColumn("w_milli", col("n_docs") * col("sd_milli"))
-    val totw = strata.agg(sum("w_milli").as("tw"))
-    strata.crossJoin(broadcast(totw))
+    val tw = strata.agg(sum("w_milli")).scalar()
+    strata
       .select(col("lang"), col("n_docs"), col("sd_milli"), col("w_milli"),
         graft.ops.Num.floorEps(
-          col("w_milli").cast("double") * 1000 / col("tw")).as("alloc_pm"))
+          col("w_milli").cast("double") * 1000 / tw).as("alloc_pm"))
       .orderBy("lang")
   }
 
@@ -1179,7 +1179,7 @@ object PipelineQueries {
     val langs = slim.groupBy("lang")
       .agg(count(lit(1)).as("nh"),
         graft.ops.Num.floorEps(percentile(col("n_chars"), lit(0.5))).as("p50"))
-      .crossJoin(broadcast(totals.select(col("n"))))
+      .withColumn("n", totals.select(col("n")).scalar())
       .select(explode(array(
         row("lang", col("lang"), "n_docs", col("nh")),
         row("lang", col("lang"), "share_pm", col("nh") * 1000 / col("n")),
@@ -1285,8 +1285,7 @@ object PipelineQueries {
         Seq(col("n_chars"), col("doc_id")))
       .select(col("n_chars").as("norm_chars"),
         (col("ridx1") - 1).as("ridx"))
-    val refN = d.filter(col("lang") === "en")
-      .agg(count(lit(1)).as("n_ref"))
+    val nRef = d.filter(col("lang") === "en").agg(count(lit(1))).scalar()
     val srcRanked = graft.ops.Ranks.globalRowNumber(
       d.filter(col("lang") =!= "en"), "grk",
       Seq(col("lang"), col("n_chars"), col("doc_id")))
@@ -1294,10 +1293,10 @@ object PipelineQueries {
       .agg(min("grk").as("lang_min"), count(lit(1)).as("n_h"))
     val src = srcRanked.join(broadcast(langOff), Seq("lang"))
       .withColumn("rk", col("grk") - col("lang_min"))
-    src.crossJoin(broadcast(refN))
+    src
       .withColumn("ridx", when(col("n_h") === 1, 0L)
         .otherwise(graft.ops.Num.floorEps(
-          col("rk").cast("double") * (col("n_ref") - 1) / (col("n_h") - 1))))
+          col("rk").cast("double") * (nRef - 1) / (col("n_h") - 1))))
       .join(ref, Seq("ridx"))
       .select(col("doc_id"), col("lang"), col("n_chars"), col("norm_chars"))
       .orderBy("doc_id")
@@ -1361,14 +1360,12 @@ object PipelineQueries {
       .select((col("l_orderkey") * 31 + col("l_linenumber")).as("k"))
     def row(tbl: String, total: DataFrame, totalKey: Column,
             del: DataFrame, delKey: Column): DataFrame = {
-      val t = total.agg(count(lit(1)).as("n_total"))
-      val d = del.agg(count(lit(1)).as("n_deleted"),
-        coalesce(expr(s"bit_xor(${delKey.toString})"), lit(0L))
-          .as("del_key_xor"))
-      t.crossJoin(d).select(lit(tbl).as("tbl"), col("n_total"),
-        col("n_deleted"),
-        (col("n_total") - col("n_deleted")).as("n_remaining"),
-        col("del_key_xor"))
+      val nTotal = total.agg(count(lit(1))).scalar()
+      del.agg(count(lit(1)).as("n_deleted"),
+          coalesce(expr(s"bit_xor(${delKey.toString})"), lit(0L))
+            .as("del_key_xor"))
+        .select(lit(tbl).as("tbl"), nTotal.as("n_total"), col("n_deleted"),
+          (nTotal - col("n_deleted")).as("n_remaining"), col("del_key_xor"))
     }
     row("customer", cust, col("c_custkey"), delC, col("c_custkey"))
       .unionAll(row("orders", orders, col("o_orderkey"),
@@ -1486,8 +1483,8 @@ object PipelineQueries {
     * keeps double summation order out of the hash), so normalization
     * is exact integer arithmetic.
     *
-    * Scale shape: one map-side count to \|langs\| rows, a 1-row
-    * total cross (PlanLint allowlist). */
+    * Scale shape: one map-side count to \|langs\| rows and the totals
+    * as scalar subqueries. */
   private def classWeights(spark: SparkSession, dir: String): DataFrame = {
     val effn = expr("(1.0 - exp(cast(n_docs as double) * ln(0.999))) / 0.001")
     val strata = Tables.documents(spark, dir)
@@ -1496,7 +1493,8 @@ object PipelineQueries {
       .withColumn("w_micro", graft.ops.Num.floorEps(lit(1000000.0) / effn))
     val tot = strata.agg(sum("w_micro").as("tot_w"),
       count(lit(1)).as("n_classes"))
-    strata.crossJoin(broadcast(tot))
+    strata.withColumn("tot_w", tot.select("tot_w").scalar())
+      .withColumn("n_classes", tot.select("n_classes").scalar())
       .select(col("lang"), col("n_docs"), col("eff_n_milli"), col("w_micro"),
         expr("1000 * w_micro * n_classes div tot_w").as("w_norm_pm"))
       .orderBy("lang")

@@ -466,40 +466,38 @@ object ProfilingQueries {
     * the `q_ks_test` convention) must read `shifted`, proving the
     * alarm side on a fixture whose natural langs share one generator.
     *
-    * Scale shape: one 1-row reference-decile aggregate broadcast into
-    * the cohort scan; one (cohort, bin) map-side count to ≤
-    * (\|cohorts\|·10) rows; everything after is tiny. */
+    * Scale shape: one 1-row reference-decile aggregate read as a
+    * scalar subquery by the cohort scan; one (cohort, bin) map-side
+    * count to ≤ (\|cohorts\|·10) rows; everything after is tiny. */
   private def psi(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val ref = docs.filter(col("lang") === "en")
       .select(col("n_chars").as("v"))
     val edges = ref.agg(percentile_approx(col("v"),
-      typedlit((1 to 9).map(_ / 10.0)), lit(1000000)).as("edges"))
+      typedlit((1 to 9).map(_ / 10.0)), lit(1000000)))
     val cohorts = docs.select(col("lang").as("cohort"), col("n_chars").as("v"))
       .union(ref.select(lit("en_x2").as("cohort"), (col("v") * 2).as("v")))
-    val binned = cohorts.crossJoin(broadcast(edges))
+    val binned = cohorts.withColumn("edges", edges.scalar())
       .select(col("cohort"),
         size(filter(col("edges"), e => col("v") > e)).cast("long").as("bin"))
     val counts = graft.ops.SideCache.persist(
       binned.groupBy("cohort", "bin").agg(count(lit(1)).as("c")))
     counts.count()
     val grid = counts.select(col("cohort")).distinct()
-      .crossJoin(spark.range(0, 10).select(col("id").as("bin")))
+      .select(col("cohort"), explode(sequence(lit(0L), lit(9L))).as("bin"))
     val refCounts = counts.filter(col("cohort") === "en")
       .select(col("bin"), col("c").as("rc"))
-    val refN = counts.filter(col("cohort") === "en")
-      .agg(sum("c").as("rn"))
+    val refN = counts.filter(col("cohort") === "en").agg(sum("c")).scalar()
     val cohN = counts.groupBy("cohort").agg(sum("c").as("cn"))
     val terms = grid
       .join(counts, Seq("cohort", "bin"), "left")
       .join(refCounts, Seq("bin"), "left")
       .join(cohN, Seq("cohort"))
-      .crossJoin(broadcast(refN))
       .select(col("cohort"), col("cn"),
         ((coalesce(col("c"), lit(0L)) + 1).cast("double") /
           (col("cn") + 10)).as("qs"),
         ((coalesce(col("rc"), lit(0L)) + 1).cast("double") /
-          (col("rn") + 10)).as("ps"))
+          (refN + 10)).as("ps"))
       .select(col("cohort"), col("cn"),
         Num.floorEps((col("qs") - col("ps")) * log(col("qs") / col("ps"))
           * 1000000).as("term_micro"))
@@ -614,8 +612,8 @@ object ProfilingQueries {
         Num.floorEps(percentile(col("mean_c"), lit(0.025))).as("lo_c"),
         Num.floorEps(percentile(col("mean_c"), lit(0.975))).as("hi_c"),
         (max("mean_c") - min("mean_c")).as("spread_c"))
-      .crossJoin(broadcast(full))
-      .select(col("b_reps"), col("n_rows"), col("mean_full_c"),
+      .select(col("b_reps"), full.select("n_rows").scalar().as("n_rows"),
+        full.select("mean_full_c").scalar().as("mean_full_c"),
         col("lo_c"), col("hi_c"), col("spread_c"))
   }
 
@@ -677,20 +675,18 @@ object ProfilingQueries {
       .where(col("value").isNotNull)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum(Num.cents(col("value"))).as("total_c"))
-    val stats = daily.agg(
-      Num.floorEps(sum("total_c").cast("double") / count(lit(1))).as("mu"))
+    val mu = daily.agg(
+      Num.floorEps(sum("total_c").cast("double") / count(lit(1)))).scalar()
     val run = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withDev = daily.crossJoin(broadcast(stats))
-      .withColumn("dev", col("total_c") - col("mu"))
+    val withDev = daily.withColumn("dev", col("total_c") - mu)
       .withColumn("cum", sum("dev").over(run))
       .withColumn("s_pos", col("cum") - least(lit(0L), min("cum").over(run)))
       .withColumn("s_neg",
         greatest(lit(0L), max("cum").over(run)) - col("cum"))
     val h = withDev.agg(
-      (Num.floorEps(sum(abs(col("dev"))).cast("double") / count(lit(1))) * 4)
-        .as("h"))
-    withDev.crossJoin(broadcast(h))
+      Num.floorEps(sum(abs(col("dev"))).cast("double") / count(lit(1))) * 4)
+    withDev.withColumn("h", h.scalar())
       .select(col("day"), col("total_c"), col("dev"), col("s_pos"),
         col("s_neg"), col("h"),
         when(col("s_pos") > col("h") || col("s_neg") > col("h"), 1L)
@@ -891,8 +887,7 @@ object ProfilingQueries {
     * the one-row readout an incident review starts from. Same daily
     * frame, same floorEps'd mean, exact integers throughout; the
     * argmax is a 1-row `TakeOrderedAndProject` over the \|days\|
-    * frame and re-enters the segment aggregate as a broadcast cross
-    * (PlanLint allowlist).
+    * frame and re-enters the segment aggregate as scalar subqueries.
     *
     * Scale shape: identical to `q_cusum` — one map-side day aggregate
     * to \|days\| rows; everything after runs on that tiny frame. */
@@ -901,19 +896,19 @@ object ProfilingQueries {
       .where(col("value").isNotNull)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum(Num.cents(col("value"))).as("total_c"))
-    val stats = daily.agg(
-      Num.floorEps(sum("total_c").cast("double") / count(lit(1))).as("mu"))
+    val mu = daily.agg(
+      Num.floorEps(sum("total_c").cast("double") / count(lit(1)))).scalar()
     val run = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cm = graft.ops.SideCache.persist(
-      daily.crossJoin(broadcast(stats))
-        .withColumn("cum", sum(col("total_c") - col("mu")).over(run)))
+      daily.withColumn("cum", sum(col("total_c") - mu).over(run)))
     cm.count() // materialize: split and the segment aggregate both scan
     val split = cm
       .orderBy(abs(col("cum")).desc, col("day"))
       .limit(1)
       .select(col("day").as("split_day"), abs(col("cum")).as("cusum_abs"))
-    cm.crossJoin(broadcast(split))
+    cm.withColumn("split_day", split.select("split_day").scalar())
+      .withColumn("cusum_abs", split.select("cusum_abs").scalar())
       .groupBy(col("split_day"), col("cusum_abs"))
       .agg(
         sum(when(col("day") <= col("split_day"), 1L).otherwise(0L)).as("n_pre"),

@@ -96,29 +96,30 @@ object RagPipelineQuery {
         sum(col("v") * col("v")).as("norm2")))
     val manifest = ckey.groupBy("ivf").agg(count(lit(1)).as("n_chunks"))
 
-    // ---- accounting: one 1-row aggregate per stage, unioned
+    // ---- accounting: one 1-row aggregate per stage, the other
+    // side's counts as scalar subqueries, unioned
+    val reOut = re.agg(count(lit(1)).as("n_out"), sum("n_kept").as("m2"))
     val s1 = pass.agg(
       countDistinct("doc_id").as("n_in"),
       count(lit(1)).as("m1"))
-      .crossJoin(broadcast(re.agg(count(lit(1)).as("n_out"),
-        sum("n_kept").as("m2"))))
-      .select(lit("1_passage_dedup").as("stage"), col("n_in"), col("n_out"),
-        col("m1"), col("m2"))
-    val s2 = re.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(chunks.agg(count(lit(1)).as("n_out"),
+      .select(lit("1_passage_dedup").as("stage"), col("n_in"),
+        reOut.select("n_out").scalar().as("n_out"), col("m1"),
+        reOut.select("m2").scalar().as("m2"))
+    val s2 = chunks.agg(count(lit(1)).as("n_out"),
         sum("n_tok").as("m1"),
-        sum(when(col("n_tok") === ChunkTok, 1L).otherwise(0L)).as("m2"))))
-      .select(lit("2_chunk").as("stage"), col("n_in"), col("n_out"),
+        sum(when(col("n_tok") === ChunkTok, 1L).otherwise(0L)).as("m2"))
+      .select(lit("2_chunk").as("stage"),
+        re.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
-    val s3 = chunks.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(ckey.agg(count(lit(1)).as("n_out"),
-        sum("n_entries").as("m1"), sum("norm2").as("m2"))))
-      .select(lit("3_vectorize").as("stage"), col("n_in"), col("n_out"),
+    val s3 = ckey.agg(count(lit(1)).as("n_out"),
+        sum("n_entries").as("m1"), sum("norm2").as("m2"))
+      .select(lit("3_vectorize").as("stage"),
+        chunks.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
-    val s4 = ckey.agg(count(lit(1)).as("n_in"))
-      .crossJoin(broadcast(manifest.agg(count(lit(1)).as("n_out"),
-        max("n_chunks").as("m1"), min("n_chunks").as("m2"))))
-      .select(lit("4_index").as("stage"), col("n_in"), col("n_out"),
+    val s4 = manifest.agg(count(lit(1)).as("n_out"),
+        max("n_chunks").as("m1"), min("n_chunks").as("m2"))
+      .select(lit("4_index").as("stage"),
+        ckey.agg(count(lit(1))).scalar().as("n_in"), col("n_out"),
         col("m1"), col("m2"))
 
     s1.union(s2).union(s3).union(s4).orderBy("stage")

@@ -563,13 +563,13 @@ object SimilarityQueries {
       .filter(col("rk") === 1)
       .select(col("dim").cast("long").as("top_dim"),
         expr("CAST((1000 * vr) div tot_vr AS BIGINT)").as("top_share_pm"))
-    agg.crossJoin(broadcast(top))
-      .select(lit(n).as("n_vecs"),
+    agg.select(lit(n).as("n_vecs"),
         expr(s"""CAST((1000000 * (s2 - t)) div
                  |(CAST($n AS DECIMAL(38,0)) * ${n - 1} * $Q * $Q)
                  |AS BIGINT)""".stripMargin.replace("\n", " "))
           .as("aniso_ppm"),
-        col("top_dim"), col("top_share_pm"))
+        top.select("top_dim").scalar().as("top_dim"),
+        top.select("top_share_pm").scalar().as("top_share_pm"))
   }
 
   private val embedAnisotropySql = {
@@ -779,12 +779,11 @@ object SimilarityQueries {
           count(col("__hit")).as("n_dropped"),
           coalesce(expr("bit_xor(CASE WHEN __hit IS NOT NULL THEN vec_id END)"),
             lit(0L)).as("del_xor"))
-        .crossJoin(after.agg(count(lit(1)).as("n_after")))
         .select(lit("audit").as("part"), lit(seg).as("seg"),
           nullL.as("qid"), nullL.as("vec_id"),
           lit(null).cast("int").as("rank"), nullL.as("cos_x10k"),
-          col("n_before"), col("n_dropped"), col("n_after"),
-          col("del_xor"))
+          col("n_before"), col("n_dropped"),
+          after.agg(count(lit(1))).scalar().as("n_after"), col("del_xor"))
     }
     serveRows("serve_compact", compacted)
       .unionAll(serveRows("serve_masked", masked))
@@ -839,6 +838,19 @@ object SimilarityQueries {
        |ORDER BY part, seg, qid, "rank"""".stripMargin
   }
 
+  /** One row of a recall harness: `label`, the truth's size `n_exact`,
+    * the served (qid, vec_id) pairs found in the truth as `hits`, and
+    * recall_bp = hits·10⁴ div n_exact. */
+  private def recallRow(label: org.apache.spark.sql.Column,
+                        served: DataFrame, truth: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    served.select("qid", "vec_id").join(truth, Seq("qid", "vec_id"))
+      .agg(count(lit(1)).as("hits"))
+      .select(label, truth.agg(count(lit(1))).scalar().as("n_exact"),
+        col("hits"))
+      .withColumn("recall_bp", expr("(hits * 10000) div n_exact"))
+  }
+
   /** IVF TUNING CURVE — recall@10 vs nProbe, the operating-point
     * sweep an IVF deployment is tuned from (`q_lsh_curve`'s role for
     * the LSH tier, `q_pr_curve`'s for classification): each probed
@@ -860,12 +872,8 @@ object SimilarityQueries {
       Similarity.ensureBruteBaseline(spark, emb, dir)
         .select("qid", "vec_id"))
     Seq(1, 2, 4).map { p =>
-      Similarity.ivfTopK(emb, queryMod = 50L, k = 10, nProbe = p)
-        .select("qid", "vec_id")
-        .join(brute, Seq("qid", "vec_id")).agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(p.toLong).as("nprobe"), col("n_exact"), col("hits"),
-          expr("(hits * 10000) div n_exact").as("recall_bp"))
+      recallRow(lit(p.toLong).as("nprobe"),
+        Similarity.ivfTopK(emb, queryMod = 50L, k = 10, nProbe = p), brute)
     }.reduce(_ unionByName _).orderBy("nprobe")
   }
 
@@ -1246,18 +1254,13 @@ object SimilarityQueries {
         .select("qid", "vec_id"))
     val tiers = Seq(
       "hnsw" -> hnswTop10(spark, dir),
-      "ivf" -> Similarity.ivfTopK(emb, queryMod = 50L, k = 10)
-        .select("qid", "vec_id"),
+      "ivf" -> Similarity.ivfTopK(emb, queryMod = 50L, k = 10),
       "ivf_pq" -> Similarity.ivfPqTopK(emb, queryMod = 50L, k = 10,
-        centroidMod = 61, nProbe = 2, cbMod = 29, cbK = 16, m = 8)
-        .select("qid", "vec_id"),
+        centroidMod = 61, nProbe = 2, cbMod = 29, cbK = 16, m = 8),
       "pq" -> Similarity.pqTopK(emb, queryMod = 50L, k = 10,
-        cbMod = 29, cbK = 16, m = 8).select("qid", "vec_id"))
+        cbMod = 29, cbK = 16, m = 8))
     tiers.map { case (name, df) =>
-      df.join(brute, Seq("qid", "vec_id")).agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(name).as("variant"), col("n_exact"), col("hits"),
-          expr("(hits * 10000) div n_exact").as("recall_bp"))
+      recallRow(lit(name).as("variant"), df, brute)
     }.reduce(_ unionByName _).orderBy("variant")
   }
 
@@ -1322,13 +1325,8 @@ object SimilarityQueries {
     dims.map { d =>
       val sliced = emb.select(col("vec_id"),
         slice(col("embedding"), 1, d).as("embedding"))
-      Similarity.bruteTopK(sliced, queryMod = 50L, k = 10)
-        .select("qid", "vec_id")
-        .join(truth, Seq("qid", "vec_id"))
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(d).as("dim"), col("n_exact"), col("hits"),
-          expr("(hits * 10000) div n_exact").as("recall_bp"))
+      recallRow(lit(d).as("dim"),
+        Similarity.bruteTopK(sliced, queryMod = 50L, k = 10), truth)
     }.reduce(_ unionAll _).orderBy("dim")
   }
 
@@ -1401,27 +1399,20 @@ object SimilarityQueries {
     val del = emb.filter(col("vec_id") % 13 === 0).select("vec_id")
     val liveSegs = Similarity.ivfPqCompactDelete(spark, path, del,
       Seq("codes_all"))
-    def recallRow(variant: String, served: DataFrame,
-                  truth: DataFrame): DataFrame = {
-      val brute = graft.ops.SideCache.persist(truth.select("qid", "vec_id"))
-      served.select("qid", "vec_id")
-        .join(brute, Seq("qid", "vec_id")).agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(variant).as("variant"), col("n_exact"), col("hits"),
-          expr("(hits * 10000) div n_exact").as("recall_bp"))
-    }
+    def brute(truth: DataFrame): DataFrame =
+      graft.ops.SideCache.persist(truth.select("qid", "vec_id"))
     // one metadata load for both serves (within-run reuse)
     val ctx = Some(Similarity.loadServeCtx(spark, path))
-    val fresh = recallRow("fresh_upsert",
+    val fresh = recallRow(lit("fresh_upsert").as("variant"),
       Similarity.ivfPqServeStored(emb, path, queryMod = 50L,
         kCand = 100, k = 10, segments = Seq("codes", "codes_delta"),
         ctx = ctx),
-      Similarity.ensureBruteBaseline(spark, emb, dir))
-    val lifecycle = recallRow("lifecycle_final",
+      brute(Similarity.ensureBruteBaseline(spark, emb, dir)))
+    val lifecycle = recallRow(lit("lifecycle_final").as("variant"),
       Similarity.ivfPqServeStored(emb, path, queryMod = 50L,
         kCand = 100, k = 10, segments = liveSegs, ctx = ctx),
-      Similarity.bruteTopK(emb, queryMod = 50L, k = 10,
-        corpusFilter = Some(col("vec_id") % 13 =!= 0)))
+      brute(Similarity.bruteTopK(emb, queryMod = 50L, k = 10,
+        corpusFilter = Some(col("vec_id") % 13 =!= 0))))
     fresh.unionAll(lifecycle).orderBy("variant")
   }
 
@@ -1525,15 +1516,10 @@ object SimilarityQueries {
       .select("qid", "vec_id")
     val cosTruth = Similarity.ensureBruteBaseline(spark, emb, dir)
       .select("qid", "vec_id")
-    def recallRow(name: String, truth: DataFrame): DataFrame = {
-      val t = graft.ops.SideCache.persist(truth)
-      sqTop.join(t, Seq("qid", "vec_id")).agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(t.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(name).as("variant"), col("n_exact"), col("hits"),
-          expr("(hits * 10000) div n_exact").as("recall_bp"))
-    }
-    recallRow("sq8_vs_cos", cosTruth)
-      .unionAll(recallRow("sq8_vs_dot", dotTruth))
+    def row(name: String, truth: DataFrame): DataFrame =
+      recallRow(lit(name).as("variant"), sqTop,
+        graft.ops.SideCache.persist(truth))
+    row("sq8_vs_cos", cosTruth).unionAll(row("sq8_vs_dot", dotTruth))
       .orderBy("variant")
   }
 
@@ -1645,30 +1631,31 @@ object SimilarityQueries {
     val adjs = (0 to Hnsw.MaxLevel).map(l =>
       graft.ops.SideCache.persist(spark.read.parquet(s"$gRoot/e$l")))
     val (vis, fin, top10) = Hnsw.search(base, adjs)
-    // ONE lazy plan — every row is a cross of 1-row aggregates (the
-    // flagship accounting convention), so the whole query runs as a
-    // single action instead of ~15 driver-synchronized jobs
+    // ONE lazy plan — every row is a 1-row aggregate with the other
+    // counts as scalar subqueries (the flagship accounting
+    // convention), so the whole query runs as a single action instead
+    // of ~15 driver-synchronized jobs
     val graphRows = (0 to Hnsw.MaxLevel).map { l =>
-      base.filter(col("lvl") >= l).agg(count(lit(1)).as("a"))
-        .crossJoin(broadcast(adjs(l).agg(count(lit(1)).as("b"),
-          coalesce(sum("ic"), lit(0L)).as("c"))))
-        .select(lit(s"graph_l$l").as("stat"), col("a"), col("b"), col("c"))
+      adjs(l).agg(count(lit(1)).as("b"), coalesce(sum("ic"), lit(0L)).as("c"))
+        .select(lit(s"graph_l$l").as("stat"),
+          base.filter(col("lvl") >= l).agg(count(lit(1))).scalar().as("a"),
+          col("b"), col("c"))
     }
     val searchRow = base.filter(col("vec_id") % 50 === 0)
       .agg(count(lit(1)).as("a"))
-      .crossJoin(broadcast(vis.agg(count(lit(1)).as("b"))))
-      .crossJoin(broadcast(fin.agg(sum("cic").as("c"))))
-      .select(lit("search").as("stat"), col("a"), col("b"), col("c"))
+      .select(lit("search").as("stat"), col("a"),
+        vis.agg(count(lit(1))).scalar().as("b"),
+        fin.agg(sum("cic")).scalar().as("c"))
     val brute = graft.ops.SideCache.persist(
       Similarity.ensureBruteBaseline(spark, emb, dir)
         .select("qid", "vec_id"))
-    val recallRow = brute.agg(count(lit(1)).as("a"))
-      .crossJoin(broadcast(top10.join(brute,
-          top10("qid") === brute("qid") && top10("dst") === brute("vec_id"))
-        .agg(count(lit(1)).as("b"))))
+    val recall = top10.join(brute,
+        top10("qid") === brute("qid") && top10("dst") === brute("vec_id"))
+      .agg(count(lit(1)).as("b"))
+      .withColumn("a", brute.agg(count(lit(1))).scalar())
       .select(lit("zz_recall").as("stat"), col("a"), col("b"),
         expr("(b * 10000) div a").as("c"))
-    (graphRows :+ searchRow :+ recallRow)
+    (graphRows :+ searchRow :+ recall)
       .reduce(_ unionAll _).orderBy("stat")
   }
 
@@ -1841,7 +1828,8 @@ object SimilarityQueries {
     * top-ef cut — the `q_nprobe_curve` pattern on the graph index.
     *
     * Scale shape: see [[graft.sim.Hnsw.beamSearch]] — the corpus
-    * never shuffles; the readout is 1-row accounting crosses. */
+    * never shuffles; the readout is |efs|-row accounting joins and
+    * the brute count as a scalar subquery. */
   private def annEfCurve(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.sim.Hnsw
@@ -1863,7 +1851,6 @@ object SimilarityQueries {
     // GROUPED accounting — three |efs|-row aggregates instead of
     // 3×|efs| filtered 1-row jobs (the readout halved the query cost
     // before this; measured in round 17)
-    val nBrute = broadcast(brute.agg(count(lit(1)).as("n_brute")))
     val stats = vis.groupBy("ef").agg(count(lit(1)).as("n_visited"))
     val beams = fin.groupBy("ef")
       .agg(coalesce(sum("cic"), lit(0L)).as("beam_ic"))
@@ -1872,7 +1859,7 @@ object SimilarityQueries {
       .groupBy(topk("ef")).agg(count(lit(1)).as("hits"))
     stats.join(broadcast(beams), Seq("ef"))
       .join(broadcast(hits), Seq("ef"), "left")
-      .crossJoin(nBrute)
+      .withColumn("n_brute", brute.agg(count(lit(1))).scalar())
       .select(format_string("ef%02d", col("ef")).as("stat"),
         col("n_visited"), col("beam_ic"),
         coalesce(col("hits"), lit(0L)).as("hits"),
@@ -2602,15 +2589,15 @@ object SimilarityQueries {
     * both, and MipsSpec proves rank-equivalence of the two orderings
     * plus the constant-augmented-norm identity.
     *
-    * Scale shape: identical to `q_ann_topk` — queries and the 1-row
-    * max-norm broadcast against one corpus scan, per-partition
-    * top-k heaps, zero corpus shuffle. */
+    * Scale shape: identical to `q_ann_topk` — queries broadcast
+    * against one corpus scan (the max norm is a scalar subquery),
+    * per-partition top-k heaps, zero corpus shuffle. */
   private def annMips(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, dir)
     val base = emb.select(col("vec_id"), col("embedding"),
       Similarity.l2norm(col("embedding")).as("nrm"))
-    val mrow = base.agg(max(col("nrm")).as("mmax"))
+    val mmax = base.agg(max(col("nrm"))).scalar()
     val qs = base.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         col("nrm").as("qnorm"))
@@ -2621,10 +2608,9 @@ object SimilarityQueries {
       .withColumn("ip", Similarity.dot(col("embedding"), col("qvec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
-      .crossJoin(broadcast(mrow))
       .select(col("qid"), col("vec_id"), col("rank").cast("int").as("rank"),
         floor(col("ip") * 10000 + lit(0.5)).cast("long").as("ip_x10k"),
-        floor(col("ip") / (col("mmax") * col("qnorm")) * 10000 + lit(0.5))
+        floor(col("ip") / (mmax * col("qnorm")) * 10000 + lit(0.5))
           .cast("long").as("aug_cos_x10k"))
       .orderBy("qid", "rank")
   }

@@ -348,24 +348,23 @@ object TemporalQueries {
     *
     * Scale shape: both sides reduce to one row per key BEFORE the
     * merge (window rank over (ts, event_id) — unique, deterministic),
-    * so the merge itself is key-proportional; the cutoff is a 1-row
-    * scalar aggregate broadcast against the scan (the scalar-subquery
-    * pattern). This is the batch twin of what `foreachBatch` upserts
-    * do incrementally in StreamingSpec. */
+    * so the merge itself is key-proportional; the cutoff is a scalar
+    * subquery over a 1-row aggregate. This is the batch twin of what
+    * `foreachBatch` upserts do incrementally in StreamingSpec. */
   private def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
         Num.cents(col("value")).as("vc"))
-    val cut = ev.agg((max(col("ts")) - expr("INTERVAL 7 DAYS")).as("t0"))
+    val t0 = ev.agg(max(col("ts")) - expr("INTERVAL 7 DAYS")).scalar()
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").desc, col("event_id").desc)
     // snapshot: latest pre-cutoff row per key, op forced to upsert
-    val snap = ev.crossJoin(broadcast(cut)).filter(col("ts") < col("t0"))
+    val snap = ev.filter(col("ts") < t0)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("ts"), col("vc"),
         lit("U").as("op"))
     // change stream: every post-cutoff row, purchases = tombstones
-    val chg = ev.crossJoin(broadcast(cut)).filter(col("ts") >= col("t0"))
+    val chg = ev.filter(col("ts") >= t0)
       .select(col("user_id"), col("event_id"), col("ts"), col("vc"),
         when(col("event_type") === "purchase", lit("D")).otherwise(lit("U")).as("op"))
     snap.unionByName(chg)

@@ -79,7 +79,7 @@ object TextQueries {
     *
     * Scale shape: one scan to (quality, n_tok), a map-side-collapsing
     * histogram to ≤101 rows, a cumulative window over that bounded
-    * grid, and a 1-row totals cross. */
+    * grid, and the totals as scalar subqueries. */
   private def qualityFilterSweep(spark: SparkSession, dir: String): DataFrame = {
     val t = TF.tokens(col("text"))
     val stops = TF.Lexicons.toMap.apply("en")
@@ -99,7 +99,8 @@ object TextQueries {
     hist
       .withColumn("n_docs_ge", sum("nd").over(wCum))
       .withColumn("n_tok_ge", sum("nt").over(wCum))
-      .crossJoin(broadcast(tot))
+      .withColumn("td", tot.select("td").scalar())
+      .withColumn("tt", tot.select("tt").scalar())
       .select(col("quality").as("thr"), col("n_docs_ge"), col("n_tok_ge"),
         expr("(1000 * n_docs_ge) div td").as("doc_share_pm"),
         expr("(1000 * n_tok_ge) div tt").as("tok_share_pm"))
@@ -399,8 +400,8 @@ object TextQueries {
     * global sort), and the per-N sums run over that ≤32-row frame.
     *
     * Scale shape: one explode + map-side (word) combine to \|vocab\|
-    * rows; top-32 via per-partition heaps; the coverage fold is a
-    * ≤32-row broadcast cross with the 1-row total. */
+    * rows; top-32 via per-partition heaps; the coverage fold runs over
+    * the ≤32-row frame with the totals as scalar subqueries. */
   private def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val freq = graft.ops.SideCache.persist(
       Tables.documentsFan(spark, dir)
@@ -417,7 +418,8 @@ object TextQueries {
       top.filter(col("rnk") <= n)
         .agg(coalesce(sum("cnt"), lit(0L)).as("covered"),
           count(lit(1)).as("n_kept"))
-        .crossJoin(broadcast(total))
+        .withColumn("n_vocab", total.select("n_vocab").scalar())
+        .withColumn("total", total.select("total").scalar())
         .select(lit(n.toLong).as("top_n"), col("n_kept"), col("n_vocab"),
           col("covered"), col("total"),
           expr("1000 * covered div total").as("coverage_pm"))
@@ -1206,10 +1208,10 @@ object TextQueries {
     val tf = graft.ops.SideCache.persist(
       terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_docs"))
-    val scored = tf.join(df, Seq("term")).crossJoin(broadcast(n))
+    val n = docs.agg(count(lit(1))).scalar()
+    val scored = tf.join(df, Seq("term"))
       .withColumn("score_x1000",
-        floor(col("tf") * log(col("n_docs").cast("double") / col("df")) * 1000
+        floor(col("tf") * log(n.cast("double") / col("df")) * 1000
           + lit(1e-6)).cast("long"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("score_x1000").desc, col("term"))
@@ -1521,7 +1523,7 @@ object TextQueries {
         ((col("cluster_size") - 1) * col("n_clusters")).as("n_removed"))
     val singletons = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("total"))
-      .crossJoin(broadcast(labels.agg(count(lit(1)).as("paired"))))
+      .withColumn("paired", labels.agg(count(lit(1))).scalar())
       .select(lit(1L).as("cluster_size"),
         (col("total") - col("paired")).as("n_clusters"),
         (col("total") - col("paired")).as("n_docs"),
@@ -1651,8 +1653,8 @@ object TextQueries {
     * pairs within a doc repeat). The model itself (c2/c1/lp) lives
     * in distinct-bigram space, orders of magnitude smaller, and the
     * per-doc scoring join keys the doc-level multiplicity table by
-    * (l, r) against that model — never doc × vocab. V is a 1-row
-    * broadcast cross (allowlisted scalar-subquery pattern). */
+    * (l, r) against that model — never doc × vocab. V is a scalar
+    * subquery. */
   private def perplexity(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bg = docs.select(col("doc_id"), explode(bigramPairUdf(col("text"))).as("b"))
@@ -1661,11 +1663,11 @@ object TextQueries {
     val c2 = m.groupBy("l", "r").agg(sum("m").as("c2"))
     val c1 = c2.groupBy("l").agg(sum("c2").as("c1"))
     val v = docs.select(explode(TF.tokens(col("text"))).as("w"))
-      .agg(countDistinct("w").as("vocab"))
-    val lp = c2.join(c1, "l").crossJoin(broadcast(v))
+      .agg(countDistinct("w")).scalar()
+    val lp = c2.join(c1, "l")
       .select(col("l"), col("r"), Num.floorEps(
         log((col("c2") + lit(1)).cast("double") /
-          (col("c1") + col("vocab")).cast("double")) * 1e6)
+          (col("c1") + v).cast("double")) * 1e6)
         .cast("long").as("lp_q"))
     val agg = m.join(lp, Seq("l", "r"))
       .groupBy("doc_id")
@@ -2641,17 +2643,16 @@ object TextQueries {
     * params = per-lang (prior_q, lpu_q); lp = per-(lang, token)
     * quantized log-likelihoods. Both are model-sized tables. */
   private[graft] def nbModel(train: DataFrame): (DataFrame, DataFrame) = {
-    val vocab = train.agg(countDistinct("h").as("vsz"))
+    val vsz = train.agg(countDistinct("h")).scalar()
     val tot = train.groupBy("lang").agg(count(lit(1)).as("tot_l"))
     val prior = train.groupBy("lang").agg(countDistinct("doc_id").as("nd"))
-    val ptot = prior.agg(sum("nd").as("ndall"))
+    val ndall = prior.agg(sum("nd")).scalar()
     def q6(x: org.apache.spark.sql.Column) =
       floor(lit(1e6) * log(x) + lit(1e-6)).cast("long")
     val params = tot.join(prior, Seq("lang"))
-      .crossJoin(broadcast(vocab)).crossJoin(broadcast(ptot))
-      .select(col("lang"), col("tot_l"), col("vsz"),
-        q6(col("nd").cast("double") / col("ndall").cast("double")).as("prior_q"),
-        q6(lit(1.0) / (col("tot_l") + col("vsz")).cast("double")).as("lpu_q"))
+      .select(col("lang"), col("tot_l"), vsz.as("vsz"),
+        q6(col("nd").cast("double") / ndall.cast("double")).as("prior_q"),
+        q6(lit(1.0) / (col("tot_l") + vsz).cast("double")).as("lpu_q"))
     val lp = train.groupBy("lang", "h").agg(count(lit(1)).as("c"))
       .join(broadcast(params), Seq("lang"))
       .select(col("lang"), col("h"),

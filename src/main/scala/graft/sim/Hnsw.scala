@@ -168,8 +168,7 @@ object Hnsw {
                   emb: DataFrame, dir: String): String =
     graft.ops.FixtureStore.ensure("hnsw", dir,
       parts = (0 to MaxLevel).map(l => s"e$l") :+ "t10",
-      rows = root => spark.read.schema(emb.select(col("vec_id").as("src")).schema)
-        .parquet(s"$root/e0").count()) { root =>
+      rows = Some("e0")) { root =>
       val base = graft.ops.SideCache.persist(withLevels(emb))
       val dstSide = base.select(col("vec_id").as("dst"),
         col("embedding").as("demb"), col("nrm").as("dnrm"))
@@ -400,11 +399,11 @@ object Hnsw {
     val eRow = base.filter(col("vec_id") === entry)
       .select(col("embedding").as("eemb"), col("nrm").as("enrm"))
     val efDf = efs.toDF("ef")
-    var state = qs.crossJoin(broadcast(eRow))
+    var state = qs
       .select(col("qid"), col("qvec"), col("qnorm"),
         lit(entry).as("cur"),
-        icosCol(col("eemb"), col("enrm"), col("qvec"), col("qnorm"))
-          .as("cic"))
+        icosCol(eRow.select("eemb").scalar(), eRow.select("enrm").scalar(),
+          col("qvec"), col("qnorm")).as("cic"))
       .crossJoin(broadcast(efDf))
       .select("ef", "qid", "qvec", "qnorm", "cur", "cic")
       .localCheckpoint(true)

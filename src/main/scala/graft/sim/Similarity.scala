@@ -771,8 +771,7 @@ object Similarity {
       if (split9) "annix_split9" else "annix_full", dir,
       parts = Seq("codes", "cents", "seeds", "meta") ++
         (if (split9) Seq("codes_delta") else Nil),
-      rows = root => spark.read.schema(emb.select("vec_id").schema)
-        .parquet(s"$root/codes").count()) { root =>
+      rows = Some("codes")) { root =>
       if (split9) {
         ivfPqIndexWrite(emb.filter(col("vec_id") % 9 =!= 0), root)
         ivfPqUpsertDelta(emb.filter(col("vec_id") % 9 === 0), root)
@@ -797,7 +796,7 @@ object Similarity {
     val topk = bruteTopK(emb, queryMod = 50L, k = 10)
     val root = graft.ops.FixtureStore.ensure("brute10", dir,
       parts = Seq("topk"),
-      rows = root => spark.read.schema(topk.schema).parquet(s"$root/topk").count()) { root =>
+      rows = Some("topk")) { root =>
       topk.coalesce(1).write.mode("overwrite").parquet(s"$root/topk")
     }
     spark.read.schema(topk.schema).parquet(s"$root/topk")

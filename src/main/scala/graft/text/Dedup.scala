@@ -505,8 +505,7 @@ object Dedup {
   def ensurePairGraph(spark: org.apache.spark.sql.SparkSession,
                       dir: String): String =
     graft.ops.FixtureStore.ensure("pairs", dir, parts = Seq("pairs", "labels"),
-      rows = root => spark.read.schema(graft.tables.Tables.documents(spark, dir)
-        .select(col("doc_id").as("id_a")).schema).parquet(s"$root/pairs").count()) { root =>
+      rows = Some("pairs")) { root =>
       val prs = graft.ops.SideCache.persist(
         simhashPairs(graft.tables.Tables.documents(spark, dir),
           maxHamming = 3).select("id_a", "id_b"))

@@ -3,30 +3,33 @@ package graft.ops
 import graft.SparkSpec
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.JobCount
 import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.storage.StorageLevel
 
-/** The generic FixtureStore contract, on a toy fixture: one part with a
-  * `_SUCCESS` and a recorded row count. */
+/** The generic FixtureStore contract, on a toy fixture: one parquet
+  * part whose footer row count is recorded. */
 class FixtureStoreSpec extends SparkSpec {
 
   private val name = "fxstore_spec"
 
   /** A fresh dataset key per test, so roots never collide; the toy
     * build counts its runs. */
-  private final class Toy(var rows: Long = 7L, var ok: Boolean = true) {
+  private final class Toy(var ok: Boolean = true) {
     val dir = s"/fxstore/${java.util.UUID.randomUUID()}"
     var builds = 0
     def ensure(fingerprint: String = "fp1", also: String => Unit = _ => ()): String =
       FixtureStore.ensureKeyed(fingerprint, name, dir, Seq("part"),
-        _ => ok, _ => rows) { root =>
+        _ => ok, Some("part")) { root =>
         builds += 1
         also(root)
-        val part = new File(root, "part")
-        part.mkdirs()
-        Files.writeString(new File(part, "_SUCCESS").toPath, "")
+        spark.range(7).coalesce(1).write.parquet(s"$root/part")
       }
   }
+
+  /** One more row in the toy's part: its footer count reads 8. */
+  private def addRow(root: String): Unit =
+    spark.range(1).write.mode("append").parquet(s"$root/part")
 
   private def withToy(body: Toy => Unit): Unit = {
     val toy = new Toy
@@ -72,12 +75,25 @@ class FixtureStoreSpec extends SparkSpec {
     val breaks = Seq[(Toy, String) => Unit](
       (_, root) => new File(root, "part/_SUCCESS").delete(),
       (toy, _) => toy.ok = false,
-      (toy, _) => toy.rows = 8L)
+      (_, root) => addRow(root))
     for (break <- breaks) withToy { toy =>
       val root = toy.ensure()
       break(toy, root)
       toy.ensure()
       assert(toy.builds === 2)
+    }
+  }
+
+  test("a hit counts rows from the parquet footers: no Spark job") {
+    withToy { toy =>
+      val root = toy.ensure()
+      assert(Files.readString(marker(root).toPath).endsWith("\n7\n"))
+      val (_, jobs) = JobCount.of(spark.sparkContext)(toy.ensure())
+      assert(jobs === 0)
+      assert(toy.builds === 1)
+      addRow(root)
+      toy.ensure()
+      assert(toy.builds === 2, "a changed footer count must rebuild")
     }
   }
 
